@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -32,11 +33,19 @@ def sf_medium():
     return SF_MEDIUM
 
 
+_SESSION_T0 = pytest.StashKey[float]()
+
+
+def pytest_sessionstart(session):
+    session.config.stash[_SESSION_T0] = time.perf_counter()
+
+
 def pytest_terminal_summary(terminalreporter, exitstatus, config):
     """Unconditional run ledger: every pytest invocation appends its outcome
     to TESTRUNS.jsonl from INSIDE the tool (r8 advice #3 — a wrapper-level
     append can be bypassed; r9 shipped a 243-line refactor with no recorded
-    run). Never fails the run it records."""
+    run). ``wall_s`` tracks the tier-1 headroom under its timeout. Never
+    fails the run it records."""
     try:
         from wafer_defect_data_pipeline_spark.ledger import record_run
 
@@ -51,6 +60,7 @@ def pytest_terminal_summary(terminalreporter, exitstatus, config):
             "pytest",
             tail or "no tests collected",
             exit=int(exitstatus),
+            wall_s=round(time.perf_counter() - config.stash[_SESSION_T0], 1),
             args=" ".join(map(str, config.invocation_params.args))[:200],
         )
     except Exception:

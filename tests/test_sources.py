@@ -136,8 +136,62 @@ def test_cli_main_end_to_end(spark, wafer_csv, tmp_path, capsys):
     assert "is_killer_defect" in out.columns and "KMeans_Cluster" in out.columns
     printed = capsys.readouterr().out
     assert "[load] rows=200" in printed and "loss=" in printed and "[sink]" in printed
+    # the summary lines derived driver-side from the one grouped count
+    assert "[clusters] distribution" in printed and "  cluster=" in printed
+    assert "[killer] flagged=" in printed
+    assert "[crosstab] Class x IS_DEFECT:" in printed and "|Class|FALSE|REAL|" in printed
     csvs = list((tmp_path / "out" / "processed_data.csv").glob("*.csv"))
     assert len(csvs) == 1
+
+
+def test_cli_table_renders_like_show(spark, capsys):
+    """The CLI prints its crosstab without a Spark job; the text must be
+    what ``DataFrame.show(truncate=False)`` prints for the same rows."""
+    from wafer_defect_data_pipeline_spark.cli import _print_table
+
+    for rows in ([[1, 626, 467], [None, 5, 0], [12, 3, 123456789]], [[i, i, 0] for i in range(25)]):
+        spark.createDataFrame(rows, "Class int, FALSE long, REAL long").show(truncate=False)
+        want = capsys.readouterr().out
+        _print_table(["Class", "FALSE", "REAL"], rows)
+        assert capsys.readouterr().out == want
+
+
+def test_cli_main_matches_replica(spark, wafer_csv, tmp_path, capsys):
+    """The CLI's single CSV against the pandas replica of the reference:
+    same kept DEFECT_IDs, derived features within 1e-9, and — since steps
+    under the auto-mode size gate cluster with the replica's own k-means
+    kernel in file-row order — identical labels on every analysed step.
+
+    The replica reads the CSV with correctly rounded float parsing, as the
+    JVM does: pandas' default parser can be 1 ulp off, and on a tiny step
+    that flips which of two mirror-image restarts has the lower inertia,
+    swapping the arbitrary cluster ids."""
+    import numpy as np
+    import pandas as pd
+
+    from tests.pandas_replica import replica_full
+    from wafer_defect_data_pipeline_spark.cli import main
+    from wafer_defect_data_pipeline_spark.schema import DERIVED_FEATURES
+
+    main(wafer_csv, output_dir=str(tmp_path / "out"))
+    printed = capsys.readouterr().out
+    [part] = (tmp_path / "out" / "processed_data.csv").glob("*.csv")
+    got = pd.read_csv(part).set_index("DEFECT_ID").sort_index()
+    want = replica_full(pd.read_csv(wafer_csv, float_precision="round_trip")).set_index("DEFECT_ID").sort_index()
+    assert list(got.index) == list(want.index)
+    for c in DERIVED_FEATURES:
+        assert np.allclose(got[c], want[c].astype(float), rtol=1e-9, atol=0, equal_nan=True), c
+    g, w = got["KMeans_Cluster"], want["KMeans_Cluster"].astype("float64")
+    assert g.isna().equals(w.isna())
+    labeled = w.notna()
+    assert labeled.any()
+    for step, grp in got.loc[labeled].groupby("Step_desc"):
+        assert (grp["KMeans_Cluster"] == w[grp.index]).all(), step
+    killer = got["is_killer_defect"].astype(str).str.lower() == "true"
+    assert (killer == want["is_killer_defect"].astype(bool)).all()
+    # the summary derived from the one grouped count matches the output
+    assert f"[outliers] rows={len(want)} " in printed
+    assert f"[killer] flagged={int(killer.sum())} " in printed
 
 
 def test_json_roundtrip(spark, wafer_csv, tmp_path):

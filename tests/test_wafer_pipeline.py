@@ -190,3 +190,51 @@ def test_row_id_fallback_pins_non_file_source(spark):
     df = spark.createDataFrame([(i,) for i in range(100)], "a int")
     t = with_row_id(df)
     assert t.select(ROW_ID).distinct().count() == 100
+
+
+def test_row_id_fallback_pins_csv_scan(spark, wafer_pdf, tmp_path):
+    """A CSV scan has _metadata but no row_index: the fallback is chosen
+    from the schema (no failed analysis, so no ERROR log per call), ids
+    are unique and the plan carries the pin."""
+    from wafer_defect_data_pipeline_spark.operators.clustering import ROW_ID, with_row_id
+    from wafer_defect_data_pipeline_spark.sources.csv import load_data
+
+    path = tmp_path / "wafer.csv"
+    wafer_pdf.head(300).to_csv(path, index=False)
+    t = with_row_id(load_data(spark, str(path)))
+    plan = t._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan and "csv" not in plan.lower()
+    assert t.select(ROW_ID).distinct().count() == 300
+
+
+def _checkpoint_leaves(df) -> list[str]:
+    # a localCheckpoint pin is a LogicalRDD leaf holding the data columns
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if "LogicalRDD" in ln and "SIZE_X" in ln]
+
+
+def test_preprocess_cascade_pin_gate(spark, wafer_pdf, tmp_path, monkeypatch):
+    """Mirror of the registered query's gate: on a parquet input (pin-free
+    row id) preprocess pins the pre-clustering frame under the default
+    WDPS_WAFER_PIN_MAX_BYTES, and the plan is a pure scan lineage at 0."""
+    path = str(tmp_path / "wafer.parquet")
+    spark.createDataFrame(wafer_pdf).write.parquet(path)
+    src = spark.read.parquet(path)
+    assert _checkpoint_leaves(WaferPipeline().preprocess(src))
+    monkeypatch.setenv("WDPS_WAFER_PIN_MAX_BYTES", "0")
+    assert not _checkpoint_leaves(WaferPipeline().preprocess(src))
+
+
+def test_cascade_pin_gate_policy(spark, wafer_df, sf_small, monkeypatch):
+    """cascade_pin_allowed's documented policy: scan bytes against the knob
+    (read per call); a frame with no input files counts as 0 bytes, so it
+    is pinned under any positive gate and not at 0."""
+    from wafer_defect_data_pipeline_spark.plans.pipeline import cascade_pin_allowed
+
+    li = spark.read.parquet(f"{sf_small}/lineitem.parquet")
+    assert wafer_df.inputFiles() == []
+    assert cascade_pin_allowed(wafer_df) and cascade_pin_allowed(li)
+    monkeypatch.setenv("WDPS_WAFER_PIN_MAX_BYTES", "1")
+    assert cascade_pin_allowed(wafer_df) and not cascade_pin_allowed(li)
+    monkeypatch.setenv("WDPS_WAFER_PIN_MAX_BYTES", "0")
+    assert not cascade_pin_allowed(wafer_df)

@@ -6,9 +6,15 @@ Functional parity with ``/root/reference/main.py:14-132``: load a wafer CSV
 processed table. Flags mirror the reference's ``main(data_path, output_dir,
 save_processed, show_summary)`` signature.
 
-Summary metrics are Spark actions over the lazy pipeline; the post-stage
-frame is cached once so the metric actions and the sink don't recompute the
-lineage (SURVEY.md §3).
+Job shape (~22 Spark jobs per execution at 5k rows): the load check, ONE
+aggregate over the raw scan for the row and null counts, the k-means
+per-step stats probe inside ``preprocess`` — which also fills the lazy pin
+of the pre-clustering frame, so the outlier cascade runs once (behind the
+``WDPS_WAFER_PIN_MAX_BYTES`` scan-bytes gate, see
+``plans.pipeline.cascade_pin_allowed``) — ONE grouped count over the cached
+result, from which the driver derives every summary line and the crosstab,
+and the sink. Steps of up to 1M analysed rows cluster in one Arrow/numpy
+job; MLlib takes over above that (``run_kmeans_by_step(mode="auto")``).
 
 Usage::
 
@@ -19,6 +25,7 @@ Usage::
 from __future__ import annotations
 
 import argparse
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,10 +36,49 @@ from .sources.csv import load_data
 from .sources.sinks import write_csv_single, write_parquet
 
 
-def _print_summary(label: str, df: DataFrame) -> int:
-    n = df.count()
-    print(f"[{label}] rows={n}")
-    return n
+def _print_table(header: list[str], rows: list[list]) -> None:
+    """Print ``rows`` the way ``DataFrame.show(truncate=False)`` renders
+    them, without a Spark job."""
+    shown = [[("NULL" if v is None else str(v)) for v in r] for r in rows[:20]]
+    widths = [max(3, len(h), *(len(r[i]) for r in shown)) for i, h in enumerate(header)]
+    sep = "+" + "+".join("-" * w for w in widths) + "+"
+
+    def line(cells):
+        return "|" + "|".join(c.ljust(w) for c, w in zip(cells, widths)) + "|"
+
+    table = "\n".join([sep, line(header), sep, *map(line, shown), sep]) + "\n"
+    print(table + ("only showing top 20 rows" if len(rows) > 20 else ""))
+
+
+def _print_out_summary(out: DataFrame, n_raw: int) -> None:
+    """Every post-pipeline summary line from ONE grouped count collect
+    (|clusters| x 2 x |Class| x |IS_DEFECT| rows)."""
+    rows = out.groupBy("KMeans_Cluster", "is_killer_defect", "Class", "IS_DEFECT").count().collect()
+    n_out = sum(r["count"] for r in rows)
+    loss = (n_raw - n_out) / n_raw * 100 if n_raw else 0.0
+    # outlier loss is the only row-dropping stage, so raw-vs-final
+    # row delta is the filter's loss rate (reference prints 19.06%)
+    print(f"[outliers] rows={n_out} loss={loss:.2f}%")
+    print("[clusters] distribution (null = not in an analysed step):")
+    clusters = Counter()
+    for r in rows:
+        clusters[r["KMeans_Cluster"]] += r["count"]
+    for c, n in sorted(clusters.items(), key=lambda kv: (-kv[1], kv[0] is not None, kv[0])):
+        print(f"  cluster={c} n={n}")
+    n_killer = sum(r["count"] for r in rows if r["is_killer_defect"])
+    print(f"[killer] flagged={n_killer} ({n_killer / n_out * 100 if n_out else 0:.2f}%)")
+    print("[crosstab] Class x IS_DEFECT:")
+    # groupBy(Class).pivot(IS_DEFECT).count().na.fill(0).orderBy(Class):
+    # pivot columns are the sorted distinct values (null first, named
+    # "null"), and the fill also zeroes a null Class
+    cross = Counter()
+    for r in rows:
+        cross[(0 if r["Class"] is None else r["Class"], r["IS_DEFECT"])] += r["count"]
+    values = sorted({v for _, v in cross}, key=lambda v: (v is not None, v))
+    _print_table(
+        ["Class", *("null" if v is None else v for v in values)],
+        [[c, *(cross[(c, v)] for v in values)] for c in sorted({c for c, _ in cross})],
+    )
 
 
 def main(
@@ -45,37 +91,20 @@ def main(
     spark = get_spark(app_name="wafer-pipeline-cli")
     raw = load_data(spark, data_path)
 
-    n_raw = raw.count()
     if show_summary:
-        print(f"[load] rows={n_raw} cols={len(raw.columns)}")
-        null_total = raw.select(
-            sum(F.sum(F.col(c).isNull().cast("long")) for c in raw.columns).alias("n")
-        ).first()["n"]
-        print(f"[load] total nulls={null_total}")
+        load = raw.select(
+            F.count(F.lit(1)).alias("rows"),
+            sum(F.sum(F.col(c).isNull().cast("long")) for c in raw.columns).alias("nulls"),
+        ).first()
+        print(f"[load] rows={load['rows']} cols={len(raw.columns)}")
+        print(f"[load] total nulls={load['nulls']}")
 
     pipeline = WaferPipeline()
     out = pipeline.preprocess(raw).cache()
 
     try:
-        n_out = out.count()
         if show_summary:
-            loss = (n_raw - n_out) / n_raw * 100 if n_raw else 0.0
-            # outlier loss is the only row-dropping stage, so raw-vs-final
-            # row delta is the filter's loss rate (reference prints 19.06%)
-            print(f"[outliers] rows={n_out} loss={loss:.2f}%")
-            print("[clusters] distribution (null = not in an analysed step):")
-            for r in (
-                out.groupBy("KMeans_Cluster").count().orderBy(F.desc("count")).collect()
-            ):
-                print(f"  cluster={r['KMeans_Cluster']} n={r['count']}")
-            n_killer = out.select(
-                F.sum(F.col("is_killer_defect").cast("long")).alias("n")
-            ).first()["n"]
-            print(f"[killer] flagged={n_killer} ({(n_killer or 0) / n_out * 100 if n_out else 0:.2f}%)")
-            print("[crosstab] Class x IS_DEFECT:")
-            (
-                out.groupBy("Class").pivot("IS_DEFECT").count().na.fill(0).orderBy("Class")
-            ).show(truncate=False)
+            _print_out_summary(out, load["rows"])
 
         if save_processed:
             if parquet:

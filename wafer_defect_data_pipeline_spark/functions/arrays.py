@@ -32,7 +32,3 @@ def l2_norm(v: Column | str) -> Column:
 def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
-
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    diff = F.zip_with(as_double(a), as_double(b), lambda x, y: x - y)
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x))

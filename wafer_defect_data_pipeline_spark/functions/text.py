@@ -102,25 +102,6 @@ def detect_language_from_tokens(
     return best_lang
 
 
-def detect_language(text: Column | str, lang_stopwords: dict[str, list[str]] | None = None) -> Column:
-    """Stopword-vote language id: argmax language by stopword hit count.
-
-    One-shot column form (re-tokenizes per hit-count reference — fine for
-    single-column use; hot paths should pre-tokenize and call
-    :func:`detect_language_from_tokens`). A 100 TB run would swap in a
-    trained n-gram model via the same column interface.
-    """
-    return detect_language_from_tokens(tokens(text), lang_stopwords)
-
-
-def char_shingles(text: Column | str, k: int = 5) -> Column:
-    """Distinct k-character shingles of the lowercased, space-collapsed text."""
-    c = F.col(text) if isinstance(text, str) else text
-    norm = F.regexp_replace(F.lower(c), r"\s+", " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(k))))
-
-
 def token_shingles(text: Column | str, k: int = 3) -> Column:
     """Distinct k-token shingles (word n-grams joined by a single space).
 

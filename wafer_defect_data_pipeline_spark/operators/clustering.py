@@ -8,7 +8,7 @@ original row positions — all other rows get a null ``KMeans_Cluster``.
 
 Two execution modes, same API:
 
-- ``mode="distributed"`` (default, the 100 TB path): per step, compute
+- ``mode="distributed"`` (the 100 TB path): per step, compute
   mean/stddev_pop per feature in ONE aggregate (map-side combinable, tiny
   result), broadcast them into the projection, and run MLlib
   ``KMeans(k, seed)`` on the assembled vector. Label write-back is a join on
@@ -18,9 +18,10 @@ Two execution modes, same API:
   (:mod:`..functions.kmeans_np`) reproduces the reference's
   scale→kmeans→label flow bit-for-bit with the test replica. Requires each
   step's REAL-defect subset to fit one task — the small-data parity mode.
-- ``mode="auto"``: one tiny count-per-step agg decides: every step under
-  ``auto_parity_max_rows`` → the single-job Arrow/numpy path (an MLlib fit
-  costs a fixed multi-job overhead that dwarfs small-group math); any step
+- ``mode="auto"`` (default): one tiny count-per-step agg decides: every
+  step at or under ``auto_parity_max_rows`` (1M rows) → the single-job
+  Arrow/numpy path (an MLlib fit costs a fixed multi-job overhead that
+  dwarfs small-group math — ~50 of the CLI's jobs at 5k rows); any step
   over it → the distributed path. The 100 TB run picks MLlib by itself; a
   per-step-small run skips the scheduler overhead entirely.
 
@@ -62,7 +63,8 @@ def with_row_id(df: DataFrame) -> DataFrame:
     but not through joins — attach the id at the scan, as
     ``WaferPipeline.preprocess`` and the registered wafer query do.
 
-    Fallback (non-file sources, or metadata hidden by an upstream join):
+    Fallback (non-file sources, file formats without ``row_index`` such as
+    CSV, or metadata hidden by an upstream join):
     ``monotonically_increasing_id`` is deterministic only within one
     materialization, so the id'd frame is pinned with localCheckpoint to
     stop re-execution renumbering rows (SURVEY.md §7 risk register). The
@@ -72,18 +74,22 @@ def with_row_id(df: DataFrame) -> DataFrame:
     """
     import re as _re
 
+    # Choose the path from the schema, not from a failed analysis: a CSV
+    # scan has _metadata but no row_index, and resolving the missing field
+    # logs an ERROR on every call even when the exception is caught.
     try:
-        tagged = df.withColumns(
-            {
-                "__src_file": F.col("_metadata.file_path"),
-                "__src_pos": F.col("_metadata.row_index"),
-            }
-        )
         files = df.inputFiles()
+        meta = df.select("_metadata").schema[0].dataType.fieldNames() if files else []
     except Exception:
+        meta = []
+    if "row_index" not in meta:
         return df.withColumn(ROW_ID, F.monotonically_increasing_id()).localCheckpoint(eager=False)
-    if not files:
-        return df.withColumn(ROW_ID, F.monotonically_increasing_id()).localCheckpoint(eager=False)
+    tagged = df.withColumns(
+        {
+            "__src_file": F.col("_metadata.file_path"),
+            "__src_pos": F.col("_metadata.row_index"),
+        }
+    )
 
     # Dense file rank built DRIVER-SIDE from the scan's file listing (pure
     # metadata — no Spark job; a first cut ranked via distinct()+window over
@@ -196,7 +202,7 @@ def run_kmeans_by_step(
     features: Sequence[str] | None = None,
     n_clusters: int = 2,
     random_state: int = 42,
-    mode: str = "distributed",
+    mode: str = "auto",
     auto_parity_max_rows: int = 1_000_000,
 ) -> DataFrame:
     """Cluster each analysed step's REAL defects; null label elsewhere.

@@ -4,8 +4,11 @@
 (``/root/reference/src/preprocessing.py:46-283``): constructor injection of
 ``size_columns`` / ``cluster_features`` / ``steps_to_analyse``, flag-gated
 ``preprocess``, and the same stage order — outliers → derived features →
-per-step KMeans → killer labeling. Everything stays one lazy DataFrame
-lineage; nothing materializes until the caller acts.
+per-step KMeans → killer labeling. The result is one lazy DataFrame; the
+only action ``preprocess`` runs itself is the k-means per-step stats probe,
+which also fills the pin of the pre-clustering frame (see
+:func:`cascade_pin_allowed`), so the caller's later actions read the
+outlier cascade from the pin instead of re-running it.
 
 Module-level functional wrappers mirror the reference's functional API
 (preprocessing.py:287-355), including its quirk that the wrapper form of
@@ -14,11 +17,13 @@ Module-level functional wrappers mirror the reference's functional API
 
 from __future__ import annotations
 
+import os
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame
 
 from ..functions.derived import add_engineered_features
+from ..functions.partitioning import _input_bytes
 from ..operators.clustering import ROW_ID as _ROW_ID
 from ..operators.clustering import run_kmeans_by_step as _run_kmeans
 from ..operators.clustering import with_row_id as _with_row_id
@@ -27,13 +32,34 @@ from ..operators.outliers import remove_outliers_by_group
 from ..schema import CLUSTER_FEATURES, DEFAULT_STEPS_TO_ANALYSE, SIZE_COLUMNS
 
 
+def cascade_pin_allowed(df: DataFrame) -> bool:
+    """The byte gate of the wafer plans' cascade pin: True iff ``df``'s scan
+    files total under ``WDPS_WAFER_PIN_MAX_BYTES`` (default 4 GiB, read per
+    call). The pin writes the filtered table to executor storage; past the
+    gate, re-deriving it from the columnar scan is the cheaper side.
+
+    The probe is the driver's file listing (no job). Policy for the cases
+    with no byte count: a frame with NO input files (``createDataFrame``,
+    RDD-backed, already checkpointed) counts as 0 bytes — its rows already
+    sit in driver or executor memory — so it is pinned under any positive
+    gate; files of unknown size (a non-``file:`` scheme) or a failed
+    listing count as large, so that frame is not pinned. Probe the scan
+    itself: a row-id fallback pin upstream hides the files.
+    """
+    try:
+        total = _input_bytes(df.inputFiles())
+    except Exception:  # noqa: BLE001 — no listing: treat as large
+        return False
+    return total is not None and total < int(os.environ.get("WDPS_WAFER_PIN_MAX_BYTES", 4 << 30))
+
+
 class WaferPipeline:
     def __init__(
         self,
         size_columns: Iterable[str] | None = None,
         cluster_features: Iterable[str] | None = None,
         steps_to_analyse: Iterable[str] | None = None,
-        clustering_mode: str = "distributed",
+        clustering_mode: str = "auto",
         quantile_mode: str = "exact",
     ) -> None:
         self.size_columns = list(size_columns) if size_columns else list(SIZE_COLUMNS)
@@ -81,6 +107,7 @@ class WaferPipeline:
         # attach the clustering write-back row id before any join hides the
         # scan's _metadata column — pin-free on file sources (clustering.py)
         attached_id = run_clustering and _ROW_ID not in out.columns
+        pin = run_clustering and cascade_pin_allowed(df)
         if attached_id:
             out = _with_row_id(out)
         if remove_outliers:
@@ -88,6 +115,11 @@ class WaferPipeline:
         if add_features:
             out = self.add_engineered_features(out)
         if run_clustering:
+            # Unpinned, the k-means stats probe and every later action over
+            # the result (the CLI's summary, its sink) re-run the lazy
+            # cascade; the probe fills this pin, so the cascade runs once.
+            if pin:
+                out = out.localCheckpoint(eager=False)
             out = self.run_kmeans_by_step(out)
         if label_killer:
             out = self.label_killer_defects(out)

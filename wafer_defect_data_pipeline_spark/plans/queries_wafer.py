@@ -10,25 +10,13 @@ value-level parity is covered by the golden test against the pandas replica
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from ..functions.partitioning import _input_bytes
 from ..operators.clustering import run_kmeans_by_step, with_row_id
 from ..operators.labeling import label_killer_defects
 from ..operators.outliers import remove_outliers_by_group
 from ..sources import read_table
-
-
-def _scan_bytes_under(df, max_bytes: int) -> bool:
-    """True iff the frame's scan files total under ``max_bytes`` (driver-side
-    listing, no job; unknown sizes — non-local scheme — count as large)."""
-    try:
-        total = _input_bytes(df.inputFiles())
-    except Exception:  # noqa: BLE001 — non-file source: treat as large
-        return False
-    return total is not None and total < max_bytes
+from .pipeline import cascade_pin_allowed
 from .registry import register
 
 _FEATURES = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -75,7 +63,7 @@ def _wafer_pipeline_on_lineitem(spark, sf_dir):
     # and the plan shape reverts to the scan-per-action form. Each
     # invocation builds a fresh RDD checkpoint — nothing survives the
     # query, so every bench/oracle run still computes from parquet.
-    if _scan_bytes_under(df, int(os.environ.get("WDPS_WAFER_PIN_MAX_BYTES", 4 << 30))):
+    if cascade_pin_allowed(df):
         df = df.localCheckpoint(eager=False)
     df = df.withColumn("price_per_qty", F.col("l_extendedprice") / (F.col("l_quantity") + F.lit(1e-6)))
     df = run_kmeans_by_step(
