@@ -2656,6 +2656,33 @@ def test_scratch_dir_age_fallback_sweeps_stale_foreign_dirs(tmp_path, monkeypatc
     assert own.exists(), "own dirs are never age-swept"
 
 
+def test_scratch_paths_removed_at_process_exit(tmp_path):
+    """No state survives a run: a process's run_dir and scratch_dir paths,
+    and the run root itself, are gone once that process exits."""
+    import os
+    import subprocess
+    import sys
+
+    from .conftest import REPO_ROOT
+
+    code = (
+        "import os, sys\n"
+        "from wafer_defect_data_pipeline_spark.scratch import run_dir, scratch_dir\n"
+        "paths = [run_dir('t', base=sys.argv[1]), scratch_dir('t', base=sys.argv[1])]\n"
+        "for p in paths:\n"
+        "    os.makedirs(p)\n"
+        "    open(os.path.join(p, 'f'), 'w').write('x')\n"
+        "print(*paths)\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path)],
+        cwd=REPO_ROOT, capture_output=True, text=True, timeout=120, check=True,
+    )
+    paths = done.stdout.split()
+    assert len(paths) == 2 and all(p.startswith(str(tmp_path)) for p in paths)
+    assert os.listdir(tmp_path) == [], os.listdir(tmp_path)
+
+
 def test_jaccard_pairs_auto_both_paths_match_exact(spark, sf_small):
     """jaccard_pairs_auto must return the exact-join answer on BOTH sides of
     the density probe: budget_factor=0 forces the LSH+verify fallback, the
@@ -3144,7 +3171,39 @@ def test_label_propagation_splits_bridged_cliques(spark):
     assert comp == {1}
 
 
-def test_streaming_span_delta_matches_rewrite_and_admits_o_batch(spark, sf_small):
+@pytest.fixture
+def no_tmp_residue():
+    """An admit-loop runner leaves nothing in /tmp but its output: the only
+    new ``wdps_*`` entry may be this process's run root, and each run dir
+    created in it holds only the ``out/`` its returned frame reads."""
+    import os
+    import re
+
+    pid = os.getpid()
+    root = f"/tmp/wdps_run_pid{pid}"
+
+    def ours(name: str) -> bool:  # other processes' pid-suffixed dirs aside
+        m = re.search(r"_pid(\d+)$", name)
+        return m is None or int(m.group(1)) == pid
+
+    def entries() -> set[str]:
+        return {n for n in os.listdir("/tmp") if n.startswith("wdps_") and ours(n)}
+
+    def runs() -> set[str]:
+        return set(os.listdir(root)) if os.path.isdir(root) else set()
+
+    before, runs_before = entries(), runs()
+    yield
+    assert entries() - before <= {os.path.basename(root)}, entries() - before
+    new_runs = runs() - runs_before
+    assert new_runs, "runner work dirs must live under the run root"
+    for r in new_runs:
+        assert os.listdir(f"{root}/{r}") == ["out"], (r, os.listdir(f"{root}/{r}"))
+
+
+def test_streaming_span_delta_matches_rewrite_and_admits_o_batch(
+    spark, sf_small, no_tmp_residue
+):
     """The delta-append admit loop is defined to be bit-equal to the rewrite
     twin (gram counts are independent, so presence in base ∪ deltas ==
     presence in the merged index) — and its whole point is that ADMITTING a
@@ -3169,7 +3228,7 @@ def test_streaming_span_delta_matches_rewrite_and_admits_o_batch(spark, sf_small
     assert max(stats["admit_bytes_per_batch"]) * 3 < stats["base_bytes"], stats
 
 
-def test_streaming_span_delta_probe_excludes_own_delta(spark, sf_small):
+def test_streaming_span_delta_probe_excludes_own_delta(spark, sf_small, tmp_path):
     """Retry idempotency: a foreachBatch retry runs AFTER the first attempt
     already wrote delta/batch=N and appended it to the manifest. The probe
     must exclude the batch's own delta (else every k-gram self-matches and
@@ -3177,8 +3236,6 @@ def test_streaming_span_delta_probe_excludes_own_delta(spark, sf_small):
     membership-guarded (else the delta double-counts at compaction).
     Simulated by pre-seeding the state exactly as a died-after-admit
     attempt leaves it, then re-running the batch body."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from wafer_defect_data_pipeline_spark.operators.dedup import (
@@ -3192,7 +3249,7 @@ def test_streaming_span_delta_probe_excludes_own_delta(spark, sf_small):
         .filter(F.col("doc_id") % 20 == 0)
     )
     base_src = read_table(spark, sf_small, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_retry_{uuid.uuid4().hex[:8]}"
+    work = str(tmp_path)
     # batch = suffix copies of history (spans expected against base) PLUS
     # novel payloads (no spans against base — but a tainted probe that
     # self-matches the batch's own grams marks them duplicated end-to-end)
@@ -3247,10 +3304,6 @@ def test_streaming_span_delta_probe_excludes_own_delta(spark, sf_small):
         ).collect()
     )
     assert bad != want  # the exclusion is load-bearing, not decorative
-
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
 
 
 def test_label_propagation_directed_input_keeps_sink_and_source_nodes(spark):
@@ -3323,7 +3376,7 @@ def test_entity_multipass_snm_recovers_front_typo(spark):
     assert len(pairs) == len({(r.id_a, r.id_b) for r in pairs})  # distinct pairs
 
 
-def test_streaming_minhash_delta_matches_rewrite_and_admits_o_batch(spark, sf_small):
+def test_streaming_minhash_delta_matches_rewrite_and_admits_o_batch(spark, sf_small, no_tmp_residue):
     """The minhash delta-append admit loop is bit-equal to the rewrite twin
     (signatures are independent rows — base ∪ deltas IS the index) and its
     per-admit write is a small fraction of the full signature index the
@@ -3344,7 +3397,7 @@ def test_streaming_minhash_delta_matches_rewrite_and_admits_o_batch(spark, sf_sm
     assert max(stats["admit_bytes_per_batch"]) * 3 < stats["base_bytes"], stats
 
 
-def test_streaming_entity_delta_matches_rewrite_and_admits_o_batch(spark, sf_small):
+def test_streaming_entity_delta_matches_rewrite_and_admits_o_batch(spark, sf_small, no_tmp_residue):
     """The entity-linkage delta-append admit loop is bit-equal to the
     rewrite twin (records are independent rows — base ∪ deltas IS the
     master table) and each admit writes a small fraction of the full
@@ -3388,7 +3441,7 @@ def test_streaming_span_delta_output_invariant_to_compaction_cadence(spark, sf_s
         assert got == base, f"compact_every={cadence} diverged"
 
 
-def test_streaming_bm25_standing_query_sees_admitted_docs(spark, sf_small):
+def test_streaming_bm25_standing_query_sees_admitted_docs(spark, sf_small, no_tmp_residue):
     """The standing query's day-N ranking must (a) rank over the corpus
     INCLUDING day N's admitted docs — an admitted doc_id (>= 3M) appears
     once its day arrives, (b) produce full top-10 pages per day, and (c)
@@ -3743,7 +3796,7 @@ def test_tree_bytes_is_bounded(tmp_path):
     assert tree_bytes(str(tmp_path), max_files=10) == -1  # bounded above
 
 
-def test_streaming_span_restart_matches_single_run(spark, sf_small):
+def test_streaming_span_restart_matches_single_run(spark, sf_small, no_tmp_residue):
     """Kill-between-days recovery, end to end: day 2 runs in a FRESH query
     lifetime with the manifest rebuilt from the durable transaction log and
     Spark's checkpointLocation skipping day 1's file. Output must be
@@ -3769,7 +3822,7 @@ def test_streaming_span_restart_matches_single_run(spark, sf_small):
     assert len(stats["admit_bytes_per_batch"]) == 2
 
 
-def test_streaming_minhash_restart_matches_single_run(spark, sf_small):
+def test_streaming_minhash_restart_matches_single_run(spark, sf_small, no_tmp_residue):
     """Same kill-between-days drill for the minhash admit loop."""
     from wafer_defect_data_pipeline_spark.streaming.dedup import (
         run_streaming_minhash_probe_delta,
@@ -3786,7 +3839,7 @@ def test_streaming_minhash_restart_matches_single_run(spark, sf_small):
     assert len(stats["admit_bytes_per_batch"]) == 2
 
 
-def test_streaming_ann_restart_matches_single_run(spark, sf_small):
+def test_streaming_ann_restart_matches_single_run(spark, sf_small, no_tmp_residue):
     """Kill-between-days drill for the ANN admit loop: day 2 probes must
     retrieve day 1's admitted vectors through the RECOVERED manifest (the
     near-dup plant's true neighbour exists only via the admission step), so
@@ -3807,7 +3860,7 @@ def test_streaming_ann_restart_matches_single_run(spark, sf_small):
     assert len(stats["admit_bytes_per_batch"]) == 2
 
 
-def test_streaming_bm25_standing_restart_matches_single_run(spark, sf_small):
+def test_streaming_bm25_standing_restart_matches_single_run(spark, sf_small, no_tmp_residue):
     """Kill-between-days drill for the standing-query loop: day 2's page is
     scored against postings/doclens/corpus-stats parts the RECOVERED
     manifest lists (including day 1's deltas — the df/N/avgdl shifts cross
@@ -4371,7 +4424,7 @@ def test_ivf_auto_probe_recall_bound_on_driver_corpus(spark, sf_medium):
     assert n_probe > 3, f"auto pick {n_probe} did not widen past the fixed default"
 
 
-def test_streaming_entity_restart_matches_single_run(spark, sf_small):
+def test_streaming_entity_restart_matches_single_run(spark, sf_small, no_tmp_residue):
     """Kill-between-days drill for the entity-linkage admit loop (same
     shape as the span/minhash restarts: manifest recovered from the
     durable log, checkpointLocation skips the processed file)."""
@@ -4747,6 +4800,24 @@ def test_ann_dispatch_redecide_trigger_and_versioning(spark, tmp_path):
     for v in (1, 2):
         parts = glob.glob(f"{base}/decision/v{v}/part-*")
         assert len(parts) == 1, parts
+
+
+def test_load_latest_dispatch_decision_empty_dir_names_base(spark, tmp_path):
+    """A decision dir that holds no rows is a missing decision: the loader
+    raises a ValueError naming the base, not a bare ``max()`` failure."""
+    import re
+
+    import pytest as _pytest
+
+    from wafer_defect_data_pipeline_spark.operators.similarity import (
+        _DECISION_SCHEMA,
+        load_latest_dispatch_decision,
+    )
+
+    base = str(tmp_path)
+    spark.createDataFrame([], _DECISION_SCHEMA).write.parquet(f"{base}/decision/v0")
+    with _pytest.raises(ValueError, match=re.escape(base)):
+        load_latest_dispatch_decision(spark, base)
 
 
 def test_recall_drift_trigger_constant_size_shape_drift(spark):

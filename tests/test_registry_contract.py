@@ -37,3 +37,40 @@ def test_exact_twin_only_set_on_rows_only_queries():
                 f"{name} has an oracle AND an exact_twin — twin is only the "
                 "evidence channel for oracle-less queries"
             )
+
+
+#: uuid4() sites that name an in-process catalog object (memory-sink query
+#: names, a global-temp-view tag), not a filesystem path.
+_CATALOG_NAME_SITES = {
+    ("streaming/events.py", 'name = f"stream_{uuid.uuid4().hex[:12]}"'),
+    ("streaming/events.py", 'name = f"dedup_{uuid.uuid4().hex[:12]}"'),
+    ("streaming/events.py", 'name = f"avail_now_{uuid.uuid4().hex[:12]}"'),
+    ("streaming/stateful.py", 'name = f"stateful_{uuid.uuid4().hex[:12]}"'),
+    (
+        "streaming/stateful.py",
+        'return _run_profile_to_final(user_running_profile_exact(events), '
+        'f"exact_{uuid.uuid4().hex[:12]}")',
+    ),
+    (
+        "streaming/stateful.py",
+        'return _run_profile_to_final(user_running_profile_tws(events), '
+        'f"tws_{uuid.uuid4().hex[:12]}")',
+    ),
+    ("operators/skew.py", "tag = uuid.uuid4().hex"),
+}
+
+
+def test_scratch_paths_come_only_from_scratch_module():
+    """Every work dir comes from scratch.run_dir / scratch_dir, whose paths
+    the process removes at exit: no other module builds a path from a raw
+    ``"/tmp/`` literal or a ``uuid4()``."""
+    pkg = REPO_ROOT / "wafer_defect_data_pipeline_spark"
+    hits = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "scratch.py":
+            continue
+        for line in path.read_text().splitlines():
+            if '"/tmp/' in line or "uuid4()" in line:
+                hits.add((rel, line.strip()))
+    assert hits - _CATALOG_NAME_SITES == set()

@@ -22,8 +22,6 @@ faked.
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Iterator
 
 import pandas as pd
@@ -38,11 +36,10 @@ from ..functions.partitioning import fan_out
 #: past this many input bytes (a row-count proxy from the driver's file
 #: listing — no job) the narrow-row repartition amortizes its ~n_cores
 #: Python worker spin-ups; below it, the ungated fan_out measured SLOWER
-#: at sf0.1 (r15 A/B, reverted). Scale-adaptive, not core-count-tuned:
-#: env-overridable for clusters whose worker spin-up/row-cost ratio
-#: differs. Downstream decode kernels inherit the feed's partitioning, so
-#: one gate parallelizes each whole attach->decode chain.
-_FANOUT_MIN_BYTES = int(os.environ.get("WDPS_MM_FANOUT_MIN_BYTES", 2 << 20))
+#: at sf0.1 (r15 A/B, reverted). Scale-adaptive, not core-count-tuned.
+#: Downstream decode kernels inherit the feed's partitioning, so one gate
+#: parallelizes each whole attach->decode chain.
+_FANOUT_MIN_BYTES = 2 << 20
 
 
 def _id_feed(df: DataFrame, id_col: str) -> DataFrame:

@@ -647,6 +647,8 @@ def load_latest_dispatch_decision(spark, base: str):
     of one-row files by contract, and executeTake's partial-job probing
     plus the sort cost an extra job per load (the graph.py:284 lesson)."""
     rows = spark.read.parquet(f"{base}/decision/v*").collect()
+    if not rows:
+        raise ValueError(f"no dispatch decision rows under {base}/decision")
     return max(rows, key=lambda r: r["version"])
 
 

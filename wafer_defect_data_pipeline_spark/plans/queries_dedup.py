@@ -1346,12 +1346,11 @@ def _incremental_spans_persisted(spark, sf_dir):
     span surface). The index is deterministic (distinct gram hash +
     count), so probe-after-load is bit-equal to the fresh build and the
     SAME oracle hash-checks it."""
-    import uuid as _uuid
-
     from ..operators.dedup import gram_index, incremental_duplicated_spans
+    from ..scratch import run_dir
 
     d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    index_dir = f"/tmp/wdps_gram_index_{_uuid.uuid4().hex[:8]}"
+    index_dir = run_dir("gram_index")
     gram_index(d, "doc_id", "text", k=20).write.mode("overwrite").parquet(index_dir)
     loaded = spark.read.parquet(index_dir)
     near = d.filter(F.col("doc_id") % 20 == 0).select(
@@ -1386,13 +1385,12 @@ def _incremental_spans_merged(spark, sf_dir):
     copies of original history (spans via the day-0 index), and genuinely
     novel docs (no spans). The probe answers from the LOADED merged parquet,
     written repartition(gh)-aligned."""
-    import uuid as _uuid
-
     from ..operators.dedup import (
         gram_index,
         incremental_duplicated_spans,
         merge_gram_index,
     )
+    from ..scratch import run_dir
 
     d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     day1 = d.filter(F.col("doc_id") % 20 == 10).select(
@@ -1403,7 +1401,7 @@ def _incremental_spans_merged(spark, sf_dir):
             F.lit(" padding alpha beta gamma delta epsilon"),
         ).alias("text"),
     )
-    index_dir = f"/tmp/wdps_gram_index_merged_{_uuid.uuid4().hex[:8]}"
+    index_dir = run_dir("gram_index_merged")
     merged = merge_gram_index(
         gram_index(d, "doc_id", "text", k=20),
         gram_index(day1, "doc_id", "text", k=20),

@@ -971,12 +971,11 @@ def _ivfpq_probe_prebuilt(spark, sf_dir):
     arithmetic, so probe-after-load is bit-equal to the fresh build and
     the same composed DuckDB oracle hash-checks it (the mirror of
     dedup_incremental_vs_index for the similarity surface)."""
-    import uuid as _uuid
-
     from ..operators.quantization import ivfpq_build_index, ivfpq_probe_index
+    from ..scratch import run_dir
 
     e = read_table(spark, sf_dir, "embeddings")
-    index_dir = f"/tmp/wdps_ivfpq_index_{_uuid.uuid4().hex[:8]}"
+    index_dir = run_dir("ivfpq_index")
     ivfpq_build_index(e, index_dir, dim=64, cb_k=32)
     q = e.filter(F.col("vec_id") % 50 == 0)
     return ivfpq_probe_index(q, index_dir, dim=64, k_top=5, n_probe=3).orderBy(

@@ -14,14 +14,22 @@ decision/index/manifest (r13 ADVICE). :func:`scratch_dir` closes both:
 - stale siblings left by DEAD processes are swept on entry — cleanup can't
   run at query exit because the returned DataFrame reads the artifact
   lazily, at the caller's collect time.
+
+Every path this module hands out is also removed when the owning process
+exits (one ``atexit`` hook), so no state survives a run; the entry sweeps
+remain the fallback for processes that die without running exit hooks.
+:func:`run_dir` is the per-call form: a fresh dir under the process's one
+scratch root, for work that must not be shared even within a process.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
 import shutil
 import time
+import uuid
 
 #: Age-based fallback sweep threshold (seconds). A recycled PID owned by an
 #: unrelated live process defeats the liveness check forever, and dirs whose
@@ -31,6 +39,19 @@ import time
 STALE_AGE_SECONDS = 24 * 3600
 
 _ANY_WDPS = re.compile(r"wdps_.+_pid(\d+)$")
+
+#: Every path scratch_dir handed out in this process. Process-scoped by
+#: design: it is what the exit hook removes.
+_CREATED: set[str] = set()
+
+
+def _remove_created() -> None:
+    # the pid suffix keeps a forked child (which inherits both this set and
+    # the hook) from deleting its parent's live dirs
+    suffix = f"_pid{os.getpid()}"
+    for path in _CREATED:
+        if path.endswith(suffix):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def _pid_alive(pid: int) -> bool:
@@ -106,4 +127,16 @@ def scratch_dir(tag: str, base: str = "/tmp") -> str:
                     shutil.rmtree(path, ignore_errors=True)
     except OSError:  # pragma: no cover — unreadable base dir; path still valid
         pass
-    return os.path.join(base, f"wdps_{tag}_pid{os.getpid()}")
+    path = os.path.join(base, f"wdps_{tag}_pid{os.getpid()}")
+    if not _CREATED:
+        atexit.register(_remove_created)
+    _CREATED.add(path)
+    return path
+
+
+def run_dir(tag: str, base: str = "/tmp") -> str:
+    """A fresh ``{root}/{tag}_{uuid8}`` under this process's scratch root
+    (``root = scratch_dir("run", base)``): private to one call, covered by
+    the dead-PID and stale-age sweeps through its root, and removed with
+    the root at process exit. Nothing is created on disk."""
+    return os.path.join(scratch_dir("run", base), f"{tag}_{uuid.uuid4().hex[:8]}")

@@ -1,127 +1,33 @@
-"""Streaming daily-crawl span dedup: probe-then-merge per micro-batch.
+"""Streaming daily-crawl dedup: the span, MinHash and entity admit loops.
 
 The batch triad in ``operators/dedup.py`` (``gram_index`` build →
-``incremental_duplicated_spans`` probe → ``merge_gram_index`` fold) is the
-admit-once loop a crawl pipeline runs per day; this module runs the SAME
-loop as a Structured Streaming ``foreachBatch`` job, so each arriving file
-of documents is (1) probed against the index as it stood BEFORE the batch
-— history is the authority, a batch never taints itself — and (2) folded
-into the index for every later batch. Day-2 copies of day-1 text are
-detected without any rescan of historical text, which is the whole point:
-at 100 TB of accumulated corpus the per-batch cost is the batch's own
-explode + two narrow (gh, n) joins.
-
-Two state disciplines are shipped, same probe, same oracle:
-
-- **rewrite** (:func:`run_streaming_span_dedup`): the index is one
-  versioned parquet snapshot, and admitting a batch rewrites it whole —
-  ``merge(index, batch)`` → ``v{N+1}``. Simple, but the per-batch write is
-  O(index): at 100 TB of accumulated grams each micro-batch would rewrite
-  the entire history. Kept as the correctness twin.
-- **delta-append** (:func:`run_streaming_span_dedup_delta`): each admitted
-  batch writes ONLY its own gram counts as a new partition under the
-  snapshot root (``idx/delta/batch=N``) — an O(batch) write — and the
-  probe reads base ∪ deltas (gram counts are independent, so the union
-  carries the same presence/count information as the merged table).
-  Every ``compact_every`` deltas, one compaction folds base + deltas into
-  a new base with the ``merge_gram_index`` count algebra — the O(index)
-  write is paid on a CADENCE, amortized across batches, exactly like
-  LSM/Delta-Lake compaction. This is the 100 TB state discipline.
-
-Idempotency (invariants centralized in streaming/state.py): per-batch
-outputs go to deterministic paths (``out/batch=<id>``,
-``delta/batch=<id>``) in overwrite mode, so a Structured-Streaming retry
-of the same ``batch_id`` overwrites its own previous attempt instead of
-double-appending; superseded index snapshots are vacuumed only AFTER the
-query terminates. The rewrite loops derive their probe snapshot from
-``batch_id`` (``v{N}``), never from driver state mutated mid-body, so a
-retry re-probes the pre-admit view even though the admit already wrote
-``v{N+1}``. The delta loops exclude the current batch's own
-``delta/batch=<id>`` from BOTH the probe view and every compaction fold
-(folding it into the base would reintroduce the self-match through the
-new base), and the manifest append is membership-guarded — a retry that
-died anywhere in the batch body re-probes the exact pre-admit view and
-never double-counts its delta. Compaction therefore always lags the
-newest batch by one; cadence-invariance tests pin that this is
-operational, never semantic.
-
-Durability (round 11, Delta-style since round 12): the manifest is no
-longer driver-memory-only — each delta loop persists it as a versioned
-transaction log next to the index (``idx/_log/batch=<id>.json``, atomic
-write; every Nth entry a full-state snapshot, the rest O(changes)
-field-level deltas, recovery = checkpoint + tail replay; see
-streaming/state.py). The ``*_restart`` runners prove the story
-end-to-end: each day runs as its OWN query lifetime, the manifest is
-rebuilt via ``DeltaManifest.recover`` (no driver state survives the
-"crash"), and a shared Structured-Streaming ``checkpointLocation`` lets
-Spark's offset tracking skip already-processed files — output bit-equal to
-the single-run twins under the same staged oracles — all FIVE admit loops
-(span, minhash, entity, ANN, standing BM25) carry one. The log also
-enforces the single-writer half of optimistic concurrency (a zombie
-driver publishing behind the head dies with ManifestConflictError) and
-serves time-travel reads (``DeltaManifest.recover(as_of_batch=N)``); a
-true MULTI-writer deployment would still add a lock service or CAS on
-the log entry itself — the single-writer daily-crawl loop here is the
-reference's operating mode.
-
-No reference analogue (the reference is a single-table batch ETL —
-``/root/reference/src/preprocessing.py``); this is extension-surface
-streaming per SURVEY.md §2.9.
+``incremental_duplicated_spans`` probe → ``merge_gram_index`` fold), and
+its MinHash and record-linkage analogues, as :class:`~.admit.AdmitLoop`
+specs for the engine in ``streaming/admit.py``. Day-2 copies of day-1
+text are found without rescanning history: at 100 TB of accumulated
+corpus the per-batch cost is the batch's own explode + two narrow joins.
+The staged two-day batches must stay in lockstep with the registered
+DuckDB oracles.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .admit import AdmitLoop, run_delta, run_rewrite
 
-def _stage_one_day(work: str, b: DataFrame, i: int) -> str:
-    """Write batch ``i`` as ONE parquet file under ``work/in`` with a
-    strictly increasing mtime: the file-stream source replays oldest-first,
-    so micro-batch order == day order. Restart runners call this
-    incrementally — day 2's file only appears after day 1's query lifetime
-    has drained, exactly like a real crawl directory."""
-    staged = f"{work}/in"
-    os.makedirs(staged, exist_ok=True)
-    tmp = f"{work}/day{i}"
-    b.coalesce(1).write.parquet(tmp)
-    [part] = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-    dst = f"{staged}/day{i}.parquet"
-    shutil.move(f"{tmp}/{part}", dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
-    return staged
+_DOCS = "doc_id long, text string"
 
 
-def _stage_days(work: str, batches: list[DataFrame]) -> str:
-    for i, b in enumerate(batches, start=1):
-        staged = _stage_one_day(work, b, i)
-    return staged
+def _sum_n(grams: DataFrame) -> DataFrame:
+    """``merge_gram_index``'s count algebra over a union of gram parts."""
+    return grams.groupBy("gh").agg(F.sum("n").alias("n"))
 
 
-# The retry-correctness invariants (own-delta exclusion on BOTH the probe
-# and the compaction side, guarded manifest appends, batch-id-derived
-# snapshot paths, vacuum-after-termination) live ONCE in streaming/state.py
-# — see DeltaManifest / version_path — so the five admit loops cannot
-# drift apart on them.
-from .state import DeltaManifest, version_path
-
-
-def _vacuum(paths: list[str]) -> None:
-    for p in paths:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _span_batches(d: DataFrame) -> list[DataFrame]:
-    """The staged two-day crawl shared by the span admit loops (and their
-    DuckDB oracles — the expressions here and in the registered SQL must
-    stay in lockstep): day 1 = novel payloads + suffix copies of history;
-    day 2 = verbatim copies of day 1's novel text + genuinely new docs."""
+def _span_batches(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Day 1 = novel payloads + suffix copies of history; day 2 = verbatim
+    copies of day 1's novel text + genuinely new docs."""
     day1 = d.filter(F.col("doc_id") % 20 == 10).select(
         (F.col("doc_id") + F.lit(3_000_000)).alias("doc_id"),
         F.concat(
@@ -148,55 +54,40 @@ def _span_batches(d: DataFrame) -> list[DataFrame]:
             ).alias("text"),
         )
     )
-    return [batch1, batch2]
+    return batch1, batch2
 
 
-def _run_file_stream(spark: SparkSession, staged: str, schema: str, body) -> None:
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(body)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+def _span_loop(
+    spark: SparkSession, sf_dir: str, k: int, min_span: int, min_index_count: int = 1
+) -> AdmitLoop:
+    from ..operators.dedup import gram_index, incremental_duplicated_spans
+    from ..sources import read_table
 
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-def _run_days_with_restarts(
-    spark: SparkSession,
-    work: str,
-    batches: list[DataFrame],
-    schema: str,
-    body_of,
-    log_dir: str,
-) -> "DeltaManifest":
-    """Run each staged day as its OWN query lifetime — the restart drill.
-
-    Day ``i``'s file is staged only after day ``i-1``'s query has drained
-    (a real crawl directory), every lifetime starts a FRESH
-    ``DeltaManifest.recover`` from the durable log (no driver state
-    survives the "crash"), and all lifetimes share one Structured-Streaming
-    ``checkpointLocation`` so Spark's own offset tracking skips
-    already-processed files and keeps assigning monotonically increasing
-    ``batch_id``s — the deterministic ``batch=<id>`` paths and the
-    batch-derived log entries stay valid across restarts. Returns the
-    final recovered manifest (for vacuum/stats)."""
-    ckpt = f"{work}/ckpt"
-    for i, b in enumerate(batches, start=1):
-        staged = _stage_one_day(work, b, i)
-        man = DeltaManifest.recover(log_dir)
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-            .writeStream.foreachBatch(body_of(man))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def probe(batch_df: DataFrame, view, batch_id: int) -> DataFrame:
+        # presence: a gram is indexed iff any part carries it; a count
+        # threshold needs each gram's total across parts first
+        idx = view["grams"] if min_index_count == 1 else _sum_n(view["grams"])
+        return incremental_duplicated_spans(
+            batch_df, idx, "doc_id", "text", k=k, min_span=min_span,
+            min_index_count=min_index_count,
         )
-        q.awaitTermination()
-    return DeltaManifest.recover(log_dir)
+
+    return AdmitLoop(
+        tag="stream_spans",
+        history=d,
+        batches=_span_batches(d),
+        schema=_DOCS,
+        admit=lambda df: {"grams": gram_index(df, "doc_id", "text", k=k)},
+        probe=probe,
+        columns=("doc_id", "span_start", "span_end", "span_len"),
+        order=("doc_id", "span_start"),
+        folds={"grams": _sum_n},
+        # gh-keyed layout: 8 partitions for base, rewrite and compaction
+        # writes, 4 for the O(batch) deltas
+        layout=lambda df, delta: df.repartition(4 if delta else 8, "gh"),
+    )
 
 
 def run_streaming_span_dedup(
@@ -205,61 +96,11 @@ def run_streaming_span_dedup(
     k: int = 20,
     min_span: int = 40,
 ) -> DataFrame:
-    """Bounded replay of the two-day crawl with the REWRITE state
-    discipline (O(index) admit write — see module docstring; the delta
-    twin below is the scale path). Returns every detected span across both
-    batches.
-
-    Deterministic end to end: file order is pinned by mtime, the probe is
-    presence-only (``min_index_count=1``), and the gram index is a pure
-    count table — so the result is the same as running the batch triad by
-    hand, and the DuckDB oracle replays it exactly (batch 1 probed against
-    grams(history), batch 2 against grams(history ∪ batch 1)).
-    """
-    from ..operators.dedup import (
-        gram_index,
-        incremental_duplicated_spans,
-        merge_gram_index,
-    )
-    from ..sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_spans_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/spans", f"{work}/idx"
-    staged = _stage_days(work, _span_batches(d))
-
-    # index v0: history only (never re-scanned after this)
-    gram_index(d, "doc_id", "text", k=k).repartition(8, "gh").write.parquet(
-        version_path(idx_dir, 0)
-    )
-    superseded: list[str] = []
-
-    def probe_then_merge(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        # the probe snapshot is DERIVED from batch_id (v{N}), never from
-        # driver state mutated mid-body: a retry that runs after the admit
-        # already wrote v{N+1} still probes v{N} — the pre-admit view —
-        # instead of self-matching every gram through the new snapshot
-        idx = sp.read.parquet(version_path(idx_dir, batch_id))
-        incremental_duplicated_spans(
-            batch_df, idx, "doc_id", "text", k=k, min_span=min_span
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        # then admit the batch for every later one (deterministic path +
-        # overwrite: a retry replaces its own previous attempt)
-        merge_gram_index(
-            idx, gram_index(batch_df, "doc_id", "text", k=k)
-        ).repartition(8, "gh").write.mode("overwrite").parquet(
-            version_path(idx_dir, batch_id + 1)
-        )
-        superseded.append(version_path(idx_dir, batch_id))
-
-    _run_file_stream(spark, staged, "doc_id long, text string", probe_then_merge)
-    _vacuum(superseded)  # only after termination: a retry re-reads its snapshot
-    return (
-        spark.read.parquet(out_dir)
-        .select("doc_id", "span_start", "span_end", "span_len")
-        .orderBy("doc_id", "span_start")
-    )
+    """Bounded replay of the two-day crawl with the REWRITE discipline.
+    Returns every detected span, ``(doc_id, span_start, span_end,
+    span_len)``; the DuckDB oracle replays it exactly (batch 1 probed
+    against grams(history), batch 2 against grams(history ∪ batch 1))."""
+    return run_rewrite(spark, _span_loop(spark, sf_dir, k, min_span))
 
 
 def run_streaming_span_dedup_delta(
@@ -271,108 +112,12 @@ def run_streaming_span_dedup_delta(
     stats: dict | None = None,
     min_index_count: int = 1,
 ) -> DataFrame:
-    """The same two-day replay as :func:`run_streaming_span_dedup` with the
-    DELTA-APPEND state discipline: admitting a batch writes only
-    ``idx/delta/batch=N`` (O(batch) bytes); the probe reads base ∪ deltas;
-    every ``compact_every`` deltas one ``merge_gram_index`` compaction
-    folds them into a new base (the amortized O(index) write). Output is
-    identical to the rewrite twin — gram counts are independent, so
-    presence in (base ∪ deltas) == presence in the merged index — and the
-    SAME staged DuckDB oracle hash-checks it.
-
-    ``stats`` (optional dict) receives ``admit_bytes_per_batch`` — the
-    bytes written to ADMIT each batch, excluding compaction — and
-    ``compact_bytes`` — the cadence-amortized compaction writes — so a
-    bench row can show O(batch) vs the rewrite loop's O(index).
-    """
-    from ..operators.dedup import gram_index, incremental_duplicated_spans
-    from ..sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_spansd_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/spans", f"{work}/idx"
-    staged = _stage_days(work, _span_batches(d))
-
-    gram_index(d, "doc_id", "text", k=k).repartition(8, "gh").write.parquet(
-        f"{idx_dir}/base/v0"
-    )
-    man = DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every,
-        log_dir=f"{idx_dir}/_log",
-    )
-    man.checkpoint(-1)  # genesis entry: base exists before the log names it
-
-    body = _span_delta_body(out_dir, idx_dir, man, k, min_span, min_index_count)
-    _run_file_stream(spark, staged, "doc_id long, text string", body)
-    man.vacuum()
-    man.fill_stats(stats)
-    return (
-        spark.read.parquet(out_dir)
-        .select("doc_id", "span_start", "span_end", "span_len")
-        .orderBy("doc_id", "span_start")
-    )
-
-
-def _span_delta_body(
-    out_dir: str,
-    idx_dir: str,
-    man: "DeltaManifest",
-    k: int,
-    min_span: int,
-    min_index_count: int,
-):
-    """The per-batch body shared by the single-run delta loop and the
-    restart runner (one definition — the restart drill must exercise the
-    EXACT production body, not a test-only copy)."""
-    from ..operators.dedup import gram_index, incremental_duplicated_spans
-
-    def probe_then_admit(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        # retry safety (DeltaManifest invariant): the probe reads base ∪
-        # {deltas of EARLIER batches only} — a retried batch may already
-        # have appended its own delta, and self-matching grams would
-        # overwrite the correct output with whole-document spans
-        delta_path = f"{idx_dir}/delta/batch={batch_id}"
-        parts = [sp.read.parquet(p) for p in man.probe_parts(delta_path)]
-        idx = reduce(DataFrame.unionByName, parts)
-        if min_index_count > 1:
-            # count-threshold probes need the TRUE total per gram — a gram
-            # split across parts (n=1 in base, n=1 in a delta) must sum to
-            # 2 before the per-row n >= threshold filter inside the probe.
-            # Compaction keeps this union narrow (one row per distinct
-            # gram per part).
-            idx = idx.groupBy("gh").agg(F.sum("n").alias("n"))
-        # else: presence probe — the raw union suffices, a gram is in the
-        # index iff any base/delta part carries it
-        incremental_duplicated_spans(
-            batch_df, idx, "doc_id", "text", k=k, min_span=min_span,
-            min_index_count=min_index_count,
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        # admit = write ONLY the batch's own gram counts — O(batch)
-        gram_index(batch_df, "doc_id", "text", k=k).repartition(
-            4, "gh"
-        ).write.mode("overwrite").parquet(delta_path)
-        man.admit(delta_path)
-        if man.want_compact():
-            # cadence compaction with the merge_gram_index count algebra
-            # (sum per gram), keyed layout preserved. The CURRENT batch's
-            # delta is left out of the fold (DeltaManifest invariant):
-            # folding it into the base would reintroduce the self-match a
-            # retry's probe exclusion exists to prevent — it survives as
-            # the sole delta and folds at the NEXT batch's compaction.
-            allparts = [
-                sp.read.parquet(p) for p in man.compact_parts(delta_path)
-            ]
-            nxt = f"{idx_dir}/base/v{batch_id + 1}"
-            reduce(DataFrame.unionByName, allparts).groupBy("gh").agg(
-                F.sum("n").alias("n")
-            ).repartition(8, "gh").write.mode("overwrite").parquet(nxt)
-            man.finish_compact(nxt, delta_path)
-        # durable log entry LAST — after every data write it references;
-        # deterministic path + atomic replace make the retry overwrite-safe
-        man.checkpoint(batch_id)
-
-    return probe_then_admit
+    """The span replay with the DELTA-APPEND discipline; output identical
+    to the rewrite twin under the SAME staged oracle. ``stats`` (optional
+    dict) receives ``admit_bytes_per_batch``, ``compact_bytes`` and
+    ``base_bytes``: O(batch) admits against the rewrite's O(index)."""
+    loop = _span_loop(spark, sf_dir, k, min_span, min_index_count)
+    return run_delta(spark, loop, compact_every, stats)
 
 
 def run_streaming_span_dedup_delta_restart(
@@ -383,43 +128,12 @@ def run_streaming_span_dedup_delta_restart(
     compact_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
-    """The restart drill for the span admit loop: the SAME two-day replay
-    and per-batch body as :func:`run_streaming_span_dedup_delta`, but each
-    day runs as its OWN Structured-Streaming query lifetime — the loop
-    "dies" after day 1 and a fresh driver resumes for day 2 with (a) the
-    ``DeltaManifest`` rebuilt from its durable transaction log
-    (``idx/_log/batch=N.json``) and (b) Spark's own ``checkpointLocation``
-    offset tracking skipping day 1's already-processed file. Output is
-    bit-equal to the single-run twin, so the SAME staged DuckDB oracle
-    hash-checks it — the kill-between-days recovery proof the 100 TB
-    multi-day streaming story requires (a real crawl job restarts daily)."""
-    from ..operators.dedup import gram_index
-    from ..sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_spansr_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/spans", f"{work}/idx"
-
-    gram_index(d, "doc_id", "text", k=k).repartition(8, "gh").write.parquet(
-        f"{idx_dir}/base/v0"
-    )
-    log_dir = f"{idx_dir}/_log"
-    DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every, log_dir=log_dir
-    ).checkpoint(-1)
-
-    man = _run_days_with_restarts(
-        spark, work, _span_batches(d), "doc_id long, text string",
-        lambda m: _span_delta_body(out_dir, idx_dir, m, k, min_span, 1),
-        log_dir,
-    )
-    man.vacuum()
-    man.fill_stats(stats)
-    return (
-        spark.read.parquet(out_dir)
-        .select("doc_id", "span_start", "span_end", "span_len")
-        .orderBy("doc_id", "span_start")
-    )
+    """The restart drill for the span loop: each day in its OWN query
+    lifetime, the manifest recovered from its durable log and Spark's
+    ``checkpointLocation`` skipping day 1's file. Bit-equal to
+    :func:`run_streaming_span_dedup_delta` under the SAME staged oracle."""
+    loop = _span_loop(spark, sf_dir, k, min_span)
+    return run_delta(spark, loop, compact_every, stats, restart=True)
 
 
 def run_streaming_span_dedup_time_travel(
@@ -428,134 +142,33 @@ def run_streaming_span_dedup_time_travel(
     k: int = 20,
     compact_every: int = 2,
 ) -> DataFrame:
-    """Time-travel reads over the versioned gram index: run the SAME
-    two-day delta admit loop as :func:`run_streaming_span_dedup_delta`,
-    DEFER the vacuum, then ``DeltaManifest.recover(as_of_batch=N)`` each
-    checkpointed version and aggregate the index view it names. Returns
-    one row per version — ``(as_of_day, n_grams, total_n)`` with day 0 =
-    genesis (history only), day 1 = after day 1's admit, day 2 = after
-    day 2's admit (post-compaction, so the view is the compacted base ∪
-    the surviving delta).
+    """Time travel over the versioned gram index: run the delta span loop,
+    then aggregate the index view each checkpointed version names. One row
+    per version, ``(as_of_day, n_grams, total_n)``: day 0 = history, days 1
+    and 2 = after that day's admit (day 2 post-compaction). The day-1 view
+    read AFTER day 2's admit must equal grams(history ∪ batch 1), counts
+    included; the oracle recomputes each day's corpus from scratch."""
 
-    The contract this pins: every log entry is a FULL as-of snapshot, so
-    the day-1 view read AFTER day 2 was admitted must equal the gram
-    index of (history ∪ batch 1) exactly — counts included, because
-    compaction's fold never touched parts a travel target still names
-    (vacuum, which would, runs only after the reads). The DuckDB oracle
-    recomputes each day's corpus from scratch. Aggregates are a bounded
-    driver readout (one 2-long row per version) so the superseded parts
-    can be vacuumed before returning."""
-    from ..operators.dedup import gram_index
-    from ..sources import read_table
+    def travel(as_of) -> DataFrame:
+        rows = []
+        for day in (0, 1, 2):
+            agg = as_of(day - 1)["grams"].agg(
+                F.count_distinct("gh").alias("n_grams"),
+                F.sum("n").cast("long").alias("total_n"),
+            ).collect()[0]
+            rows.append((day, agg["n_grams"], agg["total_n"]))
+        return spark.createDataFrame(
+            rows, "as_of_day int, n_grams bigint, total_n bigint"
+        ).orderBy("as_of_day")
 
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_spanstt_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/spans", f"{work}/idx"
-    staged = _stage_days(work, _span_batches(d))
-
-    gram_index(d, "doc_id", "text", k=k).repartition(8, "gh").write.parquet(
-        f"{idx_dir}/base/v0"
-    )
-    log_dir = f"{idx_dir}/_log"
-    man = DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every, log_dir=log_dir
-    )
-    man.checkpoint(-1)
-    _run_file_stream(
-        spark, staged, "doc_id long, text string",
-        _span_delta_body(out_dir, idx_dir, man, k, 40, 1),
-    )
-
-    rows = []
-    for day, as_of in ((0, -1), (1, 0), (2, 1)):
-        m = DeltaManifest.recover(log_dir, as_of_batch=as_of)
-        view = reduce(
-            DataFrame.unionByName,
-            [spark.read.parquet(p) for p in (m.base, *m.deltas)],
-        )
-        agg = view.agg(
-            F.count_distinct("gh").alias("n_grams"),
-            F.sum("n").cast("long").alias("total_n"),
-        ).collect()[0]
-        rows.append((day, agg["n_grams"], agg["total_n"]))
-    man.vacuum()  # travel horizon ends here, Delta-Lake-retention style
-    return spark.createDataFrame(
-        rows, "as_of_day int, n_grams bigint, total_n bigint"
-    ).orderBy("as_of_day")
+    loop = _span_loop(spark, sf_dir, k, 40)
+    return run_delta(spark, loop, compact_every, readout=travel)
 
 
-def run_streaming_minhash_probe(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.4,
-) -> DataFrame:
-    """Near-dup daily-crawl dedup as a stream: the MinHash analogue of
-    :func:`run_streaming_span_dedup`. Each micro-batch of documents is
-    LSH-band-probed against the SIGNATURE index as it stood before the
-    batch (``minhash_lsh_probe`` — only the batch is shingled, history
-    text is never re-read), then the batch's own signatures are admitted
-    into the versioned index snapshot for every later batch.
-
-    Two staged days, oldest-mtime-first: day 1 carries near-dups of
-    history (suffix ``' fresh crawl'``) plus novel payload docs; day 2
-    carries near-dups OF DAY 1's novel docs (suffix ``' extra'``,
-    detectable only through the admitted signatures) plus genuinely new
-    docs. Every stage is md5-deterministic, so the banded candidates AND
-    the overlap estimates replay exactly in SQL — including which
-    near-threshold pairs happen to band-collide.
-
-    State discipline: rewrite twin (the signature index is rewritten per
-    admit — O(index)); :func:`run_streaming_minhash_probe_delta` is the
-    O(batch) delta-append twin over the SAME staged days and oracle
-    (signatures are independent rows, so base ∪ deltas IS the index — no
-    count algebra even needed at compaction).
-
-    Returns ``(new_id, index_id, est_jaccard)`` across both days.
-    """
-    from ..operators.dedup import minhash_lsh_probe, minhash_signatures
-    from ..sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_mh_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/pairs", f"{work}/idx"
-    staged = _stage_days(work, _minhash_batches(d))
-
-    minhash_signatures(d, "doc_id", "text", n_hashes=16).select(
-        "doc_id", "sig"
-    ).write.parquet(version_path(idx_dir, 0))
-    superseded: list[str] = []
-
-    def probe_then_admit(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        # batch-id-derived snapshot (v{N}): a retry re-probes the pre-admit
-        # view even though the first attempt already wrote v{N+1}
-        idx = sp.read.parquet(version_path(idx_dir, batch_id))
-        minhash_lsh_probe(
-            batch_df, idx, "doc_id", "text",
-            n_hashes=16, n_bands=4, threshold=threshold,
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        idx.unionByName(
-            minhash_signatures(batch_df, "doc_id", "text", n_hashes=16).select(
-                "doc_id", "sig"
-            )
-        ).write.mode("overwrite").parquet(version_path(idx_dir, batch_id + 1))
-        superseded.append(version_path(idx_dir, batch_id))
-
-    _run_file_stream(spark, staged, "doc_id long, text string", probe_then_admit)
-    _vacuum(superseded)
-    return (
-        spark.read.parquet(out_dir)
-        .select("new_id", "index_id", "est_jaccard")
-        .orderBy("new_id", "index_id")
-    )
-
-
-def _minhash_batches(d: DataFrame) -> list[DataFrame]:
-    """The staged two-day near-dup crawl shared by BOTH minhash admit
-    loops and their DuckDB oracle (expressions must stay in lockstep):
-    day 1 = near-dups of history (suffix ``' fresh crawl'``) + novel
-    payload docs; day 2 = near-dups OF DAY 1's novel docs (suffix
-    ``' extra'``) + genuinely new docs."""
+def _minhash_batches(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Day 1 = near-dups of history (``' fresh crawl'``) + novel docs; day 2
+    = near-dups OF DAY 1's novel docs (``' extra'``, found only through the
+    admitted signatures) + genuinely new docs."""
     novel1 = d.filter(F.col("doc_id") % 20 == 10).select(
         (F.col("doc_id") + F.lit(2_000_000)).alias("doc_id"),
         F.concat(
@@ -585,7 +198,44 @@ def _minhash_batches(d: DataFrame) -> list[DataFrame]:
             ).alias("text"),
         )
     )
-    return [batch1, batch2]
+    return batch1, batch2
+
+
+def _minhash_loop(spark: SparkSession, sf_dir: str, threshold: float) -> AdmitLoop:
+    # md5-deterministic end to end: the oracle replays the banded
+    # candidates and the overlap estimates exactly
+    from ..operators.dedup import minhash_lsh_probe, minhash_signatures
+    from ..sources import read_table
+
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return AdmitLoop(
+        tag="stream_mh",
+        history=d,
+        batches=_minhash_batches(d),
+        schema=_DOCS,
+        admit=lambda df: {
+            "sigs": minhash_signatures(df, "doc_id", "text", n_hashes=16).select(
+                "doc_id", "sig"
+            )
+        },
+        probe=lambda batch_df, view, batch_id: minhash_lsh_probe(
+            batch_df, view["sigs"], "doc_id", "text",
+            n_hashes=16, n_bands=4, threshold=threshold,
+        ),
+        columns=("new_id", "index_id", "est_jaccard"),
+        order=("new_id", "index_id"),
+    )
+
+
+def run_streaming_minhash_probe(
+    spark: SparkSession,
+    sf_dir: str,
+    threshold: float = 0.4,
+) -> DataFrame:
+    """Near-dup crawl dedup as a stream, REWRITE discipline: each batch is
+    LSH-band-probed against the signatures admitted before it. Returns
+    ``(new_id, index_id, est_jaccard)`` across both days."""
+    return run_rewrite(spark, _minhash_loop(spark, sf_dir, threshold))
 
 
 def run_streaming_minhash_probe_delta(
@@ -595,86 +245,11 @@ def run_streaming_minhash_probe_delta(
     compact_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
-    """The same two-day near-dup replay as
-    :func:`run_streaming_minhash_probe` with the DELTA-APPEND state
-    discipline: admitting a batch writes ONLY its own signatures as
-    ``idx/delta/batch=N`` (O(batch) bytes); the probe band-joins against
-    base ∪ earlier deltas. Signatures are independent ``(doc_id, sig)``
-    rows, so base ∪ deltas IS the index — compaction is a plain union
-    rewrite on a cadence, no count algebra at all (simpler even than the
-    span loop's groupBy-sum). Output is identical to the rewrite twin and
-    the SAME staged oracle hash-checks both registrations.
-
-    Retry idempotency matches the span/ANN delta loops: deterministic
-    ``batch=<id>`` overwrite paths, the probe excludes the batch's own
-    delta (a retried batch must not band-match its own signatures), the
-    manifest append is membership-guarded, vacuum only after termination.
-
-    ``stats`` (optional) receives ``admit_bytes_per_batch`` /
-    ``compact_bytes`` / ``base_bytes`` for the O(batch)-vs-O(index)
-    BASELINE comparison.
-    """
-    from ..operators.dedup import minhash_lsh_probe, minhash_signatures
-    from ..sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_mhd_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/pairs", f"{work}/idx"
-    staged = _stage_days(work, _minhash_batches(d))
-
-    minhash_signatures(d, "doc_id", "text", n_hashes=16).select(
-        "doc_id", "sig"
-    ).write.parquet(f"{idx_dir}/base/v0")
-    man = DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every,
-        log_dir=f"{idx_dir}/_log",
-    )
-    man.checkpoint(-1)
-
-    body = _minhash_delta_body(out_dir, idx_dir, man, threshold)
-    _run_file_stream(spark, staged, "doc_id long, text string", body)
-    man.vacuum()
-    man.fill_stats(stats)
-    return (
-        spark.read.parquet(out_dir)
-        .select("new_id", "index_id", "est_jaccard")
-        .orderBy("new_id", "index_id")
-    )
-
-
-def _minhash_delta_body(out_dir: str, idx_dir: str, man: "DeltaManifest", threshold: float):
-    """Per-batch body shared by the single-run minhash delta loop and the
-    restart runner (one definition, same rationale as _span_delta_body)."""
-    from ..operators.dedup import minhash_lsh_probe, minhash_signatures
-
-    def probe_then_admit(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        delta_path = f"{idx_dir}/delta/batch={batch_id}"
-        idx = reduce(
-            DataFrame.unionByName,
-            [sp.read.parquet(p) for p in man.probe_parts(delta_path)],
-        )
-        minhash_lsh_probe(
-            batch_df, idx, "doc_id", "text",
-            n_hashes=16, n_bands=4, threshold=threshold,
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        minhash_signatures(batch_df, "doc_id", "text", n_hashes=16).select(
-            "doc_id", "sig"
-        ).write.mode("overwrite").parquet(delta_path)
-        man.admit(delta_path)
-        if man.want_compact():
-            # plain-union compaction (independent rows, no algebra); the
-            # current batch's delta stays out of the fold — see
-            # DeltaManifest.compact_parts
-            nxt = f"{idx_dir}/base/v{batch_id + 1}"
-            reduce(
-                DataFrame.unionByName,
-                [sp.read.parquet(p) for p in man.compact_parts(delta_path)],
-            ).write.mode("overwrite").parquet(nxt)
-            man.finish_compact(nxt, delta_path)
-        man.checkpoint(batch_id)  # durable log entry last (see span body)
-
-    return probe_then_admit
+    """The minhash replay with the DELTA-APPEND discipline (O(batch)
+    signature admits, plain-union compaction). Identical output to the
+    rewrite twin under the SAME staged oracle; ``stats`` as in
+    :func:`run_streaming_span_dedup_delta`."""
+    return run_delta(spark, _minhash_loop(spark, sf_dir, threshold), compact_every, stats)
 
 
 def run_streaming_minhash_probe_delta_restart(
@@ -684,113 +259,16 @@ def run_streaming_minhash_probe_delta_restart(
     compact_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Restart drill for the minhash admit loop — same two-day replay and
-    per-batch body as :func:`run_streaming_minhash_probe_delta`, each day
-    its own query lifetime with the manifest recovered from the durable
-    transaction log and Spark's ``checkpointLocation`` skipping processed
-    files (see :func:`run_streaming_span_dedup_delta_restart`). Bit-equal
-    output; the SAME staged oracle hash-checks it."""
-    from ..operators.dedup import minhash_signatures
-    from ..sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_mhr_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/pairs", f"{work}/idx"
-
-    minhash_signatures(d, "doc_id", "text", n_hashes=16).select(
-        "doc_id", "sig"
-    ).write.parquet(f"{idx_dir}/base/v0")
-    log_dir = f"{idx_dir}/_log"
-    DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every, log_dir=log_dir
-    ).checkpoint(-1)
-
-    man = _run_days_with_restarts(
-        spark, work, _minhash_batches(d), "doc_id long, text string",
-        lambda m: _minhash_delta_body(out_dir, idx_dir, m, threshold),
-        log_dir,
-    )
-    man.vacuum()
-    man.fill_stats(stats)
-    return (
-        spark.read.parquet(out_dir)
-        .select("new_id", "index_id", "est_jaccard")
-        .orderBy("new_id", "index_id")
-    )
+    """Restart drill for the minhash loop (see
+    :func:`run_streaming_span_dedup_delta_restart`). Bit-equal output."""
+    loop = _minhash_loop(spark, sf_dir, threshold)
+    return run_delta(spark, loop, compact_every, stats, restart=True)
 
 
-def run_streaming_entity_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming record linkage: each micro-batch of customer records
-    probes the ADMITTED master-entity snapshot (operators/entity.py
-    ``blocking_probe`` — blocking-key equi-join + Levenshtein verify,
-    history names never self-join), then the batch is admitted for every
-    later one. The entity-resolution analogue of the span/minhash admit
-    loops above: day-2 typos of day-1 novel records are linkable only
-    through the admission step.
-
-    Two staged days, oldest-mtime-first: day 1 carries one-typo variants
-    of history customers (pos 11 -> 'X') plus novel records with fresh
-    key ranges; day 2 carries typos OF DAY 1's novel records
-    (pos 10 -> 'Z') plus genuinely new ones. Names are built from the
-    same lpad arithmetic in the DuckDB oracle, and Levenshtein is
-    integer-exact, so the probe output replays bit-for-bit (batch 1 vs
-    history, batch 2 vs history + batch 1).
-
-    State discipline: rewrite twin (the master snapshot is rewritten per
-    admit — O(index)); :func:`run_streaming_entity_linkage_delta` is the
-    O(batch) delta-append twin over the SAME staged days and oracle
-    (records are independent rows, so base ∪ deltas IS the master table).
-
-    Returns ``(new_id, index_id, lev_dist)`` across both days.
-    """
-    from ..operators.entity import blocking_probe
-    from ..sources import read_table
-
-    c = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_name").alias("name"),
-        F.col("c_nationkey").alias("nk"),
-    )
-    work = f"/tmp/wdps_stream_er_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/pairs", f"{work}/idx"
-    staged = _stage_days(work, _entity_batches(c))
-
-    c.write.parquet(version_path(idx_dir, 0))
-    superseded: list[str] = []
-
-    def probe_then_admit(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        # batch-id-derived snapshot (v{N}): a retry re-probes the pre-admit
-        # view even though the first attempt already wrote v{N+1}
-        idx = sp.read.parquet(version_path(idx_dir, batch_id))
-        blocking_probe(
-            batch_df, idx, "id", "name", _ENTITY_BLOCK_COLS, max_distance=2
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        idx.unionByName(batch_df.select("id", "name", "nk")).write.mode(
-            "overwrite"
-        ).parquet(version_path(idx_dir, batch_id + 1))
-        superseded.append(version_path(idx_dir, batch_id))
-
-    _run_file_stream(spark, staged, "id long, name string, nk int", probe_then_admit)
-    _vacuum(superseded)
-    return (
-        spark.read.parquet(out_dir)
-        .select("new_id", "index_id", "lev_dist")
-        .orderBy("new_id", "index_id")
-    )
-
-
-def _ENTITY_BLOCK_COLS(df: DataFrame) -> list:
-    """Blocking key shared by both entity admit loops: nation + the name
-    tail neither planted corruption touches."""
-    return [df["nk"], F.substring(df["name"], 13, 6)]
-
-
-def _entity_batches(c: DataFrame) -> list[DataFrame]:
-    """The staged two-day linkage crawl shared by BOTH entity admit loops
-    and their DuckDB oracle (lpad arithmetic must stay in lockstep):
-    day 1 = one-typo variants of history (pos 11 -> 'X') + novel records;
-    day 2 = typos OF DAY 1's novel records (pos 10 -> 'Z') + new ones."""
+def _entity_batches(c: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Day 1 = one-typo variants of history (pos 11 -> 'X') + novel
+    records; day 2 = typos OF DAY 1's novel records (pos 10 -> 'Z') + new
+    ones. Names come from the same lpad arithmetic as the oracle."""
     novel_name = F.concat(
         F.lit("Customer#"), F.lpad((F.col("id") + F.lit(500_000)).cast("string"), 9, "0")
     )
@@ -826,7 +304,40 @@ def _entity_batches(c: DataFrame) -> list[DataFrame]:
             "nk",
         )
     )
-    return [batch1, batch2]
+    return batch1, batch2
+
+
+def _entity_loop(spark: SparkSession, sf_dir: str) -> AdmitLoop:
+    from ..operators.entity import blocking_probe
+    from ..sources import read_table
+
+    c = read_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("id"),
+        F.col("c_name").alias("name"),
+        F.col("c_nationkey").alias("nk"),
+    )
+    return AdmitLoop(
+        tag="stream_er",
+        history=c,
+        batches=_entity_batches(c),
+        schema="id long, name string, nk int",
+        admit=lambda df: {"records": df.select("id", "name", "nk")},
+        # blocking key: nation + the name tail no planted corruption touches
+        probe=lambda batch_df, view, batch_id: blocking_probe(
+            batch_df, view["records"], "id", "name",
+            lambda df: [df["nk"], F.substring(df["name"], 13, 6)], max_distance=2,
+        ),
+        columns=("new_id", "index_id", "lev_dist"),
+        order=("new_id", "index_id"),
+    )
+
+
+def run_streaming_entity_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming record linkage, REWRITE discipline: each batch of customer
+    records probes the admitted master-entity snapshot, then is admitted;
+    day-2 typos of day-1 novel records link only through the admission.
+    Returns ``(new_id, index_id, lev_dist)`` across both days."""
+    return run_rewrite(spark, _entity_loop(spark, sf_dir))
 
 
 def run_streaming_entity_linkage_delta(
@@ -835,80 +346,10 @@ def run_streaming_entity_linkage_delta(
     compact_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
-    """The same two-day linkage replay as
-    :func:`run_streaming_entity_linkage` with the DELTA-APPEND state
-    discipline: admitting a batch writes ONLY its own records as
-    ``idx/delta/batch=N`` (O(batch) bytes); the probe blocking-joins
-    against base ∪ earlier deltas (records are independent rows, so the
-    union IS the master table); compaction is a plain union rewrite on a
-    cadence. Output is identical to the rewrite twin and the SAME staged
-    oracle hash-checks both registrations. Retry idempotency matches the
-    span/minhash/ANN delta loops: deterministic ``batch=<id>`` overwrite
-    paths, own-delta exclusion (a retried batch must not link to its own
-    records), membership-guarded manifest append, vacuum after
-    termination.
-    """
-    from ..operators.entity import blocking_probe
-    from ..sources import read_table
-
-    c = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_name").alias("name"),
-        F.col("c_nationkey").alias("nk"),
-    )
-    work = f"/tmp/wdps_stream_erd_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/pairs", f"{work}/idx"
-    staged = _stage_days(work, _entity_batches(c))
-
-    c.write.parquet(f"{idx_dir}/base/v0")
-    man = DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every,
-        log_dir=f"{idx_dir}/_log",
-    )
-    man.checkpoint(-1)
-
-    body = _entity_delta_body(out_dir, idx_dir, man)
-    _run_file_stream(spark, staged, "id long, name string, nk int", body)
-    man.vacuum()
-    man.fill_stats(stats)
-    return (
-        spark.read.parquet(out_dir)
-        .select("new_id", "index_id", "lev_dist")
-        .orderBy("new_id", "index_id")
-    )
-
-
-def _entity_delta_body(out_dir: str, idx_dir: str, man: "DeltaManifest"):
-    """Per-batch body shared by the single-run entity delta loop and the
-    restart runner (one definition, same rationale as _span_delta_body)."""
-    from ..operators.entity import blocking_probe
-
-    def probe_then_admit(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        delta_path = f"{idx_dir}/delta/batch={batch_id}"
-        idx = reduce(
-            DataFrame.unionByName,
-            [sp.read.parquet(p) for p in man.probe_parts(delta_path)],
-        )
-        blocking_probe(
-            batch_df, idx, "id", "name", _ENTITY_BLOCK_COLS, max_distance=2
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        batch_df.select("id", "name", "nk").write.mode("overwrite").parquet(
-            delta_path
-        )
-        man.admit(delta_path)
-        if man.want_compact():
-            # plain-union compaction; current batch's delta stays out of
-            # the fold — see DeltaManifest.compact_parts
-            nxt = f"{idx_dir}/base/v{batch_id + 1}"
-            reduce(
-                DataFrame.unionByName,
-                [sp.read.parquet(p) for p in man.compact_parts(delta_path)],
-            ).write.mode("overwrite").parquet(nxt)
-            man.finish_compact(nxt, delta_path)
-        man.checkpoint(batch_id)  # durable log entry last (see span body)
-
-    return probe_then_admit
+    """The linkage replay with the DELTA-APPEND discipline (O(batch) record
+    admits, plain-union compaction). Identical output to the rewrite twin
+    under the SAME staged oracle."""
+    return run_delta(spark, _entity_loop(spark, sf_dir), compact_every, stats)
 
 
 def run_streaming_entity_linkage_delta_restart(
@@ -917,37 +358,6 @@ def run_streaming_entity_linkage_delta_restart(
     compact_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Restart drill for the entity-linkage admit loop — same two-day
-    replay and per-batch body as :func:`run_streaming_entity_linkage_delta`,
-    each day its own query lifetime with the manifest recovered from the
-    durable transaction log and Spark's ``checkpointLocation`` skipping
-    processed files (see :func:`run_streaming_span_dedup_delta_restart`).
-    Bit-equal output; the SAME staged oracle hash-checks it."""
-    from ..sources import read_table
-
-    c = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_name").alias("name"),
-        F.col("c_nationkey").alias("nk"),
-    )
-    work = f"/tmp/wdps_stream_err_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/pairs", f"{work}/idx"
-
-    c.write.parquet(f"{idx_dir}/base/v0")
-    log_dir = f"{idx_dir}/_log"
-    DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every, log_dir=log_dir
-    ).checkpoint(-1)
-
-    man = _run_days_with_restarts(
-        spark, work, _entity_batches(c), "id long, name string, nk int",
-        lambda m: _entity_delta_body(out_dir, idx_dir, m),
-        log_dir,
-    )
-    man.vacuum()
-    man.fill_stats(stats)
-    return (
-        spark.read.parquet(out_dir)
-        .select("new_id", "index_id", "lev_dist")
-        .orderBy("new_id", "index_id")
-    )
+    """Restart drill for the entity-linkage loop (see
+    :func:`run_streaming_span_dedup_delta_restart`). Bit-equal output."""
+    return run_delta(spark, _entity_loop(spark, sf_dir), compact_every, stats, restart=True)

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..scratch import run_dir
+
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -211,7 +213,7 @@ def run_foreachbatch_upsert_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil
 
     events = read_events_stream(spark, sf_dir)
-    state_dir = f"/tmp/wdps_upsert_state_{uuid.uuid4().hex[:8]}"
+    state_dir = run_dir("upsert_state")
     cur: dict[str, str | None] = {"path": None}  # snapshot pointer, not state
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -271,7 +273,7 @@ def _stage_events_with_sentinels(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    staged = f"/tmp/wdps_stage_{uuid.uuid4().hex[:8]}"
+    staged = run_dir("stage")
     os.makedirs(staged)
     src = f"{sf_dir}/events.parquet"
     dst = f"{staged}/a_events.parquet"

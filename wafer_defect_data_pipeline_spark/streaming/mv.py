@@ -18,11 +18,12 @@ decimal path.
 
 from __future__ import annotations
 
-import uuid
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..scratch import run_dir
 
 
 def maintain_q1_mv(spark: SparkSession, sf_dir: str, n_files: int = 4) -> DataFrame:
@@ -36,7 +37,7 @@ def maintain_q1_mv(spark: SparkSession, sf_dir: str, n_files: int = 4) -> DataFr
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount"
     )
-    stage = f"/tmp/wdps_mv_stage_{uuid.uuid4().hex[:8]}"
+    stage = run_dir("mv_stage")
     li.repartition(n_files).write.mode("overwrite").parquet(stage)
 
     schema = spark.read.parquet(stage).schema

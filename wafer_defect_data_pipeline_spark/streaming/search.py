@@ -1,70 +1,36 @@
 """Streaming inverted-index maintenance: a standing BM25 query over a
 growing corpus.
 
-The search-family member of the streaming admit loops (streaming/dedup.py,
-streaming/similarity.py): each arriving batch of documents is INDEXED
-incrementally — postings, doc lengths, and corpus stats are admitted as
-O(batch) deltas — and a STANDING query (the continuous-retrieval /
-alerting shape: "tell me the top-10 for these terms every day") is
-re-scored against the index after each admit. Day-2 rankings shift both
-because new docs compete AND because the corpus stats (N, avgdl, df)
-moved — the property the staged oracle pins by replaying each day's full
-corpus from scratch.
-
-State = three parquet relations per part, all delta-appendable:
-
-- ``postings`` (term, doc_id, tf): one row per (term, doc) — independent
-  rows (a doc is indexed exactly once), so base ∪ deltas IS the posting
-  relation; the probe filters to the query terms, so parquet predicate
-  pushdown keeps the read proportional to query-term hits, not index
-  size. At 100 TB the postings would be bucketed by term.
-- ``doclens`` (doc_id, dl): independent rows, same argument.
-- ``stats`` (n_docs, sum_dl): ONE row per part — the mergeable-aggregate
-  algebra (sum across parts == recompute over the union, exact because
-  both fields are integer counts). This is the third state algebra the
-  admit loops demonstrate: presence (span grams), independent-row union
-  (signatures / vectors / records), and now summable aggregates.
-
-df(term) needs no stored state: postings rows are unique per (term, doc),
-so df is a count over the term-filtered union — already narrow.
-
-Idempotency matches the other loops (invariants in
-streaming/state.DeltaManifest): deterministic ``batch=<id>`` overwrite
-paths for outputs and deltas, membership-guarded manifest appends, vacuum
-after termination. The probe here runs AFTER the admit on purpose — a
-standing query reports the corpus INCLUDING today's crawl — so the view
-is built with ``include_own=True``; retry safety still holds because the
-current batch's delta is never folded into a compacted base
-(``compact_parts`` excludes it), so the batch's rows appear in the view
-exactly once no matter where a prior attempt died.
-:func:`run_streaming_bm25_standing_restart` is the kill-between-days
-drill: each day in its own query lifetime, manifest rebuilt from the
-durable log, shared ``checkpointLocation`` — same staged oracle.
-
-No reference analogue (the reference is a single-table batch ETL —
-/root/reference/src/preprocessing.py); extension surface per SURVEY.md
-§2.9 and the search family in plans/queries_search.py, whose scoring
+The search-family admit loop (engine and rationale in
+``streaming/admit.py``): each arriving batch is INDEXED incrementally —
+postings, doc lengths and corpus stats admitted as O(batch) deltas — and a
+STANDING query (the alerting shape: "the top-10 for these terms, every
+day") is re-scored after each admit, so its view includes the day's own
+crawl. Day-2 rankings shift because new docs compete AND because N, avgdl
+and df moved — what the staged oracle pins by replaying each day's full
+corpus. State = three relations per part: ``postings`` (term, doc_id, tf)
+and ``doclens`` (doc_id, dl) are independent rows — the probe filters
+postings to the query terms, so predicate pushdown keeps the read
+proportional to query-term hits — and ``stats`` (n_docs, sum_dl) is one
+summable row. df(term) needs no state: postings rows are unique per
+(term, doc), so df is a count over the term-filtered union. The scoring
 expressions (k1=1.2, b=0.75, +1-smoothed idf, 6dp-rounded DECIMAL(18,6)
-contribution sums) this loop reuses verbatim.
+contribution sums) are plans/queries_search.py's, verbatim.
 """
 
 from __future__ import annotations
 
-import uuid
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .dedup import _run_file_stream, _stage_days
-from .state import DeltaManifest
+from .admit import AdmitLoop, run_delta
 
 _K1 = 1.2
 _B = 0.75
 _QUERY_TERMS = ["join", "hash", "filter"]
 
 
-def _search_batches(d: DataFrame) -> list[DataFrame]:
+def _search_batches(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The staged two-day crawl shared with the DuckDB oracle: each day's
     docs are suffixed copies of history text (guaranteed to carry the
     standing query's terms), so every admitted doc competes in the
@@ -86,11 +52,11 @@ def _search_batches(d: DataFrame) -> list[DataFrame]:
             "doc_id long, text string",
         )
     )
-    return [batch1, batch2]
+    return batch1, batch2
 
 
-def _index_parts(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(postings, doclens, stats) for a document frame — the same token
+def _index_parts(df: DataFrame) -> dict[str, DataFrame]:
+    """postings, doclens and stats for a document frame — the same token
     pipeline as plans/queries_search.py's batch BM25."""
     from ..functions.text import token_count, tokens
 
@@ -103,24 +69,21 @@ def _index_parts(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("sum_dl"),
     )
-    return postings, doclens, stats
+    return {"postings": postings, "doclens": doclens, "stats": stats}
 
 
-def _score_standing_query(sp, parts: list[str], k: int) -> DataFrame:
-    postings = reduce(
-        DataFrame.unionByName, [sp.read.parquet(f"{p}/postings") for p in parts]
-    ).filter(F.col("term").isin(_QUERY_TERMS))
-    doclens = reduce(
-        DataFrame.unionByName, [sp.read.parquet(f"{p}/doclens") for p in parts]
+def _sum_stats(stats: DataFrame) -> DataFrame:
+    return stats.agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("sum_dl").cast("long").alias("sum_dl"),
     )
-    st = (
-        reduce(
-            DataFrame.unionByName, [sp.read.parquet(f"{p}/stats") for p in parts]
-        )
-        .agg(
-            F.sum("n_docs").cast("double").alias("n_docs"),
-            (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
-        )
+
+
+def _score_standing_query(view: dict[str, DataFrame], k: int) -> DataFrame:
+    postings = view["postings"].filter(F.col("term").isin(_QUERY_TERMS))
+    st = view["stats"].agg(
+        F.sum("n_docs").cast("double").alias("n_docs"),
+        (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
     )
     df_ = postings.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
@@ -137,7 +100,7 @@ def _score_standing_query(sp, parts: list[str], k: int) -> DataFrame:
     )
     scored = (
         postings.join(F.broadcast(df_), on="term")
-        .join(doclens, on="doc_id")
+        .join(view["doclens"], on="doc_id")
         .crossJoin(F.broadcast(st))
         .select("doc_id", F.round(contrib, 6).cast("decimal(18,6)").alias("c"))
     )
@@ -156,63 +119,23 @@ def _score_standing_query(sp, parts: list[str], k: int) -> DataFrame:
     )
 
 
-def _bm25_body(out_dir: str, idx_dir: str, man: DeltaManifest, k: int):
-    """The per-batch body shared by the single-run standing-query loop and
-    the restart runner (one definition — the restart drill must exercise
-    the EXACT production body, not a test-only copy)."""
+def _bm25_loop(spark: SparkSession, sf_dir: str, k: int) -> AdmitLoop:
+    from ..sources import read_table
 
-    def admit_then_score(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        delta_path = f"{idx_dir}/delta/batch={batch_id}"
-        bp, bl, bs = _index_parts(batch_df)
-        bp.write.mode("overwrite").parquet(f"{delta_path}/postings")
-        bl.write.mode("overwrite").parquet(f"{delta_path}/doclens")
-        bs.write.mode("overwrite").parquet(f"{delta_path}/stats")
-        man.admit(delta_path)  # membership-guarded: a retry never double-counts
-        # standing query reports the corpus INCLUDING today's crawl —
-        # include_own makes self-inclusion explicit AND retry-safe: even
-        # if a prior attempt's compaction already ran, the current delta
-        # is never folded into the base (DeltaManifest.compact_parts), so
-        # it appears in the view exactly once
-        parts = man.probe_parts(delta_path, include_own=True)
-        _score_standing_query(sp, parts, k).withColumn(
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return AdmitLoop(
+        tag="stream_bm25",
+        history=d,
+        batches=_search_batches(d),
+        schema="doc_id long, text string",
+        admit=_index_parts,
+        probe=lambda batch_df, view, batch_id: _score_standing_query(view, k).withColumn(
             "day", F.lit(batch_id + 1).cast("int")
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        if man.want_compact():
-            fold = man.compact_parts(delta_path)
-            nxt = f"{idx_dir}/base/v{batch_id + 1}"
-            for rel in ("postings", "doclens"):
-                reduce(
-                    DataFrame.unionByName,
-                    [sp.read.parquet(f"{p}/{rel}") for p in fold],
-                ).write.mode("overwrite").parquet(f"{nxt}/{rel}")
-            # stats compaction = the sum algebra, one row out
-            reduce(
-                DataFrame.unionByName,
-                [sp.read.parquet(f"{p}/stats") for p in fold],
-            ).agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("sum_dl").cast("long").alias("sum_dl"),
-            ).write.mode("overwrite").parquet(f"{nxt}/stats")
-            man.finish_compact(nxt, delta_path)
-        man.checkpoint(batch_id)  # durable log entry last (see streaming/dedup)
-
-    return admit_then_score
-
-
-def _write_base(idx_dir: str, p0, l0, s0) -> str:
-    base = f"{idx_dir}/base/v0"
-    p0.write.parquet(f"{base}/postings")
-    l0.write.parquet(f"{base}/doclens")
-    s0.write.parquet(f"{base}/stats")
-    return base
-
-
-def _read_pages(spark: SparkSession, out_dir: str) -> DataFrame:
-    return (
-        spark.read.parquet(out_dir)
-        .select("day", "rank", "doc_id", "bm25")
-        .orderBy("day", "rank")
+        ),
+        columns=("day", "rank", "doc_id", "bm25"),
+        order=("day", "rank"),
+        folds={"stats": _sum_stats},
+        probe_after_admit=True,
     )
 
 
@@ -226,33 +149,10 @@ def run_streaming_bm25_standing(
     """Bounded replay of the two-day crawl with a standing 3-term BM25
     query re-scored after each day's admit. Returns
     ``(day, rank, doc_id, bm25)`` — top-``k`` per day, day = 1-based
-    micro-batch number.
-
-    Per-batch cost: indexing the batch (its own explode + aggs), three
-    O(batch) delta writes, then a probe whose posting read is filtered to
-    the query terms (predicate pushdown) and whose stats read is one row
-    per part. History text is never re-tokenized.
-    """
-    from ..sources import read_table
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_bm25_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/hits", f"{work}/idx"
-    staged = _stage_days(work, _search_batches(d))
-
-    base = _write_base(idx_dir, *_index_parts(d))
-    man = DeltaManifest(
-        base, compact_every=compact_every, log_dir=f"{idx_dir}/_log"
-    )
-    man.checkpoint(-1)
-
-    _run_file_stream(
-        spark, staged, "doc_id long, text string",
-        _bm25_body(out_dir, idx_dir, man, k),
-    )
-    man.vacuum()
-    man.fill_stats(stats_out)
-    return _read_pages(spark, out_dir)
+    micro-batch number. History text is never re-tokenized. ``stats_out``
+    receives ``admit_bytes_per_batch``, ``compact_bytes`` and
+    ``base_bytes``."""
+    return run_delta(spark, _bm25_loop(spark, sf_dir, k), compact_every, stats_out)
 
 
 def run_streaming_bm25_standing_restart(
@@ -262,33 +162,9 @@ def run_streaming_bm25_standing_restart(
     compact_every: int = 3,
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """The kill-between-days restart drill for the standing-query loop:
-    the SAME two-day replay and per-batch body as
-    :func:`run_streaming_bm25_standing`, but each day runs as its OWN
-    Structured-Streaming query lifetime — the loop "dies" after day 1 and
-    a fresh driver resumes for day 2 with (a) the ``DeltaManifest``
-    rebuilt from its durable transaction log (``idx/_log/batch=N.json``)
-    and (b) Spark's own ``checkpointLocation`` offset tracking skipping
-    day 1's already-processed file. Output is bit-equal to the single-run
-    twin (including day 1's page, already written before the "crash"), so
-    the SAME staged DuckDB oracle hash-checks it — the alerting shape a
-    multi-day standing query actually runs under."""
-    from ..sources import read_table
-    from .dedup import _run_days_with_restarts
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = f"/tmp/wdps_stream_bm25r_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/hits", f"{work}/idx"
-
-    base = _write_base(idx_dir, *_index_parts(d))
-    log_dir = f"{idx_dir}/_log"
-    DeltaManifest(base, compact_every=compact_every, log_dir=log_dir).checkpoint(-1)
-
-    man = _run_days_with_restarts(
-        spark, work, _search_batches(d), "doc_id long, text string",
-        lambda m: _bm25_body(out_dir, idx_dir, m, k),
-        log_dir,
-    )
-    man.vacuum()
-    man.fill_stats(stats_out)
-    return _read_pages(spark, out_dir)
+    """The kill-between-days restart drill for the standing-query loop: each
+    day in its OWN query lifetime, the manifest recovered from its log.
+    Bit-equal to :func:`run_streaming_bm25_standing` (day 1's page
+    included, written before the "crash") under the SAME staged oracle."""
+    loop = _bm25_loop(spark, sf_dir, k)
+    return run_delta(spark, loop, compact_every, stats_out, restart=True)

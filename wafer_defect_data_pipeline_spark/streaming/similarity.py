@@ -1,36 +1,21 @@
 """Streaming ANN admit loop: probe the admitted vector index per batch.
 
-The similarity-family member of the streaming daily-crawl loops
-(streaming/dedup.py): each arriving batch of embeddings is (1) top-k
-probed against the vector index as it stood BEFORE the batch — history is
-the authority, a batch never retrieves itself — and (2) admitted into the
-versioned index snapshot for every later batch. Day-2 near-duplicates of
-day-1 vectors are retrievable only through the admission step, which is
-the property the staged oracle pins.
-
-State discipline: DELTA-APPEND (the 100 TB path, same layout as
-``streaming/dedup.run_streaming_span_dedup_delta``): admitting a batch
-writes ONLY its own vectors as ``idx/delta/batch=N`` — an O(batch) write
-— and the probe reads base ∪ earlier deltas. Vectors are independent
-rows, so base ∪ deltas IS the index (no count algebra even needed); a
-cadence compaction folds deltas into a new base to bound the part-file
-count. Idempotency is structural, matching the span loops: per-batch
-outputs and deltas go to deterministic ``batch=<id>`` paths in overwrite
-mode, the probe EXCLUDES the batch's own delta (a retry that died after
-its admit write must not retrieve itself), the manifest append is
-membership-guarded, and superseded snapshots are vacuumed only after the
-query terminates. The probe is ``brute_force_topk`` with the exact HOF
-contract (the batch broadcasts, the index is scanned once); a production
-deployment swaps in the IVF/NSW probe against the same snapshot layout —
-the admit loop does not change.
+The similarity-family admit loop (engine and rationale in
+``streaming/admit.py``): each batch of embeddings is top-k probed against
+the vector index as it stood BEFORE the batch, then admitted; day-2
+near-duplicates of day-1 vectors are retrievable only through the
+admission. Delta-append only: vectors are independent rows, so base ∪
+deltas IS the index and compaction is a plain union. The probe is
+``brute_force_topk`` with the exact HOF contract; a production deployment
+swaps in the IVF/NSW probe against the same snapshot layout.
 """
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .admit import AdmitLoop, run_delta
 
 
 def _md5_vec(prefix: str, id_col, dim: int = 64):
@@ -52,14 +37,11 @@ def _md5_vec(prefix: str, id_col, dim: int = 64):
     )
 
 
-def _ann_batches(e: DataFrame) -> list[DataFrame]:
-    """The staged two-day embedding crawl shared by the ANN admit loops
-    (and their DuckDB oracle — the vector expressions here and in the
-    registered SQL must stay in lockstep). Day 1: perturbed near-dups of
-    history vectors (+0.05 on dim 0 — the semantic-dedup plant) plus
-    novel md5 vectors; day 2: perturbed near-dups OF DAY 1's novel
-    vectors (their true nearest neighbour exists only via the admission
-    step) plus genuinely new vectors."""
+def _ann_batches(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The staged two-day embedding crawl, in lockstep with the registered
+    SQL. Day 1: near-dups of history (+0.05 on dim 0) plus novel md5
+    vectors; day 2: near-dups OF DAY 1's novel vectors (whose true nearest
+    neighbour exists only via the admission step) plus new vectors."""
     near1 = e.filter(F.col("vec_id") % 40 == 0).select(
         (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
         F.transform(
@@ -97,64 +79,32 @@ def _ann_batches(e: DataFrame) -> list[DataFrame]:
         )
     )
     batch2 = near2.unionByName(new2)
-    return [batch1, batch2]
+    return batch1, batch2
 
 
-def _ann_body(out_dir: str, idx_dir: str, man, k: int):
-    """The per-batch body shared by the single-run ANN loop and the
-    restart runner (one definition — the restart drill must exercise the
-    EXACT production body, not a test-only copy)."""
+def _ann_loop(spark: SparkSession, sf_dir: str, k: int) -> AdmitLoop:
+    from ..functions.arrays import as_double
     from ..operators.similarity import brute_force_topk
+    from ..sources import read_table
 
-    def probe_then_admit(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
-        sp = batch_df.sparkSession
-        # retry safety: exclude the batch's own delta — a retry that died
-        # between its admit write and the batch's completion must probe
-        # the pre-admit view, not retrieve itself at cos_sim=1
-        delta_path = f"{idx_dir}/delta/batch={batch_id}"
-        idx = reduce(
-            DataFrame.unionByName,
-            [sp.read.parquet(p) for p in man.probe_parts(delta_path)],
-        )
-        # default size gate: under ~2M pairs (the driver's sf0.01) the probe
-        # is the HOF fold; past it the tie-exact Arrow/BLAS kernel serves
-        # the SAME contract (6dp-round-before-prune, lowest-id ties —
-        # hash-verified against the fold), so the staged oracle replays
-        # either branch. Forcing the fold here measured 544 s at sf1; the
-        # gate is the whole point of the delegation work.
-        brute_force_topk(idx, batch_df, k=k).write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
-        )
-        # admit = write ONLY the batch's own vectors — O(batch); vectors
-        # are independent rows, so base ∪ deltas IS the index
-        batch_df.select("vec_id", "embedding").write.mode("overwrite").parquet(
-            delta_path
-        )
-        man.admit(delta_path)
-        if man.want_compact():
-            # plain-union compaction, bounds the part-file count the
-            # probe's union must open; the current batch's delta stays out
-            # of the fold (DeltaManifest invariant)
-            nxt = f"{idx_dir}/base/v{batch_id + 1}"
-            reduce(
-                DataFrame.unionByName,
-                [sp.read.parquet(p) for p in man.compact_parts(delta_path)],
-            ).write.mode("overwrite").parquet(nxt)
-            man.finish_compact(nxt, delta_path)
-        man.checkpoint(batch_id)  # durable log entry last (see streaming/dedup)
-
-    return probe_then_admit
-
-
-def _ann_read_hits(spark: SparkSession, out_dir: str) -> DataFrame:
-    # explicit select: partition discovery over out/batch=<id> adds a
-    # synthetic `batch` column the registered schema must not carry
-    return (
-        spark.read.parquet(out_dir)
-        .select("query_id", "rank", "corpus_id", "cos_sim")
-        .orderBy("query_id", "rank")
+    e = read_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("embedding")
+    )
+    return AdmitLoop(
+        tag="stream_ann",
+        history=e,
+        batches=_ann_batches(e),
+        schema="vec_id long, embedding array<double>",
+        admit=lambda df: {"vectors": df.select("vec_id", "embedding")},
+        # default size gate: under ~2M pairs the probe is the HOF fold; past
+        # it the tie-exact Arrow/BLAS kernel serves the SAME contract
+        # (6dp-round-before-prune, lowest-id ties), so the staged oracle
+        # replays either branch. Forcing the fold measured 544 s at sf1.
+        probe=lambda batch_df, view, batch_id: brute_force_topk(
+            view["vectors"], batch_df, k=k
+        ),
+        columns=("query_id", "rank", "corpus_id", "cos_sim"),
+        order=("query_id", "rank"),
     )
 
 
@@ -168,44 +118,9 @@ def run_streaming_ann_probe(
     """Bounded replay of the two-day embedding crawl
     (:func:`_ann_batches`), oldest-mtime-first, one file per micro-batch.
     Returns top-``k`` retrievals for every batch query:
-    ``(query_id, rank, corpus_id, cos_sim)``.
-    """
-    from ..functions.arrays import as_double
-    from ..sources import read_table
-    from .dedup import _stage_days
-
-    e = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("embedding")
-    )
-    work = f"/tmp/wdps_stream_ann_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/hits", f"{work}/idx"
-    staged = _stage_days(work, _ann_batches(e))
-
-    e.write.parquet(f"{idx_dir}/base/v0")
-    # retry-correctness invariants (own-delta exclusion on probe AND
-    # compaction, guarded appends, vacuum-after-termination) live in
-    # streaming/state.DeltaManifest, shared by all five admit loops
-    from .state import DeltaManifest
-
-    man = DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every,
-        log_dir=f"{idx_dir}/_log",
-    )
-    man.checkpoint(-1)
-
-    body = _ann_body(out_dir, idx_dir, man, k)
-    q = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(body)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    man.vacuum()  # only after termination: a retry re-reads its view
-    man.fill_stats(stats)
-    return _ann_read_hits(spark, out_dir)
+    ``(query_id, rank, corpus_id, cos_sim)``. ``stats`` receives
+    ``admit_bytes_per_batch``, ``compact_bytes`` and ``base_bytes``."""
+    return run_delta(spark, _ann_loop(spark, sf_dir, k), compact_every, stats)
 
 
 def run_streaming_ann_probe_restart(
@@ -215,37 +130,7 @@ def run_streaming_ann_probe_restart(
     compact_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
-    """The kill-between-days restart drill for the ANN admit loop: the
-    SAME two-day replay and per-batch body as
-    :func:`run_streaming_ann_probe`, but each day runs as its OWN
-    Structured-Streaming query lifetime — the loop "dies" after day 1 and
-    a fresh driver resumes for day 2 with (a) the ``DeltaManifest``
-    rebuilt from its durable transaction log (``idx/_log/batch=N.json``)
-    and (b) Spark's own ``checkpointLocation`` offset tracking skipping
-    day 1's already-processed file. Output is bit-equal to the single-run
-    twin, so the SAME staged DuckDB oracle hash-checks it."""
-    from ..functions.arrays import as_double
-    from ..sources import read_table
-    from .dedup import _run_days_with_restarts
-    from .state import DeltaManifest
-
-    e = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("embedding")
-    )
-    work = f"/tmp/wdps_stream_annr_{uuid.uuid4().hex[:8]}"
-    out_dir, idx_dir = f"{work}/hits", f"{work}/idx"
-
-    e.write.parquet(f"{idx_dir}/base/v0")
-    log_dir = f"{idx_dir}/_log"
-    DeltaManifest(
-        f"{idx_dir}/base/v0", compact_every=compact_every, log_dir=log_dir
-    ).checkpoint(-1)
-
-    man = _run_days_with_restarts(
-        spark, work, _ann_batches(e), "vec_id long, embedding array<double>",
-        lambda m: _ann_body(out_dir, idx_dir, m, k),
-        log_dir,
-    )
-    man.vacuum()
-    man.fill_stats(stats)
-    return _ann_read_hits(spark, out_dir)
+    """The kill-between-days restart drill for the ANN loop: each day in
+    its OWN query lifetime, the manifest recovered from its durable log.
+    Bit-equal to :func:`run_streaming_ann_probe` under the SAME oracle."""
+    return run_delta(spark, _ann_loop(spark, sf_dir, k), compact_every, stats, restart=True)
