@@ -824,6 +824,31 @@ def test_cluster_assignment_plan_has_no_cartesian(spark, sf_small):
     assert "BroadcastHashJoin" in plan
 
 
+def test_upsert_merge_batch_replay_is_idempotent(spark, tmp_path):
+    """The foreachBatch upsert body may be replayed for one batch id (a
+    retry after a failure, before or after the snapshot pointer moved):
+    replaying batch 1 rewrites the same v1 snapshot instead of failing on
+    the existing path or merging the batch into itself."""
+    from wafer_defect_data_pipeline_spark.streaming.events import _upsert_merge_batch
+
+    schema = "user_id long, value double"
+    b0 = spark.createDataFrame([(1, 1.0), (2, 2.0)], schema)
+    b1 = spark.createDataFrame([(1, 10.0), (3, 3.0)], schema)
+    state, committed = str(tmp_path), []
+
+    def snapshot():
+        return sorted(map(tuple, spark.read.parquet(f"{state}/v{committed[-1]}").collect()))
+
+    _upsert_merge_batch(b0, 0, state, committed)
+    _upsert_merge_batch(b1, 1, state, committed)
+    first = snapshot()
+    assert first == [(1, 2, 11.0), (2, 1, 2.0), (3, 1, 3.0)]
+    _upsert_merge_batch(b1, 1, state, committed)
+    assert committed == [0, 1] and snapshot() == first
+    _upsert_merge_batch(b0, 2, state, committed)
+    assert committed == [1, 2] and not (tmp_path / "v0").exists()
+
+
 def test_merge_upsert_scan_prunes_columns(spark, sf_small):
     """The MERGE reads only (o_orderkey, o_totalprice) from the 9-column
     orders table — pruning must reach the scan."""
@@ -1161,16 +1186,19 @@ def test_streaming_on_rocksdb_state_store(spark, sf_small):
 
 def test_compaction_reduces_physical_files(spark, sf_small):
     """compaction_small_files must actually rewrite the layout: the reported
-    counts are checked against the real file listing on disk."""
-    import tempfile
+    counts are checked against the real file listing on disk (the query's
+    one new ``compaction_*`` run dir)."""
     from pathlib import Path
 
     from wafer_defect_data_pipeline_spark.plans.registry import all_queries
+    from wafer_defect_data_pipeline_spark.scratch import scratch_dir
 
+    root = Path(scratch_dir("run"))
+    seen = set(root.glob("compaction_*"))
     row = all_queries()["compaction_small_files"](spark, sf_small).first()
-    tag = Path(sf_small).name
-    before = len(list((Path(tempfile.gettempdir()) / f"wdps_shatter_{tag}").glob("part-*")))
-    after = len(list((Path(tempfile.gettempdir()) / f"wdps_compact_{tag}").glob("part-*")))
+    (work,) = set(root.glob("compaction_*")) - seen
+    before = len(list((work / "shatter").glob("part-*")))
+    after = len(list((work / "compact").glob("part-*")))
     assert (row.files_before, row.files_after) == (before, after)
     assert row.files_after < row.files_before
 

@@ -123,18 +123,8 @@ def test_asof_join_matches_bruteforce(spark, left, right):
             assert (row["asof_ts"], row["asof_val"]) == (exp_ts, exp_v)
 
 
-@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(lambda e: e[0] != e[1]),
-        min_size=1,
-        max_size=20,
-    )
-)
-def test_connected_components_matches_union_find(spark, edges):
-    from wafer_defect_data_pipeline_spark.operators.graph import connected_components
-
-    # reference: driver-side union-find with min-id canonical labels
+def _union_find_components(edges):
+    """Reference: driver-side union-find with min-id canonical labels."""
     parent: dict[int, int] = {}
 
     def find(x):
@@ -148,7 +138,21 @@ def test_connected_components_matches_union_find(spark, edges):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    expected = {v: find(v) for v in parent}
+    return {v: find(v) for v in parent}
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(lambda e: e[0] != e[1]),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_connected_components_matches_union_find(spark, edges):
+    from wafer_defect_data_pipeline_spark.operators.graph import connected_components
+
+    expected = _union_find_components(edges)
 
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     got = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
@@ -409,3 +413,76 @@ def test_merge_components_equals_full_recompute(spark, old_edges, new_edges):
     full = {r.id: r.component for r in connected_components(full_df).collect()}
     expect = {(i, full.get(i, i)) for i in set(all_ids) | {x for e in new_edges for x in e}}
     assert merged == expect
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    edges=st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=1, max_size=40),
+    flip=st.lists(st.booleans(), max_size=40),
+)
+def test_min_label_kernel_matches_union_find(edges, flip):
+    """The one-task CC kernel equals union-find on graphs with self-loops,
+    duplicate edges and both orientations of one edge."""
+    from wafer_defect_data_pipeline_spark.operators.graph import _min_label_kernel
+
+    edges = edges + [(b, a) for (a, b), f in zip(edges, flip) if f]
+    out = _min_label_kernel(pd.DataFrame(edges, columns=["a", "b"]))
+    assert dict(zip(out["id"].tolist(), out["component"].tolist())) == _union_find_components(edges)
+
+
+def test_auto_cc_branches_on_edge_gate(spark):
+    """Below the edge gate auto runs the one-task kernel (a 10k-node chain
+    comes back as one component named 0, with a FlatMapGroupsInPandas in
+    the plan); a gate of 0 takes the relational branch (no kernel in the
+    plan, and a long chain still falls back to star); empty pairs give an
+    empty frame; output types follow the input ids."""
+    from wafer_defect_data_pipeline_spark.operators.graph import connected_components_auto
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    chain = spark.createDataFrame([(i + 1, i) for i in range(9_999)], "id_a long, id_b long")
+    comp = connected_components_auto(chain)
+    assert "FlatMapGroupsInPandas" in plan(comp)
+    got = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n")).collect()
+    assert [(r.component, r.n) for r in got] == [(0, 10_000)]
+
+    short = spark.createDataFrame([(i, i + 1) for i in range(63)], "id_a long, id_b long")
+    relational = connected_components_auto(short, probe_rounds=4, max_iter=12, local_max_edges=0)
+    assert "FlatMapGroupsInPandas" not in plan(relational)
+    assert {r.id: r.component for r in relational.collect()} == {i: 0 for i in range(64)}
+
+    empty = connected_components_auto(spark.createDataFrame([], "id_a long, id_b long"))
+    assert empty.collect() == []
+    assert [f.dataType.simpleString() for f in empty.schema] == ["bigint", "bigint"]
+
+    ints = spark.createDataFrame([(3, 1), (5, 5)], "id_a int, id_b int")
+    small = connected_components_auto(ints)
+    assert [f.dataType.simpleString() for f in small.schema] == ["int", "int"]
+    assert sorted(map(tuple, small.collect())) == [(1, 1), (3, 1), (5, 5)]
+
+
+def test_strip_by_spans_edge_cases(spark):
+    """The span-strip rebuild: spans covering a whole doc give "" with the
+    right counts, adjacent spans cut cleanly whatever their input order,
+    and a doc without spans passes through with zeros."""
+    from wafer_defect_data_pipeline_spark.operators.dedup import _strip_by_spans
+
+    docs = spark.createDataFrame(
+        [(1, "abcdefghij"), (2, "abcdefghij"), (3, "untouched"), (4, "xyz")],
+        "doc_id long, text string",
+    )
+    spans = spark.createDataFrame(
+        [(1, 4, 10), (1, 0, 4), (2, 4, 6), (2, 2, 4), (4, 0, 3)],
+        "doc_id long, span_start int, span_end int",
+    )
+    out = {
+        r.doc_id: (r.clean_text, r.n_spans, r.n_removed)
+        for r in _strip_by_spans(docs, spans, "doc_id", "text").collect()
+    }
+    assert out == {
+        1: ("", 2, 10),
+        2: ("abghij", 2, 4),
+        3: ("untouched", 0, 0),
+        4: ("", 1, 3),
+    }

@@ -63,7 +63,7 @@ _CATALOG_NAME_SITES = {
 def test_scratch_paths_come_only_from_scratch_module():
     """Every work dir comes from scratch.run_dir / scratch_dir, whose paths
     the process removes at exit: no other module builds a path from a raw
-    ``"/tmp/`` literal or a ``uuid4()``."""
+    ``"/tmp/`` literal, ``tempfile.gettempdir()`` or a ``uuid4()``."""
     pkg = REPO_ROOT / "wafer_defect_data_pipeline_spark"
     hits = set()
     for path in sorted(pkg.rglob("*.py")):
@@ -71,6 +71,6 @@ def test_scratch_paths_come_only_from_scratch_module():
         if rel == "scratch.py":
             continue
         for line in path.read_text().splitlines():
-            if '"/tmp/' in line or "uuid4()" in line:
+            if '"/tmp/' in line or "gettempdir()" in line or "uuid4()" in line:
                 hits.add((rel, line.strip()))
     assert hits - _CATALOG_NAME_SITES == set()

@@ -89,3 +89,25 @@ def test_events_ts_reads_as_timestamp_ntz(spark, sf_small):
     # sanity range: years ~2001..2100 in epoch-micros — catches a silent
     # 1000x unit corruption (the r2 streaming bug) at the read boundary
     assert 1_000_000_000 * 1_000_000 < row["lo"] <= row["hi"] < 4_102_444_800 * 1_000_000, row
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_planted_doc_ids_unique_for_exact_dedup(sf):
+    """``exact_dedup(unique_order=True)`` in ``curation_end_to_end`` assumes
+    ``doc_id`` is unique across the corpus and its four planted generations
+    (exact copies +1M, near-dup tails +2M/+3M on every 25th doc, leaked
+    benchmark suffixes +4M on every 97th). That holds while every source id
+    is below the 1M shift and unique; a regenerated corpus past 1M docs
+    fails here instead of silently tying in ``min_by``."""
+    import numpy as np
+
+    path = f"{TESTDATA}/{sf}/documents.parquet"
+    if not os.path.exists(path):
+        pytest.skip(f"{path} absent")
+    ids = pq.read_table(path, columns=["doc_id"]).column("doc_id").to_numpy()
+    assert ids.max() < 1_000_000
+    planted = np.concatenate(
+        [ids, ids + 1_000_000, ids[ids % 25 == 0] + 2_000_000,
+         ids[ids % 25 == 0] + 3_000_000, ids[ids % 97 == 0] + 4_000_000]
+    )
+    assert len(np.unique(planted)) == len(planted)

@@ -984,13 +984,11 @@ def strip_duplicated_spans(
 
     Relational reconstruction (no UDF): each doc's kept text is the set of
     COMPLEMENT segments between its detected spans. Spans within a doc are
-    disjoint by construction (islands merge anything within ``k``), so one
-    ``lag(span_end)`` window per doc yields segment starts, a final
-    segment covers tail text, and ``concat_ws`` over the
-    position-sorted segments rebuilds the cleaned string. One extra
-    shuffle on the doc id beyond the detection pass; segments are
-    substring expressions evaluated JVM-side against the (already
-    co-located) text column.
+    disjoint by construction (islands merge anything within ``k``), so the
+    position-sorted span list of a doc fixes every segment, and
+    :func:`_strip_by_spans` cuts and joins them with higher-order
+    functions on the doc's row: one shuffle on the doc id beyond the
+    detection pass, plus the join back onto the docs.
 
     Returns ``(id, clean_text, n_spans, n_removed)``; documents with no
     duplicated span pass through unchanged with zeros.
@@ -1007,66 +1005,30 @@ def _strip_by_spans(
     :func:`strip_contaminated_spans`. ``spans`` must carry
     ``(id_col, span_start, span_end)`` with per-doc disjoint spans (the
     islands merge guarantees this). Returns
-    ``(id, clean_text, n_spans, n_removed)``."""
-    from pyspark.sql import Window as W
+    ``(id, clean_text, n_spans, n_removed)``.
 
+    One shuffle for the spans (a position-sorted list per doc) and one
+    left join onto the docs; the rebuild is per-row higher-order functions:
+    the kept segments run from ``[0] ++ span ends`` to ``span starts ++
+    [length]``, so ``zip_with`` cuts them and ``concat_ws`` joins them
+    (the span count and removed length come from the same aggregate). A
+    doc whose spans cover all its text rebuilds to ``""``; a doc with no
+    span passes through with zeros."""
     base = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-    # pinned: the narrow span list feeds THREE consumers (gap segments,
-    # tail segments, per-doc stats) — unpinned, the whole detection
-    # pipeline above it would run three times
-    sp = (
-        spans.select(F.col(id_col).alias("__id"), "span_start", "span_end")
-        .localCheckpoint(eager=False)
+    per_doc = spans.groupBy(F.col(id_col).alias("__id")).agg(
+        F.array_sort(F.collect_list(F.struct("span_start", "span_end"))).alias("__sp"),
+        F.count(F.lit(1)).alias("__n"),
+        F.sum(F.col("span_end") - F.col("span_start")).alias("__removed"),
     )
-    w = W.partitionBy("__id").orderBy("span_start")
-    # complement segments: (lag(end) default 0, next span start) per span,
-    # plus the tail segment (last end, doc length) emitted per doc
-    gaps = sp.withColumn("seg_start", F.lag("span_end", 1, 0).over(w)).select(
-        "__id", "seg_start", F.col("span_start").alias("seg_end")
-    )
-    tails = sp.groupBy("__id").agg(F.max("span_end").alias("seg_start"))
-    segs = gaps.unionByName(
-        tails.join(base, "__id").select(
-            "__id", "seg_start", F.length("__text").alias("seg_end")
-        )
-    )
-    rebuilt = (
-        segs.filter(F.col("seg_end") > F.col("seg_start"))
-        .join(base, "__id")
-        .select(
-            "__id",
-            F.struct(
-                "seg_start",
-                F.col("__text").substr(
-                    F.col("seg_start") + 1, F.col("seg_end") - F.col("seg_start")
-                ).alias("piece"),
-            ).alias("__seg"),
-        )
-        .groupBy("__id")
-        .agg(
-            F.concat_ws(
-                "", F.transform(F.array_sort(F.collect_list("__seg")), lambda s: s.getField("piece"))
-            ).alias("__clean")
-        )
-    )
-    stats = sp.groupBy("__id").agg(
-        F.count(F.lit(1)).alias("n_spans"),
-        F.sum(F.col("span_end") - F.col("span_start")).alias("n_removed"),
-    )
-    # a doc whose spans cover ALL text has no non-empty segment and drops
-    # out of `rebuilt` — it must become "", not fall back to the original,
-    # so the fallback keys on "had spans at all" (stats), not on rebuilt
-    return (
-        base.join(rebuilt, "__id", "left")
-        .join(stats, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.when(F.col("n_spans").isNull(), F.col("__text"))
-            .otherwise(F.coalesce("__clean", F.lit("")))
-            .alias("clean_text"),
-            F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
-            F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
-        )
+    sp, text = F.col("__sp"), F.col("__text")
+    seg_starts = F.concat(F.array(F.lit(0)), F.transform(sp, lambda s: s["span_end"]))
+    seg_ends = F.concat(F.transform(sp, lambda s: s["span_start"]), F.array(F.length(text)))
+    pieces = F.zip_with(seg_starts, seg_ends, lambda a, b: text.substr(a + 1, b - a))
+    return base.join(per_doc, "__id", "left").select(
+        F.col("__id").alias(id_col),
+        F.when(sp.isNull(), text).otherwise(F.concat_ws("", pieces)).alias("clean_text"),
+        F.coalesce("__n", F.lit(0)).alias("n_spans"),
+        F.coalesce("__removed", F.lit(0)).alias("n_removed"),
     )
 
 

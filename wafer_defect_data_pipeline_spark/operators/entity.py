@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import connected_components
+from .graph import connected_components_auto
 
 
 def blocking_pairs(
@@ -248,11 +248,12 @@ def resolve_entities(
     """``(id, entity_id)`` for every row: transitive closure over match pairs.
 
     entity_id = min id reachable through verified matches (deterministic
-    cluster naming); singletons keep their own id. Same narrow-row
-    propagation as dedup clustering — edges are (long, long), the entity
-    table never re-shuffles its payload.
+    cluster naming); singletons keep their own id. Same components engine
+    as dedup clustering (:func:`~.graph.connected_components_auto`; edges
+    are (long, long), the entity table never re-shuffles its payload).
+    ``max_iter`` bounds the star rounds above the one-task size gate.
     """
-    comp = connected_components(pairs, "id_a", "id_b", max_iter=max_iter)
+    comp = connected_components_auto(pairs, "id_a", "id_b", max_iter=max_iter)
     return (
         df.select(F.col(id_col).alias("id"))
         .join(comp, on="id", how="left")

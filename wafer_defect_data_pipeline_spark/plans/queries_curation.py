@@ -46,7 +46,7 @@ def _cluster_assignment(spark, sf_dir):
         corpus, "doc_id", "text", n_hashes=16, n_bands=4, shingle_k=3, threshold=0.6
     )
     return (
-        cluster_assignment(corpus, "doc_id", pairs)
+        cluster_assignment(corpus, "doc_id", pairs, algorithm="propagation")
         .select("doc_id", "component")
         .orderBy("doc_id")
     )
@@ -1206,12 +1206,13 @@ def _cc_oracle() -> str:
 register("dedup_cluster_assignment_star", _cluster_assignment_star, _cc_oracle())
 
 
-# --- auto-selected clustering twin: budgeted-propagation probe, star
-# fallback (operators/graph.connected_components_auto). On this corpus the
-# dedup graph is short-diameter, so the probe converges and the answer is
-# propagation's — the long-diameter fallback path is pytest-covered on a
-# synthetic chain. Same oracle: all three algorithms must produce the
-# identical component map. ---------------------------------------------------
+# --- auto-selected clustering twin (operators/graph.connected_components_auto):
+# one edge count picks the one-task numpy union-find (this corpus, far under
+# the 1M-edge gate), else a budgeted-propagation probe with star fallback;
+# the relational branches are pytest-covered with the gate at 0 and on a
+# synthetic chain. dedup_cluster_assignment pins propagation and its _star
+# twin pins star, so both relational loops stay oracle-covered. Same
+# oracle: all three must produce the identical component map. --------------
 def _cluster_assignment_auto(spark, sf_dir):
     d = read_table(spark, sf_dir, "documents")
     gen1 = (

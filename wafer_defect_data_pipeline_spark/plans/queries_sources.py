@@ -12,12 +12,12 @@ source/sink pair must keep.
 
 from __future__ import annotations
 
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..scratch import run_dir
 from ..sources import read_table
 from ..sources.csv import load_wafer_csv
 from ..sources.sinks import write_csv_single
@@ -37,8 +37,8 @@ _NATION_SCHEMA = T.StructType(
 def _csv_roundtrip(spark, sf_dir):
     """S1/S2/S5: CSV sink -> validated CSV source -> same rows as parquet.
 
-    The temp path is keyed on the sf dir name so concurrent runs at
-    different scale factors don't clobber each other. ``write_csv_single``
+    The temp path is a fresh ``run_dir``, private to the call and removed
+    at process exit. ``write_csv_single``
     is the reference-parity single-file sink (fine here: nation is 25
     rows); the read-back uses the explicit schema so the scan is
     single-pass (no inference job).
@@ -46,9 +46,9 @@ def _csv_roundtrip(spark, sf_dir):
     n = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    out = Path(tempfile.gettempdir()) / f"wdps_csv_roundtrip_{Path(sf_dir).name}"
-    write_csv_single(n, str(out))
-    df = load_wafer_csv(spark, str(out), schema=_NATION_SCHEMA)
+    out = run_dir("csv_roundtrip")
+    write_csv_single(n, out)
+    df = load_wafer_csv(spark, out, schema=_NATION_SCHEMA)
     return df.orderBy("n_nationkey")
 
 
@@ -79,9 +79,9 @@ def _json_roundtrip(spark, sf_dir):
     from ..sources.sinks import write_json
 
     r = read_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    out = Path(tempfile.gettempdir()) / f"wdps_json_roundtrip_{Path(sf_dir).name}"
-    write_json(r, str(out))
-    return spark.read.schema(_REGION_SCHEMA).json(str(out)).orderBy("r_regionkey")
+    out = run_dir("json_roundtrip")
+    write_json(r, out)
+    return spark.read.schema(_REGION_SCHEMA).json(out).orderBy("r_regionkey")
 
 
 register(
@@ -105,9 +105,9 @@ def _partitioned_pruned_read(spark, sf_dir):
     from ..sources.sinks import write_parquet
 
     d = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
-    out = Path(tempfile.gettempdir()) / f"wdps_part_docs_{Path(sf_dir).name}"
-    write_parquet(d, str(out), partition_by=["lang"])
-    back = spark.read.parquet(str(out)).filter(F.col("lang") == "de")
+    out = run_dir("part_docs")
+    write_parquet(d, out, partition_by=["lang"])
+    back = spark.read.parquet(out).filter(F.col("lang") == "de")
     return back.select("doc_id", "lang", "source").orderBy("doc_id")
 
 
@@ -129,9 +129,9 @@ def _orc_roundtrip(spark, sf_dir):
     — no new execution path.
     """
     n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    out = Path(tempfile.gettempdir()) / f"wdps_orc_roundtrip_{Path(sf_dir).name}"
-    n.write.mode("overwrite").orc(str(out))
-    back = spark.read.schema(n.schema).orc(str(out))
+    out = run_dir("orc_roundtrip")
+    n.write.mode("overwrite").orc(out)
+    back = spark.read.schema(n.schema).orc(out)
     return back.orderBy("n_nationkey")
 
 
@@ -164,7 +164,7 @@ def _bucketed_join_zeroshuffle(spark, sf_dir):
     from ..sources.bucketed import read_bucketed, write_bucketed
 
     tag = Path(sf_dir).name.replace(".", "_")
-    base = Path(tempfile.gettempdir()) / f"wdps_bucketed_{tag}"
+    base = Path(run_dir("bucketed"))
     to, tl = f"wdps_orders_b_{tag}", f"wdps_lineitem_b_{tag}"
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = read_table(spark, sf_dir, "lineitem").select(
@@ -274,9 +274,8 @@ def _compaction_small_files(spark, sf_dir):
     from ..sources.sinks import write_parquet
 
     d = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "text")
-    tag = Path(sf_dir).name
-    shattered = Path(tempfile.gettempdir()) / f"wdps_shatter_{tag}"
-    compacted = Path(tempfile.gettempdir()) / f"wdps_compact_{tag}"
+    work = Path(run_dir("compaction"))
+    shattered, compacted = work / "shatter", work / "compact"
     d.repartition(64).write.mode("overwrite").parquet(str(shattered))
 
     back = spark.read.parquet(str(shattered))
@@ -314,9 +313,9 @@ def _xml_roundtrip(spark, sf_dir):
     column order) oracled against the parquet original.
     """
     r = read_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    out = Path(tempfile.gettempdir()) / f"wdps_xml_roundtrip_{Path(sf_dir).name}"
-    r.write.mode("overwrite").option("rootTag", "regions").option("rowTag", "region").xml(str(out))
-    back = spark.read.schema(r.schema).option("rowTag", "region").xml(str(out))
+    out = run_dir("xml_roundtrip")
+    r.write.mode("overwrite").option("rootTag", "regions").option("rowTag", "region").xml(out)
+    back = spark.read.schema(r.schema).option("rowTag", "region").xml(out)
     return back.select("r_regionkey", "r_name").orderBy("r_regionkey")
 
 
@@ -339,14 +338,13 @@ def _zonemap_pruned_agg(spark, sf_dir):
     guarantee, so results are layout-invariant)."""
     from ..operators.layout import build_zonemap, zonemap_pruned_read
 
-    tag = Path(sf_dir).name.replace(".", "_")
-    clustered = Path(tempfile.gettempdir()) / f"wdps_zonemap_{tag}"
+    clustered = run_dir("zonemap")
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_shipdate", "l_returnflag", "l_extendedprice", "l_discount"
     )
-    li.repartitionByRange(8, "l_shipdate").write.mode("overwrite").parquet(str(clustered))
+    li.repartitionByRange(8, "l_shipdate").write.mode("overwrite").parquet(clustered)
 
-    zm = build_zonemap(spark, str(clustered), ["l_shipdate"])
+    zm = build_zonemap(spark, clustered, ["l_shipdate"])
     import datetime
 
     # l_shipdate is TIMESTAMP_NTZ; inclusive [Jan 1, last-us-of-Mar 31]
@@ -354,7 +352,7 @@ def _zonemap_pruned_agg(spark, sf_dir):
     lo = datetime.datetime(1995, 1, 1)
     hi = datetime.datetime(1995, 3, 31, 23, 59, 59, 999999)
     pruned, _kept, _total = zonemap_pruned_read(
-        spark, str(clustered), zm, "l_shipdate", lo, hi
+        spark, clustered, zm, "l_shipdate", lo, hi
     )
     return (
         pruned.groupBy("l_returnflag")
@@ -394,8 +392,7 @@ def _schema_evolution_read(spark, sf_dir):
     the columns an old batch lacks; the audit agg then quantifies the
     backfill debt per lang. Per-file schemas stay prunable: the scan still
     pushes the column subset down to each footer."""
-    tag = Path(sf_dir).name.replace(".", "_")
-    base = Path(tempfile.gettempdir()) / f"wdps_schevo_{tag}"
+    base = Path(run_dir("schevo"))
     d = read_table(spark, sf_dir, "documents")
     d.select("doc_id", "lang").write.mode("overwrite").parquet(str(base / "gen=1"))
     d.select("doc_id", "lang", "source", "n_chars").write.mode("overwrite").parquet(

@@ -194,6 +194,39 @@ def run_interval_join_stream_batch(spark: SparkSession, sf_dir: str) -> DataFram
         .orderBy("user_id")
     )
 
+
+def _upsert_merge_batch(
+    batch_df: DataFrame, batch_id: int, state_dir: str, committed: list[int]
+) -> None:
+    """One micro-batch of :func:`run_foreachbatch_upsert_batch`'s keyed
+    upsert sink, retry-idempotent.
+
+    ``committed`` is the driver's snapshot pointer: the ids of the
+    snapshots ``{state_dir}/v{id}`` still on disk, newest last. The batch
+    merges its per-user partials into the newest snapshot OLDER than
+    itself and writes ``v{batch_id}`` in overwrite mode, so a replay of a
+    batch — whether its first attempt died mid-write or after the pointer
+    moved — reads the same input and writes the same snapshot. The pointer
+    moves last, after the snapshots no replay can read any more (older than
+    the one this batch read) are vacuumed."""
+    import shutil
+
+    sp = batch_df.sparkSession
+    part = batch_df.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("raw_sum")
+    )
+    prior = [b for b in committed if b < batch_id]
+    if prior:
+        prev = sp.read.parquet(f"{state_dir}/v{prior[-1]}")
+        part = prev.unionByName(part).groupBy("user_id").agg(
+            F.sum("n_events").alias("n_events"), F.sum("raw_sum").alias("raw_sum")
+        )
+    part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
+    for old in prior[:-1]:
+        shutil.rmtree(f"{state_dir}/v{old}", ignore_errors=True)
+    committed[:] = prior[-1:] + [batch_id]
+
+
 def run_foreachbatch_upsert_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream events into a keyed upsert sink via ``foreachBatch``.
 
@@ -204,41 +237,26 @@ def run_foreachbatch_upsert_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     keyed parquet table maintained by snapshot read-modify-write (union the
     previous snapshot with the batch partials, re-aggregate, write version
     N+1 — the same copy-on-write shape Delta/Iceberg MERGE compiles to); the
-    driver holds only the current snapshot PATH, never per-user rows, so
-    state scales with cluster storage, not driver memory. Raw sums
-    accumulate un-rounded across snapshots and are rounded once at the end,
-    so the result is batch-count-invariant and matches the batch/DuckDB
-    aggregate exactly.
+    driver holds only the snapshot ids (:func:`_upsert_merge_batch`), never
+    per-user rows, so state scales with cluster storage, not driver memory.
+    Raw sums accumulate un-rounded across snapshots and are rounded once at
+    the end, so the result is batch-count-invariant and matches the
+    batch/DuckDB aggregate exactly.
     """
-    import shutil
-
     events = read_events_stream(spark, sf_dir)
     state_dir = run_dir("upsert_state")
-    cur: dict[str, str | None] = {"path": None}  # snapshot pointer, not state
+    committed: list[int] = []
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        part = batch_df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("raw_sum")
-        )
-        if cur["path"] is not None:
-            prev = sp.read.parquet(cur["path"])
-            part = prev.unionByName(part).groupBy("user_id").agg(
-                F.sum("n_events").alias("n_events"), F.sum("raw_sum").alias("raw_sum")
-            )
-        nxt = f"{state_dir}/v{batch_id}"
-        part.write.parquet(nxt)
-        old, cur["path"] = cur["path"], nxt
-        if old is not None:  # vacuum the superseded snapshot
-            shutil.rmtree(old, ignore_errors=True)
+        _upsert_merge_batch(batch_df, batch_id, state_dir, committed)
 
     q = events.writeStream.foreachBatch(merge).trigger(availableNow=True).start()
     q.awaitTermination()
-    if cur["path"] is None:  # empty stream
+    if not committed:  # empty stream
         return spark.createDataFrame([], "user_id long, n_events long, total_value double")
     # return the lazy scan of the final snapshot — no driver readout at all;
     # the session-lifetime temp snapshot is the "table" a caller would query
-    out = spark.read.parquet(cur["path"])
+    out = spark.read.parquet(f"{state_dir}/v{committed[-1]}")
     return out.select(
         "user_id", "n_events", F.round("raw_sum", 4).alias("total_value")
     ).orderBy("user_id")
