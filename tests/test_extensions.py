@@ -3201,21 +3201,23 @@ def test_label_propagation_splits_bridged_cliques(spark):
 
 @pytest.fixture
 def no_tmp_residue():
-    """An admit-loop runner leaves nothing in /tmp but its output: the only
-    new ``wdps_*`` entry may be this process's run root, and each run dir
-    created in it holds only the ``out/`` its returned frame reads."""
+    """An admit-loop runner leaves nothing in the temp dir but its output:
+    the only new ``wdps_*`` entry may be this process's run root, and each
+    run dir created in it holds only the ``out/`` its returned frame reads."""
     import os
     import re
+    import tempfile
 
     pid = os.getpid()
-    root = f"/tmp/wdps_run_pid{pid}"
+    tmp = tempfile.gettempdir()
+    root = f"{tmp}/wdps_run_pid{pid}"
 
     def ours(name: str) -> bool:  # other processes' pid-suffixed dirs aside
         m = re.search(r"_pid(\d+)$", name)
         return m is None or int(m.group(1)) == pid
 
     def entries() -> set[str]:
-        return {n for n in os.listdir("/tmp") if n.startswith("wdps_") and ours(n)}
+        return {n for n in os.listdir(tmp) if n.startswith("wdps_") and ours(n)}
 
     def runs() -> set[str]:
         return set(os.listdir(root)) if os.path.isdir(root) else set()

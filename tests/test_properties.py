@@ -430,36 +430,37 @@ def test_min_label_kernel_matches_union_find(edges, flip):
     assert dict(zip(out["id"].tolist(), out["component"].tolist())) == _union_find_components(edges)
 
 
-def test_auto_cc_branches_on_edge_gate(spark):
-    """Below the edge gate auto runs the one-task kernel (a 10k-node chain
-    comes back as one component named 0, with a FlatMapGroupsInPandas in
-    the plan); a gate of 0 takes the relational branch (no kernel in the
-    plan, and a long chain still falls back to star); empty pairs give an
-    empty frame; output types follow the input ids."""
-    from wafer_defect_data_pipeline_spark.operators.graph import connected_components_auto
+def test_auto_cc_branches_on_edge_gate(spark, monkeypatch):
+    """Below the edge gate auto runs the kernel on the driver (a 10k-node
+    chain comes back as one component named 0 from a local relation, with
+    no relational loop in the plan); a gate of 0 takes the relational
+    branch (a join in the plan, and a long chain still falls back to star);
+    empty pairs give an empty frame; output types follow the input ids."""
+    from wafer_defect_data_pipeline_spark.operators import graph
 
     def plan(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
     chain = spark.createDataFrame([(i + 1, i) for i in range(9_999)], "id_a long, id_b long")
-    comp = connected_components_auto(chain)
-    assert "FlatMapGroupsInPandas" in plan(comp)
+    comp = graph.connected_components_auto(chain)
+    assert plan(comp).startswith("LocalRelation") and "Join" not in plan(comp)
     got = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n")).collect()
     assert [(r.component, r.n) for r in got] == [(0, 10_000)]
 
-    short = spark.createDataFrame([(i, i + 1) for i in range(63)], "id_a long, id_b long")
-    relational = connected_components_auto(short, probe_rounds=4, max_iter=12, local_max_edges=0)
-    assert "FlatMapGroupsInPandas" not in plan(relational)
-    assert {r.id: r.component for r in relational.collect()} == {i: 0 for i in range(64)}
-
-    empty = connected_components_auto(spark.createDataFrame([], "id_a long, id_b long"))
+    empty = graph.connected_components_auto(spark.createDataFrame([], "id_a long, id_b long"))
     assert empty.collect() == []
     assert [f.dataType.simpleString() for f in empty.schema] == ["bigint", "bigint"]
 
     ints = spark.createDataFrame([(3, 1), (5, 5)], "id_a int, id_b int")
-    small = connected_components_auto(ints)
+    small = graph.connected_components_auto(ints)
     assert [f.dataType.simpleString() for f in small.schema] == ["int", "int"]
     assert sorted(map(tuple, small.collect())) == [(1, 1), (3, 1), (5, 5)]
+
+    monkeypatch.setattr(graph, "LOCAL_MAX_EDGES", 0)
+    short = spark.createDataFrame([(i, i + 1) for i in range(63)], "id_a long, id_b long")
+    relational = graph.connected_components_auto(short, probe_rounds=4, max_iter=12)
+    assert "Join" in plan(relational) and "LocalRelation" not in plan(relational)
+    assert {r.id: r.component for r in relational.collect()} == {i: 0 for i in range(64)}
 
 
 def test_strip_by_spans_edge_cases(spark):

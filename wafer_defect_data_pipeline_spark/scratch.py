@@ -1,4 +1,4 @@
-"""Process-private /tmp scratch paths for the build-once serving queries.
+"""Process-private scratch paths for the build-once serving queries.
 
 The prebuilt/export queries persist an artifact (index, decision manifest,
 shard set) and answer from the LOADED copy. Their scratch paths went
@@ -18,7 +18,8 @@ decision/index/manifest (r13 ADVICE). :func:`scratch_dir` closes both:
 Every path this module hands out is also removed when the owning process
 exits (one ``atexit`` hook), so no state survives a run; the entry sweeps
 remain the fallback for processes that die without running exit hooks.
-:func:`run_dir` is the per-call form: a fresh dir under the process's one
+Paths live under ``tempfile.gettempdir()`` unless a caller names a base,
+so ``TMPDIR`` moves them. :func:`run_dir` is the per-call form: a fresh dir under the process's one
 scratch root, for work that must not be shared even within a process.
 """
 
@@ -28,6 +29,7 @@ import atexit
 import os
 import re
 import shutil
+import tempfile
 import time
 import uuid
 
@@ -86,8 +88,9 @@ def _pid_started_after(pid: int, epoch: float) -> bool:
         return False
 
 
-def scratch_dir(tag: str, base: str = "/tmp") -> str:
-    """Return ``{base}/wdps_{tag}_pid{os.getpid()}`` after sweeping dead
+def scratch_dir(tag: str, base: str | None = None) -> str:
+    """Return ``{base}/wdps_{tag}_pid{os.getpid()}`` (``base`` defaults to
+    ``tempfile.gettempdir()``) after sweeping dead
     siblings (``wdps_{tag}_pid<N>`` where process N no longer exists).
     ``tag`` should carry the sf key so distinct datasets never collide
     within one process either.
@@ -98,6 +101,7 @@ def scratch_dir(tag: str, base: str = "/tmp") -> str:
     (started after the dir's last write) — this catches dirs whose tag
     never recurs and recycled PIDs that defeat the liveness check
     (r14 ADVICE) without ever deleting a LIVE owner's artifacts."""
+    base = base or tempfile.gettempdir()
     pat = re.compile(re.escape(f"wdps_{tag}_pid") + r"(\d+)$")
     now = time.time()
     try:
@@ -134,7 +138,7 @@ def scratch_dir(tag: str, base: str = "/tmp") -> str:
     return path
 
 
-def run_dir(tag: str, base: str = "/tmp") -> str:
+def run_dir(tag: str, base: str | None = None) -> str:
     """A fresh ``{root}/{tag}_{uuid8}`` under this process's scratch root
     (``root = scratch_dir("run", base)``): private to one call, covered by
     the dead-PID and stale-age sweeps through its root, and removed with
