@@ -119,40 +119,46 @@ def _sf_from_dir(sf_dir: str) -> float:
     return float(m.group(1)) if m else float("nan")
 
 
-def _anchor_file(sf: float) -> str:
-    """Per-sf anchor record: the default sf0.1 sweep anchors on
-    BENCH_local.json; sf >= 1 scale runs anchor on their own committed
-    BENCH_sf{N}.json (r13 verdict item 5: at sf0.1 the heavy families are
-    60-90% fixed per-job cost, so the sf0.1 gate can't detect a real 2x
-    regression in their compute term — the sf1 anchor can). Writing the
-    full record to the same per-sf file also stops an sf1/sf3 sweep from
-    clobbering the committed sf0.1 anchor (the r11 restore-dance)."""
+def _anchor_file(sf: float, cpus: int | None = None) -> str:
+    """Per-(sf, cpus) anchor record: the default sf0.1 sweep anchors on
+    BENCH_local_c{cpus}.json; sf >= 1 scale runs anchor on their own
+    committed BENCH_sf{N}_c{cpus}.json (r13 verdict item 5: at sf0.1 the
+    heavy families are 60-90% fixed per-job cost, so the sf0.1 gate can't
+    detect a real 2x regression in their compute term — the sf1 anchor
+    can). Writing the full record to the same per-sf file also stops an
+    sf1/sf3 sweep from clobbering the committed sf0.1 anchor (the r11
+    restore-dance), and the cpu suffix stops a c8 sweep from overwriting
+    the c32 anchor. Without ``cpus`` the name is the older unkeyed
+    record's (BENCH_local.json)."""
     # %g keeps non-integer sfs distinct (sf1.5 -> BENCH_sf1.5.json) instead
-    # of int()-truncating onto the sf1 anchor. BENCH_local.json is reserved
+    # of int()-truncating onto the sf1 anchor. BENCH_local* is reserved
     # STRICTLY for the default sf0.1 sweep (r14 ADVICE: routing every sub-1
     # sf there let a one-off sf0.5 run clobber the committed sf0.1 record).
-    return "BENCH_local.json" if sf == 0.1 else f"BENCH_sf{sf:g}.json"
+    base = "BENCH_local" if sf == 0.1 else f"BENCH_sf{sf:g}"
+    return f"{base}_c{cpus}.json" if cpus else f"{base}.json"
 
 
-def _load_anchor(sf: float) -> dict | None:
+def _load_anchor(sf: float, cpus: int | None = None) -> dict | None:
     """Committed per-query anchor for the regression gate (r11 verdict #7).
 
-    Reads the per-sf anchor file from git HEAD — NOT the working tree — so
-    a second bench run in the same session compares against the committed
-    record, not its own first run. Only used when the anchor was recorded
-    at the same sf (comparing sf0.1 medians to an sf1 run is meaningless).
+    Reads the per-(sf, cpus) anchor file from git HEAD — NOT the working
+    tree — so a second bench run in the same session compares against the
+    committed record, not its own first run. Only used when the anchor was
+    recorded at the same sf AND the same cpu count (comparing sf0.1 medians
+    to an sf1 run, or 8-core medians to a 32-core run, is meaningless): an
+    anchor whose ``cpus`` is missing or differs is None.
     """
     import subprocess
 
     try:
         raw = subprocess.run(
-            ["git", "-C", _REPO_ROOT, "show", f"HEAD:{_anchor_file(sf)}"],
+            ["git", "-C", _REPO_ROOT, "show", f"HEAD:{_anchor_file(sf, cpus)}"],
             capture_output=True, text=True, timeout=30, check=True,
         ).stdout
         anchor = json.loads(raw)
     except Exception:  # noqa: BLE001 — no anchor is fine (fresh clone)
         return None
-    if anchor.get("sf") != sf:
+    if anchor.get("sf") != sf or anchor.get("cpus") != cpus:
         return None
     return anchor
 
@@ -336,6 +342,7 @@ def main() -> None:
     # as named entries in "errors", their timings as null, and the process
     # always exits 0 with one parseable JSON line.
     sf = _sf_from_dir(sf_dir)
+    cpus = spark.sparkContext.defaultParallelism
     n_warm = int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "3"))
     headline = [n for n in HEADLINE if not (sf >= 1 and n in SCALE_RETIRED)]
     cold: dict[str, float | None] = {}
@@ -369,7 +376,7 @@ def main() -> None:
             spread[name] = None
 
     total = round(sum(v for v in warm.values() if v is not None), 3)
-    anchor = _load_anchor(sf)
+    anchor = _load_anchor(sf, cpus)
     regressed = _regressions(warm, anchor)
 
     # r14 verdict item 1: adjudicate every real gate flag with an isolated
@@ -427,12 +434,13 @@ def main() -> None:
         "warm_protocol": f"median of {n_warm} warm runs after 1 cold run",
         "regressed": regressed,
         "regression_rule": "warm median > committed HEAD anchor median + "
-        "max(anchor spread band, 15%, 50ms); same-sf anchors only",
+        "max(anchor spread band, 15%, 50ms); same-(sf, cpus) anchors only",
         "retimes": retimes,
         "retime_rule": "each sweep flag re-timed isolated (1 cold + 3 warm "
         "after idle settle); final regressed_n counts retime verdicts — "
         "'noise' clears the flag, 'regressed'/'unadjudicated' keep it",
         "sf": _sf_from_dir(sf_dir),
+        "cpus": cpus,
     }
     if canary:
         errors["__testdata_canary"] = canary
@@ -444,7 +452,7 @@ def main() -> None:
     # official record loses its head (BENCH_r02/r04-r07 all have
     # "parsed": null). Compact = totals first, warm-only, 2-decimal — ~1.3k
     # chars for the 34-query headline set, safely under the capture window.
-    with open(os.path.join(_REPO_ROOT, _anchor_file(sf)), "w") as f:
+    with open(os.path.join(_REPO_ROOT, _anchor_file(sf, cpus)), "w") as f:
         json.dump(out, f, indent=1)
     ratios = [
         mx / mn for mn, mx in (v for v in spread.values() if v) if mn > 0
@@ -457,10 +465,11 @@ def main() -> None:
         # suspicious if it exceeds what the run itself showed as host noise
         "spread_max_ratio": round(max(ratios), 2) if ratios else None,
         "sf": _sf_from_dir(sf_dir),
+        "cpus": cpus,
         "queries": {
             n: (round(v, 2) if v is not None else None) for n, v in warm.items()
         },
-        "full": _anchor_file(sf),
+        "full": _anchor_file(sf, cpus),
     }
     if compact["spread_max_ratio"] is not None and compact["spread_max_ratio"] > 1.5:
         # self-label hot-host runs: when one query's own 3 warm runs spread

@@ -196,3 +196,34 @@ def test_retime_records_load_when_probe_given():
     )
     assert retimes["q1"]["load_1min"] == 0.42
     assert retimes["q1"]["verdict"] == "noise"
+
+
+def test_anchor_file_keys_on_sf_and_cpus():
+    # a c8 sweep writes its own record and can't overwrite the c32 anchor
+    assert bench._anchor_file(0.1, 8) == "BENCH_local_c8.json"
+    assert bench._anchor_file(0.1, 32) == "BENCH_local_c32.json"
+    assert bench._anchor_file(1.0, 8) == "BENCH_sf1_c8.json"
+    assert bench._anchor_file(0.5, 4) == "BENCH_sf0.5_c4.json"
+
+
+@pytest.mark.parametrize(
+    "recorded, asked, loads",
+    [
+        ({"sf": 0.1, "cpus": 8}, (0.1, 8), True),
+        ({"sf": 0.1, "cpus": 32}, (0.1, 8), False),  # cpu count differs
+        ({"sf": 0.1}, (0.1, 8), False),  # record without cpus
+        ({"sf": 1.0, "cpus": 8}, (0.1, 8), False),  # sf differs
+    ],
+)
+def test_load_anchor_needs_same_sf_and_cpus(monkeypatch, recorded, asked, loads):
+    asked_paths = []
+
+    def fake_git_show(cmd, **kwargs):
+        asked_paths.append(cmd[-1])
+        record = dict(recorded, queries={"q1": 1.0}, spread={"q1": [1.0, 1.0]})
+        return subprocess.CompletedProcess(cmd, 0, stdout=json.dumps(record))
+
+    monkeypatch.setattr(subprocess, "run", fake_git_show)
+    anchor = bench._load_anchor(*asked)
+    assert asked_paths == [f"HEAD:{bench._anchor_file(*asked)}"]
+    assert (anchor is not None) == loads

@@ -7,6 +7,8 @@ only in docstrings; here it is machine-checked in both directions so
 
 from __future__ import annotations
 
+import ast
+
 from wafer_defect_data_pipeline_spark.plans.registry import _ordered
 
 from .conftest import REPO_ROOT
@@ -74,3 +76,17 @@ def test_scratch_paths_come_only_from_scratch_module():
             if '"/tmp/' in line or "gettempdir()" in line or "uuid4()" in line:
                 hits.add((rel, line.strip()))
     assert hits - _CATALOG_NAME_SITES == set()
+
+
+def test_multimodal_batch_loops_live_only_in_the_two_runners():
+    """Every multimodal Arrow kernel runs through ``_attach`` (fixtures) or
+    ``_map_payloads`` (payload kernels): ``mapInPandas`` is called nowhere
+    else in operators/multimodal.py, so no kernel regrows its own batch
+    loop, id column or quarantine handling."""
+    path = REPO_ROOT / "wafer_defect_data_pipeline_spark" / "operators" / "multimodal.py"
+    owners = []
+    for top in ast.parse(path.read_text()).body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+                owners.append(getattr(top, "name", "<module>"))
+    assert sorted(owners) == ["_attach", "_map_payloads"]

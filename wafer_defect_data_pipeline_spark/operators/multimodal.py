@@ -3,11 +3,25 @@
 Media travel as opaque ``binary`` payload columns with typed metadata
 structs — the Spark-native layout for multimodal training data (one row per
 asset, bytes inline for small assets or a URI for large ones). Everything
-runs vectorized via ``mapInPandas`` over Arrow record batches. All three
-media paths EXECUTE for their uncompressed interchange formats through the
-stdlib/numpy codecs below — PPM (P6) images (decode, channel stats,
-nearest-neighbor resize, re-encode), RIFF/PCM audio (chunk walk, sample
-stats), and YUV4MPEG2 video (frame-marker walk, luma stats, frame
+runs vectorized via ``mapInPandas`` over Arrow record batches, through two
+runners:
+
+- :func:`_attach` builds every ``attach_*`` fixture: one size-gated id
+  feed and one ``make(id) -> bytes`` per fixture, so every payload is a
+  closed-form function of its id that a SQL oracle can replay;
+- :func:`_map_payloads` runs every payload kernel (metadata, decode,
+  resize, features, frame sampling, spectra, hashes): ``fn(bytes)``
+  returns that payload's output rows (0..n, so frame fan-out is just more
+  rows), each tagged with the payload's ``id_col``. It owns the quarantine
+  contract: ``on_error="raise"`` (default) lets a bad payload kill the
+  task, ``on_error="quarantine"`` emits one row with null fields and the
+  exception class in an added ``error`` column instead; any other value
+  is a ``ValueError``.
+
+All three media paths EXECUTE for their uncompressed interchange formats
+through the stdlib/numpy codecs below — PPM (P6) images (decode, channel
+stats, nearest-neighbor resize, re-encode), RIFF/PCM audio (chunk walk,
+sample stats), and YUV4MPEG2 video (frame-marker walk, luma stats, frame
 sampling) — plus PNG (truecolor-8), whose DEFLATE+filter pipeline is
 implementable with stdlib zlib + numpy, closing the compressed-image gap
 with an EXECUTED path. JPEG is EXECUTED too via the T.81 codec below —
@@ -22,8 +36,13 @@ faked.
 
 from __future__ import annotations
 
+import hashlib
+import io
+import struct
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -42,11 +61,69 @@ from ..functions.partitioning import fan_out
 _FANOUT_MIN_BYTES = 2 << 20
 
 
-def _id_feed(df: DataFrame, id_col: str) -> DataFrame:
-    """The shared attach-kernel input: the narrow id projection, fanned out
-    only past the size gate (partitioning-invariant — every attach consumer
-    joins/aggregates on the id)."""
-    return fan_out(df.select(id_col), min_input_bytes=_FANOUT_MIN_BYTES)
+def _attach(df: DataFrame, id_col: str, make) -> DataFrame:
+    """The one fixture runner: ``(id_col, payload)`` with ``make(i)`` the
+    payload bytes of id ``i`` (numpy int64, as ``astype("int64")`` yields
+    it), over the narrow id projection fanned out only past the size gate
+    (partitioning-invariant — every attach consumer joins/aggregates on
+    the id)."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids = pdf[id_col].astype("int64")
+            yield pd.DataFrame({id_col: ids, "payload": [make(i) for i in ids]})
+
+    feed = fan_out(df.select(id_col), min_input_bytes=_FANOUT_MIN_BYTES)
+    return feed.mapInPandas(batches, schema=f"{id_col} long, payload binary")
+
+
+#: pandas dtype per output type of :func:`_map_payloads`: nullable ints so a
+#: quarantine row can carry nulls; strings, bytes and arrays stay objects
+_PD_DTYPES = {"long": "Int64", "int": "Int32", "double": "float64"}
+
+
+def _map_payloads(
+    df: DataFrame, id_col: str, payload_col: str, fn, schema: str, on_error: str = "raise"
+) -> DataFrame:
+    """The one payload-kernel runner: ``fn(payload)`` returns the output
+    rows of one payload (0..n tuples typed by ``schema``, the columns after
+    ``id_col``), and each row carries its payload's id.
+
+    It owns the quarantine contract of every kernel that takes
+    ``on_error``: ``"raise"`` (default) lets a failing payload kill the
+    task; ``"quarantine"`` turns it into ONE row with null fields and the
+    exception CLASS in an extra ``error`` column (null on good rows), so
+    the job completes and the corrupt subset is a filterable,
+    oracle-checkable column rather than a stack trace."""
+    if on_error not in ("raise", "quarantine"):
+        raise ValueError("on_error must be 'raise' or 'quarantine'")
+    quarantine = on_error == "quarantine"
+    fields = [f.split(" ", 1) for f in schema.split(", ")]
+    blank = (None,) * len(fields)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            pos, rows, errors = [], [], []
+            for k, b in enumerate(pdf[payload_col]):
+                try:
+                    out, err = fn(b), None
+                except Exception as exc:  # noqa: BLE001 — quarantine, never kill the task
+                    if not quarantine:
+                        raise
+                    out, err = [blank], type(exc).__name__
+                pos += [k] * len(out)
+                rows += out
+                errors += [err] * len(out)
+            cols = zip(*rows) if rows else [()] * len(fields)
+            frame = {id_col: pdf[id_col].to_numpy()[pos]}
+            for (name, typ), col in zip(fields, cols):
+                frame[name] = pd.Series(col, dtype=_PD_DTYPES.get(typ, object))
+            if quarantine:
+                frame["error"] = pd.Series(errors, dtype=object)
+            yield pd.DataFrame(frame)
+
+    out_schema = f"{id_col} long, {schema}" + (", error string" if quarantine else "")
+    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
 
 #: magic-byte prefixes -> sniffed media type
 MAGIC_PREFIXES: list[tuple[bytes, str]] = [
@@ -59,9 +136,8 @@ MAGIC_PREFIXES: list[tuple[bytes, str]] = [
     (b"\x00\x00\x00", "video/mp4"),
 ]
 
-METADATA_SCHEMA = (
-    "doc_id long, n_bytes long, sha256 string, media_type string, chunk_count int"
-)
+#: extract_metadata's output columns after the id column
+METADATA_SCHEMA = "n_bytes long, sha256 string, media_type string, chunk_count int"
 
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -86,36 +162,24 @@ def _sniff(b: bytes | None) -> str:
 def extract_metadata(df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", chunk_bytes: int = 65536) -> DataFrame:
     """Vectorized metadata pass over binary payloads via ``mapInPandas``.
 
-    Arrow delivers each partition as pandas batches of raw bytes; one Python
-    call per batch (not per row) computes size, sha256, magic-type and how
+    Arrow delivers each partition as pandas batches of raw bytes; per
+    payload, :func:`_map_payloads` computes size, sha256, magic-type and how
     many ``chunk_bytes`` chunks a chunked store would split the asset into.
     At scale this is the pattern for any byte-level feature extraction —
     the partition never leaves the executor, and the output is a narrow
     metadata table that can be joined/filterd without touching bytes again.
     """
-    import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": payloads.map(lambda b: 0 if b is None else len(b)).astype("int64"),
-                    "sha256": payloads.map(lambda b: hashlib.sha256(b or b"").hexdigest()),
-                    "media_type": payloads.map(_sniff),
-                    "chunk_count": payloads.map(
-                        lambda b: 0 if not b else (len(b) + chunk_bytes - 1) // chunk_bytes
-                    ).astype("int32"),
-                }
-            )
+    def meta(b):
+        n = 0 if b is None else len(b)
+        chunks = (n + chunk_bytes - 1) // chunk_bytes
+        return [(n, hashlib.sha256(b or b"").hexdigest(), _sniff(b), chunks)]
 
     # same size gate as the attach feeds (r16): the sha256/sniff pass is
     # per-row Python work at the scan's parallelism; partitioning-invariant
     # (every consumer aggregates or joins on the id)
-    return fan_out(df, min_input_bytes=_FANOUT_MIN_BYTES).mapInPandas(
-        batches, schema=METADATA_SCHEMA
-    )
+    feed = fan_out(df.select(id_col, payload_col), min_input_bytes=_FANOUT_MIN_BYTES)
+    return _map_payloads(feed, id_col, payload_col, meta, METADATA_SCHEMA)
 
 
 # --- PPM (P6) codec: stdlib/numpy only, so the pixel path EXECUTES here -----
@@ -126,8 +190,6 @@ def extract_metadata(df: DataFrame, payload_col: str = "payload", id_col: str = 
 
 def ppm_encode(arr) -> bytes:
     """uint8 array [h, w, 3] -> P6 bytes."""
-    import numpy as np
-
     a = np.asarray(arr, dtype=np.uint8)
     h, w, c = a.shape
     if c != 3:
@@ -138,8 +200,6 @@ def ppm_encode(arr) -> bytes:
 def ppm_decode(b: bytes):
     """P6 bytes -> uint8 array [h, w, 3]. Handles comment lines and any
     whitespace between header tokens (the format's full grammar)."""
-    import numpy as np
-
     if not b.startswith(b"P6"):
         raise ValueError("not a P6 PPM payload")
     pos, tokens = 2, []
@@ -174,9 +234,6 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + tag
@@ -200,11 +257,6 @@ def png_encode(arr) -> bytes:
     Average, Paeth in rotation — so the fixture corpus proves every
     unfilter branch of :func:`png_decode`, not just the trivial filter-0
     path a lazy encoder would emit."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     a = np.asarray(arr, dtype=np.uint8)
     h, w, c = a.shape
     if c != 3:
@@ -260,11 +312,6 @@ def png_decode(b: bytes):
     inflate, and all five scanline unfilters (None/Sub/Up/Average/Paeth).
     Interlace, palettes, alpha, and sub-8-bit depths are out of scope for
     the fixture path and rejected explicitly."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if not b.startswith(_PNG_SIG):
         raise ValueError("not a PNG payload")
     pos = len(_PNG_SIG)
@@ -427,8 +474,6 @@ def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[i
 
 
 def _jpeg_dct_matrix():
-    import numpy as np
-
     x = np.arange(8)
     m = 0.5 * np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16)
     m[0, :] = 0.5 / np.sqrt(2.0)
@@ -468,8 +513,6 @@ def _jpeg_magnitude(v: int) -> tuple[int, int]:
 
 def _rgb_to_ycbcr(a):
     """JFIF full-range BT.601, rounded to uint8 planes."""
-    import numpy as np
-
     r, g, b = (a[..., i].astype(np.float64) for i in range(3))
     y = 0.299 * r + 0.587 * g + 0.114 * b
     cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
@@ -478,8 +521,6 @@ def _rgb_to_ycbcr(a):
 
 
 def _ycbcr_to_rgb(y, cb, cr):
-    import numpy as np
-
     y, cb, cr = (p.astype(np.float64) for p in (y, cb, cr))
     r = y + 1.402 * (cr - 128.0)
     g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
@@ -492,8 +533,6 @@ def _ycbcr_to_rgb(y, cb, cr):
 def _jpeg_quant_zz(blk, q, m) -> list[int]:
     """8x8 pixel block -> quantized coefficients in zigzag order (level
     shift, 2-D FDCT, rounding division by the quant table)."""
-    import numpy as np
-
     coef = m @ (blk.astype(np.float64) - 128.0) @ m.T
     qc = np.rint(coef / q).astype(np.int64)
     return [int(qc.flat[i]) for i in _JPEG_ZIGZAG]
@@ -574,8 +613,6 @@ def _jpeg_setup(arr, subsample: str):
 
     Returns ``(h, w, color, comps)`` with one ``(plane, hi, vi, quant,
     dc_codes, ac_codes)`` tuple per component."""
-    import numpy as np
-
     a = np.asarray(arr, dtype=np.uint8)
     if a.ndim not in (2, 3) or (a.ndim == 3 and a.shape[2] != 3):
         raise ValueError("baseline JPEG encodes [h,w] or [h,w,3] arrays")
@@ -618,8 +655,6 @@ def _jpeg_headers(h, w, comps, sof_marker: int, restart_interval: int):
     """SOI + DQT + SOF + DHT (+ DRI) header bytes shared by the baseline
     (SOF0) and progressive (SOF2) encoders; also returns the segment
     packer for the caller's SOS segments."""
-    import struct
-
     def seg(marker: int, body: bytes) -> bytes:
         return struct.pack(">HH", marker, len(body) + 2) + body
 
@@ -1046,10 +1081,6 @@ def jpeg_decode(b: bytes):
     first with cross-block EOB runs, fig-G.7 AC refinement). One final
     pass dezigzags, dequantizes, applies the 2-D IDCT (vectorized over
     all blocks), level shifts, rounds, clips, and upsamples chroma."""
-    import struct
-
-    import numpy as np
-
     if not b.startswith(b"\xff\xd8"):
         raise ValueError("not a JPEG payload")
     pos = 2
@@ -1217,6 +1248,90 @@ def jpeg_decode(b: bytes):
     return _ycbcr_to_rgb(up[0], up[1], up[2])[:h, :w]
 
 
+# --- fixture generators: every payload is a closed-form function of the id --
+
+def _block_gray(i, nbx, nby) -> np.ndarray:
+    """``nby`` x ``nbx`` constant 8x8 blocks: block ``b`` (raster order)
+    holds ``128 + 2*k_b`` with ``k_b = (i + 7*b) % 128 - 64``."""
+    arr = np.empty((nby * 8, nbx * 8), dtype=np.uint8)
+    for b in range(nbx * nby):
+        by, bx = divmod(b, nbx)
+        arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 128 + 2 * ((i + 7 * b) % 128 - 64)
+    return arr
+
+
+def _gray_rgb(g: np.ndarray) -> np.ndarray:
+    return np.stack([g, g, g], axis=-1)
+
+
+def _gradient_rgb(i) -> np.ndarray:
+    """``w = 6 + i%5``, ``h = 4 + i%3``; ``r`` ramps from ``i % 100`` over
+    the pixel index, ``g = 255 - r``, ``b = i % 100``."""
+    w, h, base = 6 + i % 5, 4 + i % 3, i % 100
+    r = (base + np.arange(w * h, dtype=np.uint8)).reshape(h, w)
+    return np.stack([r, 255 - r, np.full((h, w), base, dtype=np.uint8)], axis=-1)
+
+
+def _wav_ramp(i, rate: int) -> bytes:
+    """Mono WAV of ``100 + i%7`` samples ramping up from ``i % 50``."""
+    return wav_encode(i % 50 + np.arange(100 + i % 7, dtype=np.int16), rate)
+
+
+def _y4m_const(i) -> bytes:
+    """``(8 + 2*(i%3))`` x ``(6 + 2*(i%2))`` Y4M of ``3 + i%4`` frames,
+    frame ``f``'s luma the constant ``i % 150 + f``."""
+    w, h, n, base = 8 + 2 * (i % 3), 6 + 2 * (i % 2), 3 + i % 4, i % 150
+    return y4m_encode([np.full((h, w), base + f, dtype=np.uint8) for f in range(n)], int(w), int(h))
+
+
+def _jpeg_gray(i) -> bytes:
+    return jpeg_encode(_block_gray(i, 1 + i % 3, 1 + i % 2))
+
+
+def _jpeg_progressive(i) -> bytes:
+    g = _block_gray(i, 2 * (1 + i % 3), 2 * (1 + i % 2))
+    return jpeg_encode_progressive(_gray_rgb(g), subsample="420", restart_interval=2)
+
+
+def _md5_noise(key: str, n: int):
+    """``noise(*group)`` -> ``n`` pseudo-random bytes, digest byte ``j % 16``
+    of ``md5(key.format(*group, j // 16))``: one digest per 16 bytes,
+    computed once per group and reused by its members. The cache lives in
+    the returned closure, which every task unpickles afresh — one cache
+    per partition, none in the module."""
+    cache: dict[tuple, np.ndarray] = {}
+
+    def noise(*group) -> np.ndarray:
+        arr = cache.get(group)
+        if arr is None:
+            raw = b"".join(
+                hashlib.md5(key.format(*group, blk).encode()).digest()
+                for blk in range((n + 15) // 16)
+            )
+            arr = cache[group] = np.frombuffer(raw[:n], dtype=np.uint8)
+        return arr
+
+    return noise
+
+
+def _bump(a: np.ndarray, step: int) -> np.ndarray:
+    """A copy of ``a`` with +4 (saturating at 255) on every ``step``-th byte."""
+    a = a.copy()
+    a[::step] = np.minimum(a[::step].astype(np.int64) + 4, 255)
+    return a
+
+
+def _ahash_bits(px: np.ndarray) -> np.ndarray:
+    """Bit ``i`` set iff ``px_i * n > sum(px)``: the integer-exact "above
+    the mean", so a SQL oracle replays every bit."""
+    flat = px.reshape(-1).astype(np.int64)
+    return flat * flat.size > int(flat.sum())
+
+
+def _bitstring(bits) -> str:
+    return (np.asarray(bits, dtype=np.uint8) + ord("0")).tobytes().decode("ascii")
+
+
 def attach_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic grayscale JPEG fixtures with an EXACT decode oracle.
 
@@ -1228,23 +1343,7 @@ def attach_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     quantizer is 16, so the stored coefficient is exactly ``k`` and decode
     returns exactly ``128 + 2*k`` — every decoded statistic is closed-form
     in the id while Spark runs the REAL Huffman/DCT pipeline both ways."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                nbx, nby = 1 + i % 3, 1 + i % 2
-                arr = np.empty((nby * 8, nbx * 8), dtype=np.uint8)
-                for b in range(nbx * nby):
-                    by, bx = divmod(b, nbx)
-                    k = (i + 7 * b) % 128 - 64
-                    arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 128 + 2 * k
-                payloads.append(jpeg_encode(arr))
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, _jpeg_gray)
 
 
 def attach_jpeg_color_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1259,23 +1358,9 @@ def attach_jpeg_color_payload(df: DataFrame, id_col: str = "doc_id") -> DataFram
     whole 3-component MCU-interleave / per-component predictor / dual
     quant+Huffman table machinery executes with zero loss — decoded stats
     stay closed-form in the id."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                nbx, nby = 1 + i % 3, 1 + i % 2
-                g = np.empty((nby * 8, nbx * 8), dtype=np.uint8)
-                for b in range(nbx * nby):
-                    by, bx = divmod(b, nbx)
-                    k = (i + 7 * b) % 128 - 64
-                    g[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 128 + 2 * k
-                payloads.append(jpeg_encode(np.stack([g, g, g], axis=-1)))
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(
+        df, id_col, lambda i: jpeg_encode(_gray_rgb(_block_gray(i, 1 + i % 3, 1 + i % 2)))
+    )
 
 
 def attach_jpeg_420_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1291,25 +1376,11 @@ def attach_jpeg_420_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Cr per 16x16 MCU) runs the real §F.1/§F.2 machinery both ways.
     Images span ``(1 + id%2)`` x ``(1 + id%3)`` MCUs of 16x16."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(i) -> bytes:
+        g = _block_gray(i, 2 * (1 + i % 2), 2 * (1 + i % 3))
+        return jpeg_encode(_gray_rgb(g), subsample="420", restart_interval=2)
 
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                nbx, nby = 2 * (1 + i % 2), 2 * (1 + i % 3)
-                g = np.empty((nby * 8, nbx * 8), dtype=np.uint8)
-                for b in range(nbx * nby):
-                    by, bx = divmod(b, nbx)
-                    k = (i + 7 * b) % 128 - 64
-                    g[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 128 + 2 * k
-                payloads.append(
-                    jpeg_encode(np.stack([g, g, g], axis=-1), subsample="420",
-                                restart_interval=2)
-                )
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, make)
 
 
 def attach_jpeg_progressive_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1328,28 +1399,7 @@ def attach_jpeg_progressive_payload(df: DataFrame, id_col: str = "doc_id") -> Da
     reassemble each k bit-for-bit. Images span ``(1 + id%3)`` x
     ``(1 + id%2)`` MCUs of 16x16 (transposed vs the 420 fixture so the
     two queries don't share byte streams)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                nbx, nby = 2 * (1 + i % 3), 2 * (1 + i % 2)
-                g = np.empty((nby * 8, nbx * 8), dtype=np.uint8)
-                for b in range(nbx * nby):
-                    by, bx = divmod(b, nbx)
-                    k = (i + 7 * b) % 128 - 64
-                    g[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 128 + 2 * k
-                payloads.append(
-                    jpeg_encode_progressive(
-                        np.stack([g, g, g], axis=-1), subsample="420",
-                        restart_interval=2,
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, _jpeg_progressive)
 
 
 def attach_mixed_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1365,40 +1415,16 @@ def attach_mixed_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
     branch is deterministic in the id, so the quarantine split AND the
     surviving stats replay exactly in SQL."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(i) -> bytes:
+        variant = i % 4
+        if variant == 1:
+            return _jpeg_progressive(i)
+        if variant == 3:
+            return f"not-an-image:{int(i)}".encode()
+        enc = _jpeg_gray(i)
+        return enc if variant == 0 else enc[:20]
 
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                variant = i % 4
-                if variant in (0, 2):
-                    nbx, nby = 1 + i % 3, 1 + i % 2
-                    g = np.empty((nby * 8, nbx * 8), dtype=np.uint8)
-                    for b in range(nbx * nby):
-                        by, bx = divmod(b, nbx)
-                        k = (i + 7 * b) % 128 - 64
-                        g[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 128 + 2 * k
-                    enc = jpeg_encode(g)
-                    payloads.append(enc if variant == 0 else enc[:20])
-                elif variant == 1:
-                    nbx, nby = 2 * (1 + i % 3), 2 * (1 + i % 2)
-                    g = np.empty((nby * 8, nbx * 8), dtype=np.uint8)
-                    for b in range(nbx * nby):
-                        by, bx = divmod(b, nbx)
-                        k = (i + 7 * b) % 128 - 64
-                        g[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 128 + 2 * k
-                    payloads.append(
-                        jpeg_encode_progressive(
-                            np.stack([g, g, g], axis=-1), subsample="420",
-                            restart_interval=2,
-                        )
-                    )
-                else:
-                    payloads.append(f"not-an-image:{int(i)}".encode())
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, make)
 
 
 def decode_image(
@@ -1428,8 +1454,6 @@ def decode_image(
     importable; without PIL they raise NotImplementedError (the narrowed
     honesty gate).
     """
-    import io
-
     try:
         from PIL import Image  # noqa: F401
 
@@ -1438,16 +1462,11 @@ def decode_image(
         have_pil = False
 
     def decode_one(b: bytes):
-        import numpy as np
-
         if b and (b.startswith(b"P6") or b.startswith(_PNG_SIG)):
-            arr = ppm_decode(b) if b.startswith(b"P6") else png_decode(b)
-            h, w, _ = arr.shape
-            m = arr.reshape(-1, 3).mean(axis=0) if h * w else np.zeros(3)
-            return w, h, "RGB", float(m[0]), float(m[1]), float(m[2])
-        if b and b.startswith(b"\xff\xd8") and not have_pil:
+            px = ppm_decode(b) if b.startswith(b"P6") else png_decode(b)
+        elif b and b.startswith(b"\xff\xd8") and not have_pil:
             try:
-                g = jpeg_decode(b)
+                px = jpeg_decode(b)
             except NotImplementedError:
                 raise NotImplementedError(
                     "lossless/arithmetic/hierarchical JPEG decode needs a "
@@ -1455,79 +1474,28 @@ def decode_image(
                     "baseline, extended-sequential, and progressive "
                     "grayscale / 4:4:4 / 4:2:0 color with restart markers"
                 )
-            if g.ndim == 3:
-                h, w, _ = g.shape
-                m = g.reshape(-1, 3).mean(axis=0) if h * w else np.zeros(3)
-                return w, h, "RGB", float(m[0]), float(m[1]), float(m[2])
-            h, w = g.shape
-            mean = float(g.mean()) if h * w else 0.0
-            return w, h, "L", mean, mean, mean
-        if not have_pil:
+        elif not have_pil:
             raise NotImplementedError(
                 "image decode for this format needs a codec library "
                 "(PIL/opencv); stdlib codecs cover P6, PNG, baseline "
                 "grayscale JPEG"
             )
-        from PIL import Image
+        else:
+            from PIL import Image
 
-        img = Image.open(io.BytesIO(b)).convert("RGB")
-        arr = np.asarray(img)
-        m = arr.reshape(-1, 3).mean(axis=0)
-        return img.width, img.height, "RGB", float(m[0]), float(m[1]), float(m[2])
+            px = np.asarray(Image.open(io.BytesIO(b)).convert("RGB"))
+        h, w = px.shape[:2]
+        if px.ndim == 2:
+            mean = round(float(px.mean()), 4) if h * w else 0.0
+            return [(w, h, "L", mean, mean, mean)]
+        m = px.reshape(-1, 3).mean(axis=0) if h * w else np.zeros(3)
+        return [(w, h, "RGB", *(round(float(v), 4) for v in m))]
 
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError("on_error must be 'raise' or 'quarantine'")
-    quarantine = on_error == "quarantine"
-
-    def decode_safe(b: bytes):
-        try:
-            return decode_one(b) + (None,)
-        except Exception as exc:  # noqa: BLE001 — quarantine, never kill the task
-            return (None, None, None, None, None, None, type(exc).__name__)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if quarantine:
-                decoded = pdf[payload_col].map(decode_safe)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf[id_col].astype("int64"),
-                        "width": pd.array(decoded.map(lambda t: t[0]), dtype="Int32"),
-                        "height": pd.array(decoded.map(lambda t: t[1]), dtype="Int32"),
-                        "mode": decoded.map(lambda t: t[2]),
-                        "mean_r": decoded.map(
-                            lambda t: round(t[3], 4) if t[3] is not None else None
-                        ),
-                        "mean_g": decoded.map(
-                            lambda t: round(t[4], 4) if t[4] is not None else None
-                        ),
-                        "mean_b": decoded.map(
-                            lambda t: round(t[5], 4) if t[5] is not None else None
-                        ),
-                        "error": decoded.map(lambda t: t[6]),
-                    }
-                )
-                continue
-            decoded = pdf[payload_col].map(decode_one)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": decoded.map(lambda t: t[0]).astype("int32"),
-                    "height": decoded.map(lambda t: t[1]).astype("int32"),
-                    "mode": decoded.map(lambda t: t[2]),
-                    "mean_r": decoded.map(lambda t: round(t[3], 4)),
-                    "mean_g": decoded.map(lambda t: round(t[4], 4)),
-                    "mean_b": decoded.map(lambda t: round(t[5], 4)),
-                }
-            )
-
-    schema = (
-        "doc_id long, width int, height int, mode string, "
-        "mean_r double, mean_g double, mean_b double"
+    return _map_payloads(
+        df, id_col, payload_col, decode_one,
+        "width int, height int, mode string, mean_r double, mean_g double, mean_b double",
+        on_error,
     )
-    if quarantine:
-        schema += ", error string"
-    return df.mapInPandas(batches, schema=schema)
 
 
 def sample_frames(
@@ -1540,18 +1508,14 @@ def sample_frames(
     100 TB video pipeline exercises.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                b = b or b""
-                for j in range(0, max(len(b), 1), frame_bytes):
-                    ids.append(i)
-                    idxs.append(j // frame_bytes)
-                    frames.append(bytes(b[j : j + frame_bytes]))
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
+    def windows(b):
+        b = b or b""
+        return [
+            (j // frame_bytes, bytes(b[j : j + frame_bytes]))
+            for j in range(0, max(len(b), 1), frame_bytes)
+        ]
 
-    return df.mapInPandas(batches, schema=f"{id_col} long, frame_idx int, frame binary")
+    return _map_payloads(df, id_col, payload_col, windows, "frame_idx int, frame binary")
 
 
 def resize_image(
@@ -1572,9 +1536,7 @@ def resize_image(
     except ImportError:
         have_pil = False
 
-    def resize_one(b: bytes) -> bytes:
-        import numpy as np
-
+    def resize_one(b: bytes):
         if b and (b.startswith(b"P6") or b.startswith(_PNG_SIG)):
             is_png = b.startswith(_PNG_SIG)
             arr = png_decode(b) if is_png else ppm_decode(b)
@@ -1584,28 +1546,20 @@ def resize_image(
             resampled = arr[rows[:, None], cols[None, :], :]
             # re-encode in the payload's own format — format-preserving,
             # like any real thumbnailing pass
-            return png_encode(resampled) if is_png else ppm_encode(resampled)
+            return [(png_encode(resampled) if is_png else ppm_encode(resampled),)]
         if not have_pil:
             raise NotImplementedError(
                 "JPEG-family image resize requires a codec library (PIL); "
                 "only the stdlib P6 and PNG codecs are available here"
             )
-        import io
-
         from PIL import Image
 
         img = Image.open(io.BytesIO(b)).resize((width, height), Image.NEAREST)
         buf = io.BytesIO()
         img.save(buf, format="PNG")
-        return buf.getvalue()
+        return [(buf.getvalue(),)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "resized": pdf[payload_col].map(resize_one)}
-            )
-
-    return df.mapInPandas(batches, schema=f"{id_col} long, resized binary")
+    return _map_payloads(df, id_col, payload_col, resize_one, "resized binary")
 
 
 def attach_ppm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1618,20 +1572,7 @@ def attach_ppm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     of the id — ``mean_r = id%100 + (w*h-1)/2`` — which is what lets a SQL
     oracle check the EXECUTED pixel path without being able to parse bytes.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                w, h, base = 6 + i % 5, 4 + i % 3, i % 100
-                r = (base + np.arange(w * h, dtype=np.uint8)).reshape(h, w)
-                arr = np.stack([r, 255 - r, np.full((h, w), base, dtype=np.uint8)], axis=-1)
-                payloads.append(ppm_encode(arr))
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, lambda i: ppm_encode(_gradient_rgb(i)))
 
 
 def attach_png_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1643,20 +1584,7 @@ def attach_png_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     statistic from the id arithmetic while Spark actually inflates zlib
     streams and unfilters scanlines — the executed proof behind the
     compressed-image path."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                w, h, base = 6 + i % 5, 4 + i % 3, i % 100
-                r = (base + np.arange(w * h, dtype=np.uint8)).reshape(h, w)
-                arr = np.stack([r, 255 - r, np.full((h, w), base, dtype=np.uint8)], axis=-1)
-                payloads.append(png_encode(arr))
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, lambda i: png_encode(_gradient_rgb(i)))
 
 
 def extract_features(
@@ -1666,19 +1594,12 @@ def extract_features(
     payload's sha256 (uniform in [0,1)). Stands in for an embedding model so
     the array<float> column shape, Arrow batching, and downstream similarity
     operators are exercisable end-to-end without model weights."""
-    import hashlib as _hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = []
-            for b in pdf[payload_col]:
-                digest = _hashlib.sha256(b or b"").digest()
-                feats.append(
-                    [int.from_bytes(digest[4 * j : 4 * j + 4], "big") / 2**32 for j in range(dim)]
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
+    def features(b):
+        digest = hashlib.sha256(b or b"").digest()
+        return [([int.from_bytes(digest[4 * j : 4 * j + 4], "big") / 2**32 for j in range(dim)],)]
 
-    return df.mapInPandas(batches, schema=f"{id_col} long, features array<double>")
+    return _map_payloads(df, id_col, payload_col, features, "features array<double>")
 
 
 # --- WAV (RIFF/PCM) codec: stdlib only, the audio twin of the P6 path ------
@@ -1689,10 +1610,6 @@ def extract_features(
 
 def wav_encode(samples, sample_rate: int) -> bytes:
     """int16 array [n] (mono) or [n, ch] -> RIFF/PCM bytes."""
-    import struct
-
-    import numpy as np
-
     a = np.asarray(samples, dtype="<i2")
     if a.ndim == 1:
         a = a[:, None]
@@ -1713,10 +1630,6 @@ def wav_encode(samples, sample_rate: int) -> bytes:
 def wav_decode(b: bytes):
     """RIFF/PCM bytes -> (sample_rate, int16 array [n, ch]). Walks the chunk
     list (fmt may be followed by LIST/fact chunks before data)."""
-    import struct
-
-    import numpy as np
-
     if not (b.startswith(b"RIFF") and b[8:12] == b"WAVE"):
         raise ValueError("not a RIFF/WAVE payload")
     pos, rate, ch, bits, data = 12, None, None, None, None
@@ -1751,67 +1664,24 @@ def decode_audio(
     """
 
     def decode_one(b: bytes):
-        import numpy as np
-
         rate, a = wav_decode(b)
         x = a.astype(np.float64)
         n = a.shape[0]
-        return (
+        return [(
             rate,
             a.shape[1],
             n,
             n / rate,  # IEEE division — bit-identical in any engine, no rounding
             round(float(x.mean()) if n else 0.0, 4),
             round(float(np.sqrt((x**2).mean())) if n else 0.0, 4),
-        )
+        )]
 
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError("on_error must be 'raise' or 'quarantine'")
-    quarantine = on_error == "quarantine"
-
-    def decode_safe(b: bytes):
-        try:
-            return decode_one(b) + (None,)
-        except Exception as exc:  # noqa: BLE001 — quarantine, never kill the task
-            return (None, None, None, None, None, None, type(exc).__name__)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if quarantine:
-                d = pdf[payload_col].map(decode_safe)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf[id_col].astype("int64"),
-                        "sample_rate": pd.array(d.map(lambda t: t[0]), dtype="Int32"),
-                        "n_channels": pd.array(d.map(lambda t: t[1]), dtype="Int32"),
-                        "n_samples": pd.array(d.map(lambda t: t[2]), dtype="Int64"),
-                        "duration_s": d.map(lambda t: t[3]),
-                        "mean_amp": d.map(lambda t: t[4]),
-                        "rms_amp": d.map(lambda t: t[5]),
-                        "error": d.map(lambda t: t[6]),
-                    }
-                )
-                continue
-            d = pdf[payload_col].map(decode_one)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "sample_rate": d.map(lambda t: t[0]).astype("int32"),
-                    "n_channels": d.map(lambda t: t[1]).astype("int32"),
-                    "n_samples": d.map(lambda t: t[2]).astype("int64"),
-                    "duration_s": d.map(lambda t: t[3]),
-                    "mean_amp": d.map(lambda t: t[4]),
-                    "rms_amp": d.map(lambda t: t[5]),
-                }
-            )
-
-    schema = (
-        "doc_id long, sample_rate int, n_channels int, n_samples long, "
-        "duration_s double, mean_amp double, rms_amp double"
+    return _map_payloads(
+        df, id_col, payload_col, decode_one,
+        "sample_rate int, n_channels int, n_samples long, "
+        "duration_s double, mean_amp double, rms_amp double",
+        on_error,
     )
-    if quarantine:
-        schema += ", error string"
-    return df.mapInPandas(batches, schema=schema)
 
 
 def attach_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1819,18 +1689,7 @@ def attach_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``n = 100 + id % 7`` samples forming the arithmetic ramp
     ``s_i = (id % 50) + i``. Mean and RMS are closed-form in (id, n) — the
     SQL oracle predicts them while Spark decodes real RIFF bytes."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                n, rate, base = 100 + i % 7, int(8000 + 4000 * (i % 3)), i % 50
-                payloads.append(wav_encode(base + np.arange(n, dtype=np.int16), rate))
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, lambda i: _wav_ramp(i, int(8000 + 4000 * (i % 3))))
 
 
 def attach_mixed_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1843,26 +1702,18 @@ def attach_mixed_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
     ValueError). Every branch deterministic in the id, so the quarantine
     split and the surviving stats replay exactly in SQL."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(i) -> bytes:
+        variant = i % 3
+        if variant == 2:
+            return f"not-audio:{int(i)}".encode()
+        # rate is CONSTANT here on purpose: decodable rows exist only at
+        # i % 3 == 0, so a rate derived from i % 3 is dead code and a latent
+        # trap if the variant modulus ever changes (r12 ADVICE); the SQL
+        # oracle hardcodes 8000 to match.
+        enc = _wav_ramp(i, 8000)
+        return enc if variant == 0 else enc[:16]
 
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                variant = i % 3
-                if variant == 2:
-                    payloads.append(f"not-audio:{int(i)}".encode())
-                    continue
-                # rate is CONSTANT here on purpose: decodable rows exist only
-                # at i % 3 == 0, so a rate derived from i % 3 is dead code and
-                # a latent trap if the variant modulus ever changes (r12
-                # ADVICE); the SQL oracle hardcodes 8000 to match.
-                n, rate, base = 100 + i % 7, 8000, i % 50
-                enc = wav_encode(base + np.arange(n, dtype=np.int16), rate)
-                payloads.append(enc if variant == 0 else enc[:16])
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, make)
 
 
 # --- Y4M (YUV4MPEG2) codec: stdlib only, the video twin of P6/RIFF ----------
@@ -1874,8 +1725,6 @@ def attach_mixed_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
 
 def y4m_encode(lumas, width: int, height: int, fps: str = "25:1") -> bytes:
     """List of uint8 luma planes [h, w] -> Y4M bytes (U/V planes neutral 128)."""
-    import numpy as np
-
     if width % 2 or height % 2:
         raise ValueError("4:2:0 requires even dimensions")
     uv = np.full((height // 2) * (width // 2), 128, dtype=np.uint8).tobytes()
@@ -1891,8 +1740,6 @@ def y4m_encode(lumas, width: int, height: int, fps: str = "25:1") -> bytes:
 def y4m_decode(b: bytes):
     """Y4M bytes -> (width, height, [uint8 luma planes]). Walks real FRAME
     markers; skips optional per-frame parameters after FRAME."""
-    import numpy as np
-
     if not b.startswith(b"YUV4MPEG2"):
         raise ValueError("not a YUV4MPEG2 payload")
     hdr_end = b.index(b"\n")
@@ -1932,48 +1779,15 @@ def decode_video_frames(
     ``on_error="quarantine"`` emits ONE row per corrupt payload (null
     frame fields, exception class in ``error``) instead of killing the
     task; valid payloads keep their per-frame rows with ``error`` null."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError("on_error must be 'raise' or 'quarantine'")
-    quarantine = on_error == "quarantine"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, ws, hs, means, errs = [], [], [], [], [], []
-            for i, b in zip(pdf[id_col].astype("int64"), pdf[payload_col]):
-                try:
-                    w, h, lumas = y4m_decode(b)
-                except Exception as exc:  # noqa: BLE001 — quarantine path
-                    if not quarantine:
-                        raise
-                    ids.append(int(i))
-                    idxs.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    means.append(None)
-                    errs.append(type(exc).__name__)
-                    continue
-                for j in range(0, len(lumas), stride):
-                    ids.append(int(i))
-                    idxs.append(j)
-                    ws.append(w)
-                    hs.append(h)
-                    means.append(round(float(lumas[j].mean()), 4))
-                    errs.append(None)
-            out = {
-                "doc_id": ids,
-                "frame_idx": pd.array(idxs, dtype="Int32"),
-                "width": pd.array(ws, dtype="Int32"),
-                "height": pd.array(hs, dtype="Int32"),
-                "luma_mean": pd.array(means, dtype="float64"),
-            }
-            if quarantine:
-                out["error"] = pd.array(errs, dtype="string")
-            yield pd.DataFrame(out)
+    def frames(b: bytes):
+        w, h, lumas = y4m_decode(b)
+        return [(j, w, h, round(float(lumas[j].mean()), 4)) for j in range(0, len(lumas), stride)]
 
-    schema = "doc_id long, frame_idx int, width int, height int, luma_mean double"
-    if quarantine:
-        schema += ", error string"
-    return df.mapInPandas(batches, schema=schema)
+    return _map_payloads(
+        df, id_col, payload_col, frames,
+        "frame_idx int, width int, height int, luma_mean double", on_error,
+    )
 
 
 def attach_y4m_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1981,19 +1795,7 @@ def attach_y4m_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``h = 6 + 2*(id%2)``, ``n_frames = 3 + id%4``, frame ``f``'s luma is the
     constant ``(id % 150) + f`` (max 155 < 256) — every frame statistic is
     closed-form in (id, f) for the SQL oracle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                w, h, n, base = 8 + 2 * (i % 3), 6 + 2 * (i % 2), 3 + i % 4, i % 150
-                lumas = [np.full((h, w), base + f, dtype=np.uint8) for f in range(n)]
-                payloads.append(y4m_encode(lumas, int(w), int(h)))
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, _y4m_const)
 
 
 def attach_mixed_video_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2004,23 +1806,14 @@ def attach_mixed_video_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
     (YUV4MPEG2 magic intact, header/frames cut -> ValueError); ``== 2``
     is non-video bytes (no magic -> ValueError)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(i) -> bytes:
+        variant = i % 3
+        if variant == 2:
+            return f"not-video:{int(i)}".encode()
+        enc = _y4m_const(i)
+        return enc if variant == 0 else enc[:20]
 
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                variant = i % 3
-                if variant == 2:
-                    payloads.append(f"not-video:{int(i)}".encode())
-                    continue
-                w, h, n, base = 8 + 2 * (i % 3), 6 + 2 * (i % 2), 3 + i % 4, i % 150
-                lumas = [np.full((h, w), base + f, dtype=np.uint8) for f in range(n)]
-                enc = y4m_encode(lumas, int(w), int(h))
-                payloads.append(enc if variant == 0 else enc[:20])
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, make)
 
 
 # --- spectral analysis: real DSP on the executed audio path -----------------
@@ -2032,32 +1825,17 @@ def audio_spectrum_stats(df: DataFrame, payload_col: str = "payload", id_col: st
     filterbanks in a speech pipeline), vectorized per Arrow batch."""
 
     def analyze_one(b: bytes):
-        import numpy as np
-
         rate, a = wav_decode(b)
         x = a[:, 0].astype(np.float64)
         n = x.shape[0]
         spec = np.abs(np.fft.rfft(x))
         spec[0] = 0.0  # ignore DC offset
         k = int(np.argmax(spec))
-        return n, rate, k, k * rate / n
+        return [(n, rate, k, k * rate / n)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            d = pdf[payload_col].map(analyze_one)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_samples": d.map(lambda t: t[0]).astype("int64"),
-                    "sample_rate": d.map(lambda t: t[1]).astype("int32"),
-                    "peak_bin": d.map(lambda t: t[2]).astype("int32"),
-                    "peak_hz": d.map(lambda t: t[3]),
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema="doc_id long, n_samples long, sample_rate int, peak_bin int, peak_hz double",
+    return _map_payloads(
+        df, id_col, payload_col, analyze_one,
+        "n_samples long, sample_rate int, peak_bin int, peak_hz double",
     )
 
 
@@ -2069,20 +1847,13 @@ def attach_tone_payload(df: DataFrame, id_col: str = "doc_id", n: int = 256) -> 
     below the peak), so the detected frequency is the closed form
     ``k * rate / n`` — and with n = 256 dividing both rates exactly, the
     division is bit-exact in any engine."""
+    grid = np.arange(n)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(i) -> bytes:
+        k, rate = 5 + i % 10, int(8000 + 4000 * (i % 3))
+        return wav_encode(np.round(1000 * np.cos(2 * np.pi * k * grid / n)).astype(np.int16), rate)
 
-        i_grid = np.arange(n)
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col].astype("int64"):
-                k, rate = 5 + i % 10, int(8000 + 4000 * (i % 3))
-                s = np.round(1000 * np.cos(2 * np.pi * k * i_grid / n)).astype(np.int16)
-                payloads.append(wav_encode(s, rate))
-            yield pd.DataFrame({id_col: pdf[id_col].astype("int64"), "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _attach(df, id_col, make)
 
 
 def attach_ppm_payload_random(
@@ -2106,45 +1877,15 @@ def attach_ppm_payload_random(
     equals the SQL ``CAST('0x' || substring(md5(...), j*2+1, 2) AS INT)``,
     so the DuckDB oracle re-derives every byte from hex substrings.
     """
-    import hashlib
+    noise = _md5_noise("{}:{}", side * side * 3)
 
-    import numpy as np
-    import pandas as pd
+    def make(i) -> bytes:
+        a = noise(int(i) // group_div)
+        if i % group_div == group_div - 1:
+            a = _bump(a, 48)
+        return ppm_encode(a.reshape(side, side, 3))
 
-    n_bytes = side * side * 3
-    n_blocks = (n_bytes + 15) // 16
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, np.ndarray] = {}
-
-        def base_bytes(g: int) -> np.ndarray:
-            arr = cache.get(g)
-            if arr is None:
-                raw = b"".join(
-                    hashlib.md5(f"{g}:{blk}".encode()).digest()
-                    for blk in range(n_blocks)
-                )
-                arr = np.frombuffer(raw[:n_bytes], dtype=np.uint8)
-                cache[g] = arr
-            return arr
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for doc_id in pdf[id_col]:
-                a = base_bytes(int(doc_id) // group_div).copy()
-                if int(doc_id) % group_div == group_div - 1:
-                    idx = np.arange(0, n_bytes, 48)
-                    a[idx] = np.minimum(a[idx].astype(np.int64) + 4, 255).astype(
-                        np.uint8
-                    )
-                payloads.append(ppm_encode(a.reshape(side, side, 3)))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(
-        encode, schema=f"{id_col} long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def image_ahash(
@@ -2160,26 +1901,12 @@ def image_ahash(
     Executes the real codec path: P6 parse → numpy gray reduce → bit pack,
     one Arrow batch at a time; no Python per row, no shuffle.
     """
-    import numpy as np
-    import pandas as pd
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for b in pdf[payload_col]:
-                arr = ppm_decode(bytes(b)).astype(np.int64)
-                gray = arr.sum(axis=2) // 3  # integer gray, row-major
-                flat = gray.reshape(-1)
-                total = int(flat.sum())
-                bits = (flat * flat.size > total).astype(np.uint8)
-                out.append("".join("1" if x else "0" for x in bits))
-            yield pd.DataFrame({id_col: pdf[id_col], "ahash": out})
+    def ahash(b: bytes):
+        gray = ppm_decode(b).astype(np.int64).sum(axis=2) // 3  # integer gray, row-major
+        return [(_bitstring(_ahash_bits(gray)),)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        hash_batch, schema=f"{id_col} long, ahash string"
-    )
+    return _map_payloads(df, id_col, payload_col, ahash, "ahash string")
 
 
 def attach_pcm_payload_random(
@@ -2195,44 +1922,15 @@ def attach_pcm_payload_random(
     cached per group (interpreted per-element SQL lambdas were the
     bottleneck) — while staying hex-substring-replayable in the oracle.
     """
-    import hashlib
+    noise = _md5_noise("{}#{}", n_samples)
 
-    import numpy as np
-    import pandas as pd
+    def make(i) -> bytes:
+        s = noise(int(i) // group_div).astype(np.int16) - 128
+        if i % group_div == group_div - 1:
+            s[::128] += 2
+        return wav_encode(s, sample_rate=8000)
 
-    n_blocks = (n_samples + 15) // 16
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, np.ndarray] = {}
-
-        def base_samples(g: int) -> np.ndarray:
-            arr = cache.get(g)
-            if arr is None:
-                raw = b"".join(
-                    hashlib.md5(f"{g}#{blk}".encode()).digest()
-                    for blk in range(n_blocks)
-                )
-                arr = (
-                    np.frombuffer(raw[:n_samples], dtype=np.uint8).astype(np.int16)
-                    - 128
-                )
-                cache[g] = arr
-            return arr
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for doc_id in pdf[id_col]:
-                s = base_samples(int(doc_id) // group_div).copy()
-                if int(doc_id) % group_div == group_div - 1:
-                    s[::128] += 2
-                payloads.append(wav_encode(s, sample_rate=8000))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(
-        encode, schema=f"{id_col} long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def audio_fingerprint(
@@ -2251,26 +1949,13 @@ def audio_fingerprint(
 
     Executes the real RIFF chunk walk + numpy reduce per Arrow batch.
     """
-    import numpy as np
-    import pandas as pd
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for b in pdf[payload_col]:
-                _rate, samples = wav_decode(bytes(b))
-                mono = samples[:, 0].astype(np.int64)
-                win = mono.reshape(n_windows, -1)
-                energy = (win * win).sum(axis=1)
-                bits = np.concatenate(([0], (energy[1:] > energy[:-1]).astype(np.uint8)))
-                out.append("".join("1" if x else "0" for x in bits))
-            yield pd.DataFrame({id_col: pdf[id_col], "afp": out})
+    def fingerprint(b: bytes):
+        win = wav_decode(b)[1][:, 0].astype(np.int64).reshape(n_windows, -1)
+        energy = (win * win).sum(axis=1)
+        return [(_bitstring(np.concatenate(([False], energy[1:] > energy[:-1]))),)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        fp, schema=f"{id_col} long, afp string"
-    )
+    return _map_payloads(df, id_col, payload_col, fingerprint, "afp string")
 
 
 def attach_y4m_payload_random(
@@ -2288,50 +1973,15 @@ def attach_y4m_payload_random(
     is built to absorb. Kernel-digest synthesis (16 bytes per md5), oracle
     reads hex substrings of the same md5.
     """
-    import hashlib
+    noise = _md5_noise("{}|{}:{}", side * side)
 
-    import numpy as np
-    import pandas as pd
+    def make(i) -> bytes:
+        frames = [noise(int(i) // group_div, f) for f in range(n_frames)]
+        if i % group_div == group_div - 1:
+            frames[0] = _bump(frames[0], 16)
+        return y4m_encode([a.reshape(side, side) for a in frames], side, side)
 
-    n_px = side * side
-    n_blocks = (n_px + 15) // 16
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, list[np.ndarray]] = {}
-
-        def base_frames(g: int) -> list[np.ndarray]:
-            fr = cache.get(g)
-            if fr is None:
-                fr = []
-                for f in range(n_frames):
-                    raw = b"".join(
-                        hashlib.md5(f"{g}|{f}:{blk}".encode()).digest()
-                        for blk in range(n_blocks)
-                    )
-                    fr.append(np.frombuffer(raw[:n_px], dtype=np.uint8))
-                cache[g] = fr
-            return fr
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for doc_id in pdf[id_col]:
-                frames = [a.copy() for a in base_frames(int(doc_id) // group_div)]
-                if int(doc_id) % group_div == group_div - 1:
-                    f0 = frames[0]
-                    idx = np.arange(0, n_px, 16)
-                    f0[idx] = np.minimum(f0[idx].astype(np.int64) + 4, 255).astype(
-                        np.uint8
-                    )
-                payloads.append(
-                    y4m_encode([a.reshape(side, side) for a in frames], side, side)
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _id_feed(df, id_col).mapInPandas(
-        encode, schema=f"{id_col} long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def video_frame_hashes(
@@ -2343,25 +1993,8 @@ def video_frame_hashes(
     frame-sampling primitive clip dedup joins on (identical frames collide
     on the full 64-bit hash; a corrupted frame just drops out).
     """
-    import numpy as np
-    import pandas as pd
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, fidx, hashes = [], [], []
-            for doc_id, b in zip(pdf[id_col], pdf[payload_col]):
-                _w, _h, frames = y4m_decode(bytes(b))
-                for f, plane in enumerate(frames):
-                    flat = plane.reshape(-1).astype(np.int64)
-                    total = int(flat.sum())
-                    bits = (flat * flat.size > total).astype(np.uint8)
-                    ids.append(doc_id)
-                    fidx.append(f)
-                    hashes.append("".join("1" if x else "0" for x in bits))
-            yield pd.DataFrame({id_col: ids, "frame_idx": fidx, "fhash": hashes})
+    def frame_hashes(b: bytes):
+        return [(f, _bitstring(_ahash_bits(p))) for f, p in enumerate(y4m_decode(b)[2])]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        hash_batch, schema=f"{id_col} long, frame_idx int, fhash string"
-    )
+    return _map_payloads(df, id_col, payload_col, frame_hashes, "frame_idx int, fhash string")

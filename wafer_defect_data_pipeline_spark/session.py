@@ -21,6 +21,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "wafer-defect-data-pipeline-spark"
 
+#: the directory the package is imported from (its parent)
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     """Local-mode thread count, overridable by the driver via SPARK_GRAFT_CPUS."""
@@ -75,7 +78,14 @@ def get_spark(
     for k, v in engine_conf(p).items():
         builder = builder.config(k, v)
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # Arrow kernels are pickled by reference to this package's modules, so
+    # the Python workers must import it from wherever the driver started
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, worker_path) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
