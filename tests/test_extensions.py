@@ -523,6 +523,25 @@ def test_operators_handle_empty_input(spark):
     assert remove_outliers_by_group(empty_docs.withColumn("v", F.lit(1.0)), "doc_id", ["v"]).count() == 0
 
 
+def test_pinned_count_counts_inside_the_pin(spark):
+    """curation_end_to_end counts each stage through an observation on its
+    eager pin (one job per stage): the counts must be the row counts, on a
+    narrow frame, a shuffled one and an empty one, and the frame returned
+    must be the checkpoint, not the lineage."""
+    from wafer_defect_data_pipeline_spark.plans.queries_curation import _pinned_count
+
+    r = spark.range(1000)
+    cases = {
+        r.filter(F.col("id") % 7 == 0): 143,
+        r.groupBy((F.col("id") % 13).alias("k")).count(): 13,
+        r.filter(F.col("id") < 0): 0,
+    }
+    for df, want in cases.items():
+        pin, n = _pinned_count(df)
+        assert n == want == pin.count()
+        assert "LogicalRDD" in pin._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_q1_results_invariant_to_partitioning(spark, sf_small):
     """Decimal aggregation makes q1 bit-identical regardless of partition
     count — the property that keeps the oracle hash stable when the driver's

@@ -92,7 +92,7 @@ _WORKER_SCRIPT = textwrap.dedent(
 
     sys.path.insert(0, sys.argv[1])
     from tests.wafer_fixture import make_wafer_pdf
-    from wafer_defect_data_pipeline_spark.operators.clustering import run_kmeans_by_step
+    from wafer_defect_data_pipeline_spark.operators import clustering
     from wafer_defect_data_pipeline_spark.operators.multimodal import (
         attach_ppm_payload,
         decode_image,
@@ -102,7 +102,8 @@ _WORKER_SCRIPT = textwrap.dedent(
     spark = get_spark(app_name="wdps-worker-path", parallelism=2)
     ids = spark.range(8).withColumnRenamed("id", "doc_id")
     assert len(decode_image(attach_ppm_payload(ids)).collect()) == 8
-    labels = run_kmeans_by_step(spark.createDataFrame(make_wafer_pdf(300)), mode="parity")
+    clustering.LOCAL_MAX_ROWS = 0  # keep the parity kernel in a Python worker
+    labels = clustering.run_kmeans_by_step(spark.createDataFrame(make_wafer_pdf(300)), mode="parity")
     assert labels.filter("KMeans_Cluster IS NOT NULL").count() > 0
     spark.stop()
     print("worker-path-ok")
@@ -114,7 +115,7 @@ def test_workers_import_the_package_wherever_the_driver_starts():
     """Arrow kernels are pickled by reference, so the Python workers import
     the package themselves: a driver started outside the repo root, with
     the repo only on its OWN sys.path, must still run a multimodal kernel
-    and the k-means parity kernel."""
+    and the k-means parity kernel in its executor venue."""
     from wafer_defect_data_pipeline_spark.scratch import run_dir
 
     cwd = run_dir("worker_path")

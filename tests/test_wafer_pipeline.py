@@ -238,3 +238,95 @@ def test_cascade_pin_gate_policy(spark, wafer_df, sf_small, monkeypatch):
     assert cascade_pin_allowed(wafer_df) and not cascade_pin_allowed(li)
     monkeypatch.setenv("WDPS_WAFER_PIN_MAX_BYTES", "0")
     assert not cascade_pin_allowed(wafer_df)
+
+
+# --- k-means venues: driver below LOCAL_MAX_ROWS, executors above ----------
+
+def _cached_entries(spark) -> int:
+    # CacheManager.cachedData is private; isEmpty() alone cannot tell this
+    # call's entries from ones another test left behind
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+@pytest.fixture(scope="module")
+def clustered_input(spark, wafer_pdf):
+    return spark.createDataFrame(replica_add_features(replica_remove_outliers(wafer_pdf)).reset_index(drop=True))
+
+
+def _run_venue(spark, df, monkeypatch, **kw):
+    """run_kmeans_by_step with the executor venues' prediction builders
+    spied on: returns (labels by DEFECT_ID, output plan, {venue: plan})."""
+    from wafer_defect_data_pipeline_spark.operators import clustering
+
+    seen = {}
+    for name in ("_predictions_parity", "_predictions_distributed"):
+        real = getattr(clustering, name)
+
+        def spy(*a, _real=real, _name=name, **k):
+            preds = _real(*a, **k)
+            seen[_name] = preds._jdf.queryExecution().optimizedPlan().toString()
+            return preds
+
+        monkeypatch.setattr(clustering, name, spy)
+    before = _cached_entries(spark)
+    out = clustering.run_kmeans_by_step(df, **kw)
+    assert _cached_entries(spark) == before, "run_kmeans_by_step left a cache entry behind"
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    return out.toPandas().set_index("DEFECT_ID")["KMeans_Cluster"].sort_index(), plan, seen
+
+
+def test_kmeans_gate_branches(spark, clustered_input, monkeypatch):
+    """Below LOCAL_MAX_ROWS the labels come from a local relation with no
+    Python worker and no executor venue; with the gate at 0 the parity
+    kernel runs in applyInPandas, and with auto_parity_max_rows=0 the auto
+    mode hands every step to MLlib. No branch leaves a cache entry."""
+    from wafer_defect_data_pipeline_spark.operators import clustering
+
+    _, plan, seen = _run_venue(spark, clustered_input, monkeypatch, mode="auto")
+    assert "LocalRelation" in plan and "FlatMapGroupsInPandas" not in plan and not seen
+    _, plan, seen = _run_venue(spark, clustered_input, monkeypatch, mode="parity")
+    assert "LocalRelation" in plan and not seen
+
+    _, _, seen = _run_venue(spark, clustered_input, monkeypatch, mode="auto", auto_parity_max_rows=0)
+    assert list(seen) == ["_predictions_distributed"]
+    _, _, seen = _run_venue(spark, clustered_input, monkeypatch, mode="distributed")
+    assert list(seen) == ["_predictions_distributed"]
+
+    monkeypatch.setattr(clustering, "LOCAL_MAX_ROWS", 0)
+    for mode in ("auto", "parity"):
+        _, plan, seen = _run_venue(spark, clustered_input, monkeypatch, mode=mode)
+        assert list(seen) == ["_predictions_parity"] and "FlatMapGroupsInPandas" in seen["_predictions_parity"]
+        assert "LocalRelation" not in plan
+
+
+def test_kmeans_venues_bit_identical(spark, clustered_input, monkeypatch):
+    """Same kernel, same row order, same Arrow float64 values: the driver
+    and executor venues give the same labels, not just the same partition."""
+    from wafer_defect_data_pipeline_spark.operators import clustering
+
+    local, _, _ = _run_venue(spark, clustered_input, monkeypatch, mode="parity")
+    monkeypatch.setattr(clustering, "LOCAL_MAX_ROWS", 0)
+    remote, _, seen = _run_venue(spark, clustered_input, monkeypatch, mode="parity")
+    assert "_predictions_parity" in seen
+    assert local.notna().sum() > 0
+    assert local.equals(remote)
+
+
+def test_cli_plan_has_no_python_worker_at_5k_rows(spark, tmp_path, capsys):
+    """At the benchmark's 5k rows the CLI clusters on the driver: its
+    executed plan holds the labels as a local table and no Python-UDF
+    node, so no execution forks a Python worker."""
+    import re
+
+    from wafer_defect_data_pipeline_spark.cli import main
+
+    path = tmp_path / "wafer.csv"
+    make_wafer_pdf(5000).to_csv(path, index=False)
+    out = main(str(path), output_dir=str(tmp_path / "out"), save_processed=False)
+    capsys.readouterr()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert not re.search(r"InPandas|EvalPython|ArrowEvalPython|PythonUDF", plan), plan

@@ -6,15 +6,18 @@ Functional parity with ``/root/reference/main.py:14-132``: load a wafer CSV
 processed table. Flags mirror the reference's ``main(data_path, output_dir,
 save_processed, show_summary)`` signature.
 
-Job shape (~22 Spark jobs per execution at 5k rows): the load check, ONE
-aggregate over the raw scan for the row and null counts, the k-means
-per-step stats probe inside ``preprocess`` — which also fills the lazy pin
-of the pre-clustering frame, so the outlier cascade runs once (behind the
+Job shape (19 Spark jobs per execution at 5k rows): the load check, ONE
+aggregate over the raw scan for the row and null counts, the k-means fetch
+inside ``preprocess`` — which also fills the lazy pin of the pre-clustering
+frame, so the outlier cascade runs once (behind the
 ``WDPS_WAFER_PIN_MAX_BYTES`` scan-bytes gate, see
 ``plans.pipeline.cascade_pin_allowed``) — ONE grouped count over the cached
 result, from which the driver derives every summary line and the crosstab,
-and the sink. Steps of up to 1M analysed rows cluster in one Arrow/numpy
-job; MLlib takes over above that (``run_kmeans_by_step(mode="auto")``).
+and the sink. Up to ``clustering.LOCAL_MAX_ROWS`` analysed rows the fetch is
+the whole k-means input and the numpy kernel runs on the driver (no Python
+worker); above it, steps of up to 1M analysed rows cluster in one
+Arrow/numpy job and MLlib takes over past that
+(``run_kmeans_by_step(mode="auto")``).
 
 Usage::
 

@@ -10,8 +10,9 @@ the test-suite pandas replica call THIS function, so their labels agree
 bit-for-bit; cluster ids remain arbitrary (validation is
 partition-invariant, SURVEY.md §2.6 M2).
 
-Pure numpy; executed inside Arrow-batched ``applyInPandas`` workers, never
-per-row.
+Pure numpy, one whole step per call, never per-row: on the driver for a
+small analysed subset, else inside an Arrow-batched ``applyInPandas``
+worker (see :mod:`..operators.clustering`).
 """
 
 from __future__ import annotations

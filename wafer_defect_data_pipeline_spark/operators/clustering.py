@@ -6,24 +6,30 @@ project the 18 cluster features, drop rows with any null, z-score the
 subset, run KMeans(k=2, seed=42, n_init=10), and write labels back at the
 original row positions — all other rows get a null ``KMeans_Cluster``.
 
-Two execution modes, same API:
+Two algorithms, same API:
 
 - ``mode="distributed"`` (the 100 TB path): per step, compute
   mean/stddev_pop per feature in ONE aggregate (map-side combinable, tiny
   result), broadcast them into the projection, and run MLlib
   ``KMeans(k, seed)`` on the assembled vector. Label write-back is a join on
   a pinned row id — no index alignment, no driver-side data.
-- ``mode="parity"``: one ``applyInPandas`` over the analysed subset grouped
-  by step; inside each Arrow batch the numpy kernel
-  (:mod:`..functions.kmeans_np`) reproduces the reference's
-  scale→kmeans→label flow bit-for-bit with the test replica. Requires each
-  step's REAL-defect subset to fit one task — the small-data parity mode.
-- ``mode="auto"`` (default): one tiny count-per-step agg decides: every
-  step at or under ``auto_parity_max_rows`` (1M rows) → the single-job
-  Arrow/numpy path (an MLlib fit costs a fixed multi-job overhead that
-  dwarfs small-group math — ~50 of the CLI's jobs at 5k rows); any step
-  over it → the distributed path. The 100 TB run picks MLlib by itself; a
-  per-step-small run skips the scheduler overhead entirely.
+- ``mode="parity"``: the numpy kernel (:mod:`..functions.kmeans_np`)
+  reproduces the reference's scale→kmeans→label flow bit-for-bit with the
+  test replica, one step at a time in ``__row_id`` order. Requires each
+  step's REAL-defect subset to fit one process — the small-data mode.
+- ``mode="auto"`` (default): every step at or under
+  ``auto_parity_max_rows`` (1M rows) → the numpy kernel (an MLlib fit costs
+  a fixed multi-job overhead that dwarfs small-group math); any step over
+  it → the distributed path. The 100 TB run picks MLlib by itself.
+
+The numpy kernel has two venues, chosen by one fetch that is both the size
+probe and the input: ``limit(LOCAL_MAX_ROWS + 1).toPandas()`` of the
+analysed subset. At or under :data:`LOCAL_MAX_ROWS` analysed rows the
+kernel runs on the driver and the labels return as a local relation — no
+stats job, no persisted subset, no Python worker. Above it, one grouped
+``applyInPandas`` runs the same kernel per step in a Python worker. Same
+kernel, same row order, same Arrow float64 values: the venues give the same
+labels, so the gate is a pure cost decision.
 
 Cluster ids are arbitrary in every implementation (sklearn, MLlib, numpy);
 comparisons must be label-permutation-invariant (SURVEY.md §2.6 M2).
@@ -44,9 +50,15 @@ from ..schema import CLUSTER_FEATURES, DEFAULT_STEPS_TO_ANALYSE
 
 ROW_ID = "__row_id"
 
-#: run_kmeans_by_step's persisted narrow subsets, unpersisted at the next
-#: invocation (every bench/oracle run must compute from parquet — r15).
-_PERSISTED_SUBSETS: list[DataFrame] = []
+#: Analysed rows (all steps together) at or under which the numpy kernel runs
+#: on the driver instead of behind the stats probe, the persisted subset and
+#: an ``applyInPandas`` job. Warm medians on 4 cores, driver → executor venue:
+#: wafer fixture (18 features, k-means step alone) 10k rows 0.63 → 1.40 s,
+#: 40k 1.04 → 2.21 s, 79k 1.83 → 3.30 s; lineitem shape (4 features, two
+#: steps, whole query) 67k 2.81 → 3.19 s, 135k 3.70 → 3.94 s, 269k 5.64 →
+#: 5.03 s. The serial driver kernel loses somewhere past ~150k; the gate sits
+#: below that, where the fetched frame adds ~40 MiB to the driver's Python.
+LOCAL_MAX_ROWS = 100_000
 
 
 def with_row_id(df: DataFrame) -> DataFrame:
@@ -130,8 +142,9 @@ def _analysed_subset(df: DataFrame, steps: list[str], features: list[str]) -> Da
 def _step_stats(subset: DataFrame, features) -> list:
     """ONE job for every step's mean/stddev_pop/count (map-side combinable,
     |steps| result rows — safe to collect at any scale). Doubles as the
-    empty-step guard and the auto-mode size probe, and populates the
-    persisted narrow subset before any concurrent fits race to be first."""
+    empty-step guard and the executor venues' auto-mode size probe, and
+    populates the persisted narrow subset before any concurrent fits race to
+    be first."""
     return (
         subset.groupBy("Step_desc")
         .agg(
@@ -182,17 +195,28 @@ def _predictions_distributed(subset: DataFrame, steps, features, n_clusters, ran
     return out
 
 
+def _cluster_step(pdf: pd.DataFrame, features, n_clusters: int, random_state: int) -> pd.DataFrame:
+    """One step's labels from the numpy kernel — shared by both venues."""
+    pdf = pdf.sort_values(ROW_ID)  # deterministic row order per step
+    X = standardize(pdf[list(features)].to_numpy(dtype=np.float64))
+    labels = kmeans_fit_predict(X, n_clusters=n_clusters, random_state=random_state)
+    return pd.DataFrame({ROW_ID: pdf[ROW_ID].to_numpy(), "KMeans_Cluster": labels.astype(np.int32)})
+
+
+_PRED_SCHEMA = f"{ROW_ID} long, KMeans_Cluster int"
+
+
+def _predictions_local(spark, head: pd.DataFrame, features, n_clusters, random_state) -> DataFrame | None:
+    if head.empty:
+        return None
+    parts = [_cluster_step(g, features, n_clusters, random_state) for _, g in head.groupby("Step_desc")]
+    return spark.createDataFrame(pd.concat(parts, ignore_index=True), _PRED_SCHEMA)
+
+
 def _predictions_parity(subset: DataFrame, features, n_clusters, random_state) -> DataFrame:
     feat_list = list(features)
-
-    def cluster_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ROW_ID)  # deterministic row order per group
-        X = standardize(pdf[feat_list].to_numpy(dtype=np.float64))
-        labels = kmeans_fit_predict(X, n_clusters=n_clusters, random_state=random_state)
-        return pd.DataFrame({ROW_ID: pdf[ROW_ID].to_numpy(), "KMeans_Cluster": labels.astype(np.int32)})
-
     return subset.groupBy("Step_desc").applyInPandas(
-        cluster_group, schema=f"{ROW_ID} long, KMeans_Cluster int"
+        lambda pdf: _cluster_step(pdf, feat_list, n_clusters, random_state), schema=_PRED_SCHEMA
     )
 
 
@@ -210,49 +234,58 @@ def run_kmeans_by_step(
     Returns the input plus nullable int ``KMeans_Cluster`` (the pandas
     ``Int64`` workaround at reference preprocessing.py:185,207 disappears —
     Spark ints are natively nullable).
+
+    ``mode="auto"`` and ``"parity"`` start with one fetch of at most
+    :data:`LOCAL_MAX_ROWS` + 1 analysed rows. At or under the gate (and, in
+    auto mode, with no step over ``auto_parity_max_rows``) the fetched
+    frame is the whole input: each step runs through the numpy kernel on
+    the driver and the labels join back from a local relation. Above it
+    the executor venues run as before: the per-step stats probe sends
+    steps of at most ``auto_parity_max_rows`` rows to one ``applyInPandas``
+    job and larger ones to MLlib; ``mode="distributed"`` always takes
+    MLlib. An executor venue persists the narrow analysed subset for the
+    duration of the call only: the narrow predictions are pinned with an
+    eager ``localCheckpoint`` before the subset is unpersisted, so nothing
+    stays in the cache manager after the call returns.
     """
+    if mode not in ("auto", "parity", "distributed"):
+        raise ValueError(f"unknown clustering mode: {mode!r}")
     steps = list(steps_to_analyse) if steps_to_analyse else DEFAULT_STEPS_TO_ANALYSE
     feats = list(features) if features else CLUSTER_FEATURES
 
     had_row_id = ROW_ID in df.columns
     base = df if had_row_id else with_row_id(df)
-    # Persist the NARROW analysed subset (row id + step + features), not the
-    # full-width frame: the stats job and every per-step fit re-read exactly
-    # these columns, and without a reuse point each would recompute the whole
-    # upstream lineage (scan + outlier cascade) per job. This replaces the
-    # old full-width localCheckpoint — O(analysed rows × |features|) storage
-    # instead of O(table), spillable to disk, and no longer load-bearing for
-    # correctness (the metadata row id is deterministic without it).
-    #
-    # Unpersist the PRIOR invocation's subset here (r15 ADVICE): Spark's
-    # CacheManager matches entries by analyzed plan, so a leaked persist
-    # would silently serve run 1's blocks to every later same-plan
-    # invocation in the process (the r15 bench-honesty bug). Evicting the
-    # tracked frame is scoped to THIS operator's leak — unlike the former
-    # spark.catalog.clearCache() at one query's entry, which wiped every
-    # cache entry in the session.
-    while _PERSISTED_SUBSETS:
-        try:
-            _PERSISTED_SUBSETS.pop().unpersist()
-        except Exception:  # noqa: BLE001 — a dead session's handle is fine
-            pass
-    subset = _analysed_subset(base, steps, feats).persist()
-    _PERSISTED_SUBSETS.append(subset)
+    subset = _analysed_subset(base, steps, feats)
 
-    stats = None
-    if mode == "auto":
-        stats = _step_stats(subset, feats)
-        biggest = max((r["__n"] for r in stats), default=0)
-        mode = "parity" if biggest <= auto_parity_max_rows else "distributed"
-
-    if mode == "distributed":
-        if stats is None:
-            stats = _step_stats(subset, feats)
-        preds = _predictions_distributed(subset, steps, feats, n_clusters, random_state, stats)
-    elif mode == "parity":
-        preds = _predictions_parity(subset, feats, n_clusters, random_state)
+    preds = None
+    local = mode != "distributed"
+    if local:
+        head = subset.limit(LOCAL_MAX_ROWS + 1).toPandas()
+        biggest = int(head["Step_desc"].value_counts().max()) if len(head) else 0
+        local = len(head) <= LOCAL_MAX_ROWS and (mode == "parity" or biggest <= auto_parity_max_rows)
+    if local:
+        preds = _predictions_local(df.sparkSession, head, feats, n_clusters, random_state)
     else:
-        raise ValueError(f"unknown clustering mode: {mode!r}")
+        # Persist the NARROW analysed subset (row id + step + features): the
+        # stats job and every per-step fit re-read exactly these columns, and
+        # without a reuse point each would recompute the upstream lineage
+        # (scan + outlier cascade) per job.
+        subset = subset.persist()
+        try:
+            stats = None
+            if mode == "auto":
+                stats = _step_stats(subset, feats)
+                biggest = max((r["__n"] for r in stats), default=0)
+                mode = "parity" if biggest <= auto_parity_max_rows else "distributed"
+            if mode == "distributed":
+                stats = stats if stats is not None else _step_stats(subset, feats)
+                preds = _predictions_distributed(subset, steps, feats, n_clusters, random_state, stats)
+            else:
+                preds = _predictions_parity(subset, feats, n_clusters, random_state)
+            if preds is not None:
+                preds = preds.localCheckpoint(eager=True)
+        finally:
+            subset.unpersist()
 
     if preds is None:
         out = base.withColumn("KMeans_Cluster", F.lit(None).cast("int"))

@@ -126,6 +126,45 @@ def minhash_signatures(
     return agg.select(id_col, F.array(*[F.col(f"__m{k}") for k in range(n_hashes)]).alias("sig"))
 
 
+def _lsh_bands(sigs: DataFrame, out_id: str, n_hashes: int, n_bands: int) -> DataFrame:
+    """``(out_id, band, key)``: one row per LSH band of each ``(__id, sig)``
+    signature, the key being the band's signature positions joined by ``|``."""
+    if n_hashes % n_bands:
+        raise ValueError(
+            f"n_hashes={n_hashes} must be divisible by n_bands={n_bands}; "
+            f"otherwise banding silently drops trailing signature positions"
+        )
+    rows_per_band = n_hashes // n_bands
+    return sigs.select(
+        F.col("__id").alias(out_id),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.concat_ws("|", *[F.col("sig").getItem(b * rows_per_band + i) for i in range(rows_per_band)]).alias("key"),
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select(out_id, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
+def _lsh_candidates(sig_df: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs, ``id_a < id_b``, that share at least
+    one LSH band of their ``(__id, sig)`` MinHash signatures. The band
+    self-join carries only (band, key, id), so wide rows never shuffle
+    through the hot join."""
+    return (
+        _lsh_bands(sig_df, "id_a", n_hashes, n_bands)
+        .join(_lsh_bands(sig_df, "id_b", n_hashes, n_bands), on=["band", "key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -140,44 +179,15 @@ def minhash_lsh_pairs(
     Returns (id_a, id_b, est_jaccard) with id_a < id_b and
     est_jaccard = matching signature positions / n_hashes >= threshold.
 
-    The band self-join carries only (band, key, id) — candidate dedup happens
-    on the narrow (id_a, id_b) pair before the 16-string signatures are
-    joined back in for the overlap estimate, so wide rows never shuffle
-    through the hot join.
+    Candidates come from :func:`_lsh_candidates` as narrow (id_a, id_b)
+    pairs; the 16-string signatures are joined back in only for the overlap
+    estimate.
     """
-    if n_hashes % n_bands:
-        raise ValueError(
-            f"n_hashes={n_hashes} must be divisible by n_bands={n_bands}; "
-            f"otherwise banding silently drops trailing signature positions "
-            f"while est_jaccard still divides by the full n_hashes"
-        )
-    rows_per_band = n_hashes // n_bands
     sig_df = minhash_signatures(df, id_col, text_col, n_hashes, shingle_k).select(
         F.col(id_col).alias("__id"), "sig"
     ).localCheckpoint(eager=False)  # compute signatures once, reuse in bands + estimate
-
-    bands = sig_df.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws("|", *[F.col("sig").getItem(b * rows_per_band + i) for i in range(rows_per_band)]).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("__id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-    left = bands.select(F.col("__id").alias("id_a"), "band", "key")
-    right = bands.select(F.col("__id").alias("id_b"), "band", "key")
     cand = (
-        left.join(right, on=["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+        _lsh_candidates(sig_df, n_hashes, n_bands)
         .join(sig_df.select(F.col("__id").alias("id_a"), F.col("sig").alias("sig_a")), on="id_a")
         .join(sig_df.select(F.col("__id").alias("id_b"), F.col("sig").alias("sig_b")), on="id_b")
     )
@@ -308,12 +318,14 @@ def lsh_verified_pairs(
     jaccard >= threshold. Deterministic (md5 permutations), so the whole
     pipeline — candidates included — is oracle-SQL-expressible.
     """
-    # pin the candidate list: it feeds both the id-restriction and the final
-    # pair join, and recomputing it would re-run the whole band self-join
-    cand = minhash_lsh_pairs(
-        df, id_col, text_col, n_hashes=n_hashes, n_bands=n_bands, shingle_k=shingle_k,
-        threshold=0.0,  # keep every band collision; the exact verify decides
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
+    # every band collision is a candidate (the exact verify decides), so no
+    # signature overlap estimate and no signature pin. Pin the candidate
+    # list: it feeds both the id-restriction and the final pair join, and
+    # recomputing it would re-run the whole band self-join
+    cand = _lsh_candidates(
+        minhash_signatures(df, id_col, text_col, n_hashes, shingle_k).select(F.col(id_col).alias("__id"), "sig"),
+        n_hashes, n_bands,
+    ).localCheckpoint(eager=False)
     # shingle ONLY candidate docs: the verify stage needs |cand| ids, a tiny
     # fraction of the corpus, so the semi-join drops ~95% of the tokenize+
     # shingle work (and the shrunken shingle frame broadcast-joins to cand)
@@ -591,13 +603,6 @@ def minhash_lsh_probe(
     ``>= threshold``; candidate pairs dedup on the narrow id pair before
     signatures join back in, exactly like :func:`minhash_lsh_pairs`.
     """
-    if n_hashes % n_bands:
-        raise ValueError(
-            f"n_hashes={n_hashes} must be divisible by n_bands={n_bands}; "
-            f"otherwise banding silently drops trailing signature positions "
-            f"while est_jaccard still divides by the full n_hashes"
-        )
-    rows_per_band = n_hashes // n_bands
     new_sigs = (
         minhash_signatures(new_df, id_col, text_col, n_hashes, shingle_k)
         .select(F.col(id_col).alias("__id"), "sig")
@@ -606,32 +611,9 @@ def minhash_lsh_probe(
     idx = index_sigs.select(
         F.col(index_sigs.columns[0]).alias("__id"), F.col("sig")
     )
-
-    def _bands(sigs: DataFrame, out_id: str) -> DataFrame:
-        return sigs.select(
-            F.col("__id").alias(out_id),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col("sig").getItem(b * rows_per_band + i)
-                                    for i in range(rows_per_band)
-                                ],
-                            ).alias("key"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(out_id, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
     cand = (
-        _bands(new_sigs, "new_id")
-        .join(_bands(idx, "index_id"), ["band", "key"])
+        _lsh_bands(new_sigs, "new_id", n_hashes, n_bands)
+        .join(_lsh_bands(idx, "index_id", n_hashes, n_bands), ["band", "key"])
         .select("new_id", "index_id")
         .distinct()
         .join(

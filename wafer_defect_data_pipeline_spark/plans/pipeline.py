@@ -5,8 +5,8 @@
 ``size_columns`` / ``cluster_features`` / ``steps_to_analyse``, flag-gated
 ``preprocess``, and the same stage order — outliers → derived features →
 per-step KMeans → killer labeling. The result is one lazy DataFrame; the
-only action ``preprocess`` runs itself is the k-means per-step stats probe,
-which also fills the pin of the pre-clustering frame (see
+only action ``preprocess`` runs itself is the k-means fetch (or, above its
+row gate, the per-step stats probe), which also fills the pin of the pre-clustering frame (see
 :func:`cascade_pin_allowed`), so the caller's later actions read the
 outlier cascade from the pin instead of re-running it.
 
@@ -115,9 +115,9 @@ class WaferPipeline:
         if add_features:
             out = self.add_engineered_features(out)
         if run_clustering:
-            # Unpinned, the k-means stats probe and every later action over
-            # the result (the CLI's summary, its sink) re-run the lazy
-            # cascade; the probe fills this pin, so the cascade runs once.
+            # Unpinned, the k-means fetch and every later action over the
+            # result (the CLI's summary, its sink) re-run the lazy cascade;
+            # the fetch fills this pin, so the cascade runs once.
             if pin:
                 out = out.localCheckpoint(eager=False)
             out = self.run_kmeans_by_step(out)

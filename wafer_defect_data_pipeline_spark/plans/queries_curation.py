@@ -1669,6 +1669,18 @@ register(
 
 
 # --- end-to-end curation pipeline (r13 verdict item 2) -----------------------
+def _pinned_count(df):
+    """``(pin, rows)``: ``df`` pinned by an eager ``localCheckpoint`` that
+    counts its rows through an observation on the way — one job, where a
+    lazy pin plus ``count()`` runs two. Only the eager pin fills the
+    observation: a lazy one leaves it at 0 with no error."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    pin = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return pin, obs.get["rows"]
+
+
 def _curation_end_to_end(spark, sf_dir, stage_walls=None):
     """The single query a real LLM-data user runs first: documents ->
     exact dedup -> near-dup cluster + diversity cap -> quality filter ->
@@ -1676,8 +1688,8 @@ def _curation_end_to_end(spark, sf_dir, stage_walls=None):
     export shards with a read-back manifest. Every stage is an existing,
     individually-green operator; THIS query proves they COMPOSE — column
     contracts, id stability, one pass per stage (each stage's output is
-    localCheckpoint-pinned before its multiple consumers: the next stage
-    and its audit count), no recompute across stage boundaries.
+    pinned by an eager localCheckpoint that counts it for the audit on the
+    way, see :func:`_pinned_count`), no recompute across stage boundaries.
 
     Planted fixtures give every stage real casualties at any sf: +1M
     exact copies (stage 1 drops all of them), +2M/+3M ' tail' variants of
@@ -1693,9 +1705,8 @@ def _curation_end_to_end(spark, sf_dir, stage_walls=None):
     contract, and the shard column is the final write partitioning.
 
     ``stage_walls`` (optional dict, r14 verdict item 5): filled with the
-    wall seconds of each stage's materializing action (every stage is
-    localCheckpoint-pinned and counted, so the count wall IS the stage
-    wall). Side-channel diagnostics only — never part of the plan or the
+    wall seconds of each stage's materializing action (every stage's pin
+    is its counting job, so the pin wall IS the stage wall). Side-channel diagnostics only — never part of the plan or the
     oracle; tools/bench_curation_decade.py uses it for the decade table."""
     import time as _time
 
@@ -1740,22 +1751,14 @@ def _curation_end_to_end(spark, sf_dir, stage_walls=None):
         )
         .withColumn("doc_id", F.col("doc_id") + F.lit(4_000_000))
     )
-    corpus = (
-        d.unionByName(exact_copies)
-        .unionByName(gen1)
-        .unionByName(gen2)
-        .unionByName(leaked)
-        .localCheckpoint(eager=False)
+    corpus, n_input = _pinned_count(
+        d.unionByName(exact_copies).unionByName(gen1).unionByName(gen2).unionByName(leaked)
     )
-    n_input = corpus.count()
     _mark("input")
 
     # stage 1: exact dedup (min-id per identical text); doc_id unique across
     # all five planted generations (+1M/+2M/+3M/+4M shifts) -> min_by form
-    deduped = exact_dedup(
-        corpus, ["text"], "doc_id", unique_order=True
-    ).localCheckpoint(eager=False)
-    n_exact = deduped.count()
+    deduped, n_exact = _pinned_count(exact_dedup(corpus, ["text"], "doc_id", unique_order=True))
     _mark("exact_dedup")
 
     # stage 2: near-dup cluster (LSH candidates -> exact-Jaccard verify ->
@@ -1766,20 +1769,15 @@ def _curation_end_to_end(spark, sf_dir, stage_walls=None):
     )
     labeled = cluster_assignment(deduped, "doc_id", pairs)
     w = W.partitionBy("component").orderBy(F.desc(F.length("text")), F.asc("doc_id"))
-    capped = (
+    capped, n_capped = _pinned_count(
         labeled.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= 2)
         .select("doc_id", "source", "text")
-        .localCheckpoint(eager=False)
     )
-    n_capped = capped.count()
     _mark("cluster_cap")
 
     # stage 3: quality gate (C4/Gopher-style heuristic score)
-    qkept = capped.filter(quality_score("text") >= 0.55).localCheckpoint(
-        eager=False
-    )
-    n_quality = qkept.count()
+    qkept, n_quality = _pinned_count(capped.filter(quality_score("text") >= 0.55))
     _mark("quality_gate")
 
     # stage 4: decontaminate — drop the held-out bench docs themselves,
@@ -1789,13 +1787,11 @@ def _curation_end_to_end(spark, sf_dir, stage_walls=None):
         ~((F.col("doc_id") < 1_000_000) & (F.col("doc_id") % 97 == 0))
     )
     stripped = strip_contaminated_spans(train, bench, "doc_id", "text", k=20, min_span=40)
-    curated = (
+    curated, n_curated = _pinned_count(
         stripped.join(train.select("doc_id", "source"), "doc_id")
         .select("doc_id", "source", F.length("clean_text").alias("clean_len"))
         .filter(F.col("clean_len") >= 20)
-        .localCheckpoint(eager=False)
     )
-    n_curated = curated.count()
     _mark("decontaminate")
 
     # stage 5: token-budget packing on the CLEANED lengths

@@ -35,15 +35,14 @@ def _as_wafer(spark, sf_dir):
 
 
 def _wafer_pipeline_on_lineitem(spark, sf_dir):
-    # r15 measurement-hygiene, r16 scoping (ADVICE): run_kmeans_by_step
-    # persists its analysed subset and Spark's CacheManager matches entries
-    # by ANALYZED PLAN, so a leaked persist would serve run 1's blocks to
-    # bench runs 2-4. The operator now unpersists its own prior subset at
-    # every invocation (operators/clustering.py _PERSISTED_SUBSETS), which
-    # keeps each run computing from parquet WITHOUT the session-global
-    # spark.catalog.clearCache() this query used to fire (that evicted
-    # every other cache entry in the session — e.g. cli.py's preprocess
-    # cache — to fix one operator's leak).
+    # Every run computes from parquet: run_kmeans_by_step leaves nothing in
+    # Spark's CacheManager (which matches entries by ANALYZED PLAN, so a
+    # leaked persist would serve run 1's blocks to bench runs 2-4). Below
+    # its row gate it persists nothing; above it the narrow subset is
+    # persisted only for the duration of the call
+    # (operators/clustering.py), so this query needs no session-global
+    # spark.catalog.clearCache(), which would evict every other cache entry
+    # in the session (e.g. cli.py's preprocess cache).
     # attach the row id HERE, while the lineage is still a narrow select over
     # the parquet scan — the _metadata-derived id is pin-free; waiting until
     # after the outlier bounds join would force the localCheckpoint fallback
@@ -51,7 +50,7 @@ def _wafer_pipeline_on_lineitem(spark, sf_dir):
     df = remove_outliers_by_group(df, "Class", ["l_extendedprice", "l_quantity"])
     # Size-gated pin of the cascade output (r16, VERDICT r15 item 3 +
     # guide §5): this pipeline runs MULTIPLE actions over it (the kmeans
-    # stats/auto probe, then the final aggregate), and the lazy cascade —
+    # fetch or stats probe, then the final aggregate), and the lazy cascade —
     # scan, two exact-percentile bounds aggregates, broadcast joins,
     # filters — re-ran inside every one of them (job census: the two ~1 s
     # bounds aggs appeared under both actions; the plan had 8 scans / 22
