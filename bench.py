@@ -28,7 +28,7 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 from wafer_defect_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
-from wafer_defect_data_pipeline_spark.session import get_spark  # noqa: E402
+from wafer_defect_data_pipeline_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 # One representative per operator family (SURVEY.md §2 / §2.9): relational
 # agg + joins + window/top-k, the reference's flagship IQR cascade, the full
@@ -349,12 +349,14 @@ def main() -> None:
     warm: dict[str, float | None] = {}
     warm_runs: dict[str, list[float]] = {}
     spread: dict[str, list[float] | None] = {}
+    codegen: dict[str, dict] = {}
     errors: dict[str, str] = {}
     for name in headline:
         fn = registry.get(name)
         if fn is None:
             continue
         times: list[float] = []
+        compiles = [codegen_compiles(spark)]
         try:
             for i in range(1 + n_warm):
                 t0 = time.perf_counter()
@@ -362,11 +364,15 @@ def main() -> None:
                 t = round(time.perf_counter() - t0, 3)
                 if i == 0:
                     cold[name] = t
+                    compiles.append(codegen_compiles(spark))
                 else:
                     times.append(t)
         except Exception as exc:  # noqa: BLE001 — isolate, record, continue
             cold.setdefault(name, None)
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+        if len(compiles) == 2:
+            (n0, ms0), (n1, ms1) = compiles
+            codegen[name] = {"cold": [n1 - n0, round(ms1 - ms0, 1)], "warm": codegen_compiles(spark)[0] - n1}
         if times:
             warm_runs[name] = times
             warm[name] = sorted(times)[len(times) // 2]  # median
@@ -436,6 +442,10 @@ def main() -> None:
         "regression_rule": "warm median > committed HEAD anchor median + "
         "max(anchor spread band, 15%, 50ms); same-(sf, cpus) anchors only",
         "retimes": retimes,
+        "codegen": codegen,
+        "codegen_rule": "per query: cold = [classes Janino compiled, ms] in "
+        "the cold run; warm = classes compiled over the warm runs (0 when the "
+        "codegen cache holds the query's classes)",
         "retime_rule": "each sweep flag re-timed isolated (1 cold + 3 warm "
         "after idle settle); final regressed_n counts retime verdicts — "
         "'noise' clears the flag, 'regressed'/'unadjudicated' keep it",
@@ -494,6 +504,9 @@ def main() -> None:
         compact["run_median_ratio"] = meta["ratio"]
         if "uniform_slowdown_suspected" in meta:
             compact["uniform_slowdown_suspected"] = True
+    warm_compiling = sorted(n for n, c in codegen.items() if c["warm"])
+    if warm_compiling:
+        compact["warm_compiles"] = "; ".join(warm_compiling)[:200]
     if real_flags:
         compact["flags_n"] = len(real_flags)
         compact["retime_noise_n"] = n_noise

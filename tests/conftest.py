@@ -14,6 +14,12 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMALL = f"{TESTDATA}/sf0.001"
 SF_MEDIUM = f"{TESTDATA}/sf0.01"
 
+# Bound the test session's driver heap (the engine default is 16g): the
+# session JVM shares the host with the DuckDB oracles, which peak at ~8.6 GB
+# in this process, and with a 16g heap the two together outgrew a 16 GB
+# host. Subprocess tests inherit it.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

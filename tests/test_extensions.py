@@ -542,6 +542,34 @@ def test_pinned_count_counts_inside_the_pin(spark):
         assert "LogicalRDD" in pin._jdf.queryExecution().optimizedPlan().toString()
 
 
+def test_lazy_pin_runs_upstream_shuffles_at_the_call(spark):
+    """Under AQE, ``localCheckpoint(eager=False)`` is lazy only past the
+    last exchange: the call finalizes the adaptive plan, which runs every
+    upstream shuffle stage then and there. A narrow frame runs no job at
+    the call; a shuffled one runs its map stage there."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(thunk):
+        group = f"lazy-pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = thunk()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    r = spark.range(1000)
+    _, at_call = jobs(lambda: r.filter(F.col("id") % 7 == 0).localCheckpoint(eager=False))
+    assert at_call == 0
+    shuffled = r.groupBy((F.col("id") % 7).alias("k")).count()
+    pin, at_call = jobs(lambda: shuffled.localCheckpoint(eager=False))
+    assert at_call == 1
+    assert pin.count() == 7
+
+
 def test_q1_results_invariant_to_partitioning(spark, sf_small):
     """Decimal aggregation makes q1 bit-identical regardless of partition
     count — the property that keeps the oracle hash stable when the driver's

@@ -80,8 +80,11 @@ def with_row_id(df: DataFrame) -> DataFrame:
     ``monotonically_increasing_id`` is deterministic only within one
     materialization, so the id'd frame is pinned with localCheckpoint to
     stop re-execution renumbering rows (SURVEY.md §7 risk register). The
-    pin materializes the FULL-WIDTH frame in executor memory — the cost the
-    metadata path exists to avoid; on a cluster prefer reliable
+    pin is ``eager=False``, yet under AQE the call still runs every
+    shuffle stage upstream of ``df``; only the narrow tail waits for the
+    first action. The pin materializes the FULL-WIDTH frame in executor
+    memory — the cost the metadata path exists to avoid; on a cluster
+    prefer reliable
     ``df.checkpoint()`` if the fallback must run on a big frame.
     """
     import re as _re

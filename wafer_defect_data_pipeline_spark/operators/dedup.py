@@ -21,10 +21,14 @@ so Spark and the DuckDB oracle agree bit-for-bit.
 
 Checkpoint note (100 TB): signature frames that are re-used by 2+ downstream
 joins are pinned with ``localCheckpoint(eager=False)`` so the shingle→hash
-work runs once. localCheckpoint stores the partitions on executor
-block managers — cheap here because every pinned frame is post-aggregation
-narrow (id + a short signature, orders of magnitude smaller than the corpus),
-but it is NOT fault-tolerant storage: losing an executor forces a stage
+work runs once. The pin is lazy only past the last exchange: under AQE the
+call finalizes the adaptive plan, which runs every upstream shuffle stage
+then and there, so that time is spent inside the pin call, not at the first
+action (``test_lazy_pin_runs_upstream_shuffles_at_the_call``).
+localCheckpoint stores the partitions on executor block managers — cheap
+here because every pinned frame is post-aggregation narrow (id + a short
+signature, orders of magnitude smaller than the corpus), but it is NOT
+fault-tolerant storage: losing an executor forces a stage
 recompute. On a long-lived 1000-executor job, prefer an explicit parquet
 checkpoint of the signature frame (write once, read per consumer) or drop
 the checkpoint and let Catalyst recompute if the input scan is cheap.
@@ -321,7 +325,10 @@ def lsh_verified_pairs(
     # every band collision is a candidate (the exact verify decides), so no
     # signature overlap estimate and no signature pin. Pin the candidate
     # list: it feeds both the id-restriction and the final pair join, and
-    # recomputing it would re-run the whole band self-join
+    # recomputing it would re-run the whole band self-join. The band
+    # self-join's shuffles run inside this call (AQE finalizes the plan
+    # there), so most of the candidate cost shows up here, not at the
+    # first action
     cand = _lsh_candidates(
         minhash_signatures(df, id_col, text_col, n_hashes, shingle_k).select(F.col(id_col).alias("__id"), "sig"),
         n_hashes, n_bands,

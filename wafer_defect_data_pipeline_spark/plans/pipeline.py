@@ -116,8 +116,10 @@ class WaferPipeline:
             out = self.add_engineered_features(out)
         if run_clustering:
             # Unpinned, the k-means fetch and every later action over the
-            # result (the CLI's summary, its sink) re-run the lazy cascade;
-            # the fetch fills this pin, so the cascade runs once.
+            # result (the CLI's summary, its sink) re-run the lazy cascade.
+            # The pin call runs the cascade's shuffle stages (AQE finalizes
+            # the plan there) and the fetch fills the rest, so the cascade
+            # runs once.
             if pin:
                 out = out.localCheckpoint(eager=False)
             out = self.run_kmeans_by_step(out)

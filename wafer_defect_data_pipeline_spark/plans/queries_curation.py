@@ -1671,8 +1671,11 @@ register(
 # --- end-to-end curation pipeline (r13 verdict item 2) -----------------------
 def _pinned_count(df):
     """``(pin, rows)``: ``df`` pinned by an eager ``localCheckpoint`` that
-    counts its rows through an observation on the way — one job, where a
-    lazy pin plus ``count()`` runs two. Only the eager pin fills the
+    counts its rows through an observation on the way — one job past the
+    frame's shuffle stages, where a lazy pin plus ``count()`` runs two. The
+    shuffle stages run inside either pin call: under AQE, building the
+    checkpoint finalizes the adaptive plan, so ``eager=False`` defers only
+    the stage after the last exchange. Only the eager pin fills the
     observation: a lazy one leaves it at 0 with no error."""
     from pyspark.sql import Observation
 
@@ -1804,7 +1807,7 @@ def _curation_end_to_end(spark, sf_dir, stage_walls=None):
         "doc_id", "source", "clean_len", "pack_id",
         F.pmod(u, F.lit(16)).cast("int").alias("shard"),
         u.alias("idhash"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # runs the packing shuffles here (AQE)
     n_packs = staged.select("source", "pack_id").distinct().count()
     _mark("token_pack")
 

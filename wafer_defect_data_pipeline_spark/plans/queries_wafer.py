@@ -54,7 +54,8 @@ def _wafer_pipeline_on_lineitem(spark, sf_dir):
     # scan, two exact-percentile bounds aggregates, broadcast joins,
     # filters — re-ran inside every one of them (job census: the two ~1 s
     # bounds aggs appeared under both actions; the plan had 8 scans / 22
-    # exchanges). One lazy localCheckpoint materializes the cascade once;
+    # exchanges). One localCheckpoint materializes the cascade once (its
+    # call runs the shuffle stages, the first action the narrow tail);
     # measured interleaved at sf0.1: 5.18 -> 4.55 s median. Gated on scan
     # bytes because the pin writes O(filtered table) to executor storage:
     # past the threshold (env-overridable for cluster storage budgets)

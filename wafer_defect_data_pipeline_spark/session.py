@@ -11,6 +11,13 @@ entry point (tests, bench, driver contract) runs with identical semantics:
   and ``toPandas``) goes through columnar Arrow batches, not pickled rows.
 - ``shuffle.partitions`` sized to cores for local runs; on a real cluster this
   is overridden (see ``tuned_conf_for_scale``).
+- The JVM-wide cache of compiled generated classes holds
+  ``CODEGEN_CACHE_ENTRIES`` classes, not Spark's default 100. One execution
+  of ``curation_end_to_end`` compiles 169 distinct classes. A cache smaller
+  than an execution's working set evicts each class before its next use, so
+  every warm execution recompiled ~164 of them (0.6-1.0 s of Janino time)
+  and the JIT never warmed the fresh classes. Thrash shows as a warm
+  execution with a non-zero ``codegen_compiles`` delta.
 """
 
 from __future__ import annotations
@@ -20,6 +27,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "wafer-defect-data-pipeline-spark"
+
+#: ``spark.sql.codegen.cache.maxEntries``: the smallest round number at
+#: least twice the largest per-execution class census (222 distinct classes,
+#: ``similarity_ann_dispatch_redecide`` at sf0.1; CHANGES.md has the census).
+#: ~8 KiB of metaspace per cached class. A static conf: it takes effect only
+#: in the session that starts the JVM.
+CODEGEN_CACHE_ENTRIES = 500
 
 #: the directory the package is imported from (its parent)
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -55,7 +69,19 @@ def engine_conf(parallelism: int | None = None) -> dict[str, str]:
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.ui.enabled": "false",
         "spark.sql.execution.pyspark.udf.faulthandler.enabled": "false",
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     }
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """``(count, ms)``: generated classes Janino has compiled in this JVM so
+    far, and the time it took. Every compile is a miss of the codegen cache;
+    the difference of two readings is what ran in between compiled, so a
+    warm re-execution that fits the cache reads ``(0, 0.0)``."""
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), ns / 1e6
 
 
 def get_spark(
