@@ -1,16 +1,24 @@
-"""Unit tests for bench.py's regression auto-gate (r11 verdict item #7).
+"""Tests of the measurement tooling: bench.py's regression auto-gate (r11
+verdict item #7) and ``tools/measure.py``'s per-phase census.
 
-Pure-function tests — no SparkSession. The gate compares each query's warm
-median against the committed-at-HEAD anchor and flags only excursions beyond
-the anchor's own recorded spread band (with 15% / 50 ms floors).
+The gate tests are pure functions — no SparkSession. The gate compares each
+query's warm median against the committed-at-HEAD anchor and flags only
+excursions beyond the anchor's own recorded spread band (with 15% / 50 ms
+floors). The census tests check the phase split on synthetic events, the
+phase property's restore on the shared session, and one end-to-end census
+in a fresh process.
 """
 
 import json
+import os
 import subprocess
+import sys
 
 import pytest
 
 import bench
+
+from .conftest import REPO_ROOT, SF_SMALL
 
 
 def _anchor(queries, spread, sf=0.1):
@@ -227,3 +235,93 @@ def test_load_anchor_needs_same_sf_and_cpus(monkeypatch, recorded, asked, loads)
     anchor = bench._load_anchor(*asked)
     assert asked_paths == [f"HEAD:{bench._anchor_file(*asked)}"]
     assert (anchor is not None) == loads
+
+
+# --- tools/measure.py: phases tagged by the queries ------------------------
+
+def _job_events(jid, start, end, phase=None, group="g", cpu_s=0.0, gc_s=0.0, shuffle_mib=0.0):
+    props = {"spark.jobGroup.id": group}
+    if phase is not None:
+        props["wdps.phase"] = phase
+    return [
+        {"Event": "SparkListenerJobStart", "Job ID": jid, "Submission Time": start * 1000,
+         "Stage IDs": [jid], "Stage Infos": [{"Stage Name": f"count at q.py:{jid}"}],
+         "Properties": props},
+        {"Event": "SparkListenerTaskEnd", "Stage ID": jid,
+         "Task End Reason": {"Reason": "Success"},
+         "Task Metrics": {"Executor CPU Time": cpu_s * 1e9, "JVM GC Time": gc_s * 1e3,
+                          "Shuffle Write Metrics": {"Shuffle Bytes Written": shuffle_mib * 2**20}}},
+        {"Event": "SparkListenerJobEnd", "Job ID": jid, "Completion Time": end * 1000},
+    ]
+
+
+def test_census_phase_split_on_synthetic_events():
+    from tools.measure import UNTAGGED, phase_split, run_jobs
+
+    events = (
+        _job_events(1, 101.0, 102.0, "a", cpu_s=0.5, gc_s=0.02, shuffle_mib=1.0)
+        + _job_events(2, 101.5, 103.0, "a", cpu_s=0.25)  # overlaps job 1
+        + _job_events(3, 104.0, 105.0)  # no phase
+        + _job_events(4, 105.0, 106.0, "a", group="other")  # another run
+        + _job_events(5, 107.0, 108.0, "b", cpu_s=1.0)
+    )
+    jobs = run_jobs(events, "g")
+    assert [j["job"] for j in jobs] == [1, 2, 3, 5]
+    assert jobs[0]["callsite"] == "count at q.py:1"
+    split = phase_split(jobs, 100.0, 110.0)
+    assert list(split) == ["a", UNTAGGED, "b"]
+    a, untagged, b = split.values()
+    assert (a["jobs"], a["job_s"], a["driver_s"], a["tasks"]) == (2, 2.0, 1.0, 2)
+    assert (a["exec_cpu_s"], a["gc_s"], a["shuffle_mib"]) == (0.75, 0.02, 1.0)
+    assert (untagged["jobs"], untagged["job_s"], untagged["driver_s"]) == (1, 1.0, 1.0)
+    # the gap after the run's last job is billed to that job's phase
+    assert (b["jobs"], b["job_s"], b["driver_s"], b["exec_cpu_s"]) == (1, 1.0, 4.0, 1.0)
+    assert sum(r["jobs"] for r in split.values()) == len(jobs)
+    assert sum(r["job_s"] + r["driver_s"] for r in split.values()) == 10.0
+
+
+def test_phase_restores_the_callers_value(spark, sf_small, monkeypatch):
+    from wafer_defect_data_pipeline_spark.operators import dedup
+    from wafer_defect_data_pipeline_spark.plans.registry import all_queries
+    from wafer_defect_data_pipeline_spark.session import PHASE_PROPERTY
+
+    sc = spark.sparkContext
+    query = all_queries()["curation_end_to_end"]
+    assert sc.getLocalProperty(PHASE_PROPERTY) is None
+    query(spark, sf_small)
+    assert sc.getLocalProperty(PHASE_PROPERTY) is None
+
+    seen = []
+
+    def failing_dedup(*args, **kwargs):
+        seen.append(sc.getLocalProperty(PHASE_PROPERTY))
+        raise RuntimeError("dedup failed")
+
+    monkeypatch.setattr(dedup, "exact_dedup", failing_dedup)
+    sc.setLocalProperty(PHASE_PROPERTY, "caller")
+    try:
+        with pytest.raises(RuntimeError, match="dedup failed"):
+            query(spark, sf_small)
+        assert seen == ["exact_dedup"]
+        assert sc.getLocalProperty(PHASE_PROPERTY) == "caller"
+    finally:
+        sc.setLocalProperty(PHASE_PROPERTY, None)
+
+
+def test_measure_census_splits_curation_by_stage():
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=SF_SMALL,
+        SPARK_GRAFT_BENCH_WARM_RUNS="1",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, str(REPO_ROOT / "tools" / "measure.py"), "census", "curation_end_to_end"],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    rec = json.loads(proc.stdout.strip().splitlines()[-1])
+    stages = {"input", "exact_dedup", "cluster_cap", "quality_gate", "decontaminate",
+              "token_pack", "shard_export"}
+    assert stages <= set(rec["phases"])
+    assert sum(p["jobs"] for p in rec["phases"].values()) == rec["jobs"] > 0

@@ -53,11 +53,6 @@ def test_warm_cli_compiles_nothing(spark, tmp_path, capsys):
     def run():
         main(str(path), output_dir=str(tmp_path / "out"))
 
-    # main's get_spark re-applies engine_conf to this shared session
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        run()
-        assert _compiles(spark, run) == 0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    run()
+    assert _compiles(spark, run) == 0
     capsys.readouterr()

@@ -41,6 +41,17 @@ def test_fan_out_size_gate(spark, sf_small):
     assert fan_out(d) is not d
 
 
+def test_fan_out_size_gate_counts_no_files_as_zero_bytes(spark):
+    # a frame with no input files is 0 bytes to the one size probe, so any
+    # positive byte gate keeps it as it is; without a gate it still fans out
+    from wafer_defect_data_pipeline_spark.functions.partitioning import fan_out
+
+    d = spark.range(100).coalesce(1)
+    assert d.inputFiles() == []
+    assert fan_out(d, min_input_bytes=1) is d
+    assert fan_out(d) is not d
+
+
 def test_minhash_lsh_finds_planted_dups(spark, sf_small):
     d = read_table(spark, sf_small, "documents")
     planted = (
@@ -2541,7 +2552,7 @@ def test_duplicated_spans_planted_and_bounded(spark, strategy):
 
 
 def test_span_strategy_auto_switches_on_flood_grams(spark):
-    """choose_span_strategy (r7 verdict item 1): the probe must pick the
+    """probe_span_strategy (r7 verdict item 1): the probe must pick the
     skew-proof 'combine' shape on a flood-gram corpus — every doc is a long
     single-character run, so ONE 20-gram owns ~90% of all positions and the
     window shape would sort them on one reducer — and must keep the 1.9x
@@ -2549,8 +2560,8 @@ def test_span_strategy_auto_switches_on_flood_grams(spark):
     flood corpus strategy='auto' must still produce output identical to
     both explicit shapes."""
     from wafer_defect_data_pipeline_spark.operators.dedup import (
-        choose_span_strategy,
         duplicated_spans,
+        probe_span_strategy,
     )
 
     # flood: 200 docs x 500-char 'a' run + short unique tail -> the gram
@@ -2559,7 +2570,7 @@ def test_span_strategy_auto_switches_on_flood_grams(spark):
         [(i, "a" * 500 + f" tail{i:04d}x") for i in range(200)],
         "doc_id long, text string",
     )
-    assert choose_span_strategy(flood, "doc_id", "text", k=20) == "combine"
+    assert probe_span_strategy(flood, "doc_id", "text", k=20)[0] == "combine"
 
     # healthy: per-doc-unique text (id-salted words) -> max gram frequency
     # ~1, orders of magnitude below any reducer budget
@@ -2567,7 +2578,7 @@ def test_span_strategy_auto_switches_on_flood_grams(spark):
         [(i, " ".join(f"w{i:04d}t{j:03d}" for j in range(40))) for i in range(200)],
         "doc_id long, text string",
     )
-    assert choose_span_strategy(healthy, "doc_id", "text", k=20) == "window"
+    assert probe_span_strategy(healthy, "doc_id", "text", k=20)[0] == "window"
 
     outs = {
         s: sorted(

@@ -90,3 +90,43 @@ def test_multimodal_batch_loops_live_only_in_the_two_runners():
             if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
                 owners.append(getattr(top, "name", "<module>"))
     assert sorted(owners) == ["_attach", "_map_payloads"]
+
+
+def test_every_tool_compiles_and_its_package_imports_resolve():
+    """A deleted or renamed package name must not leave a tool behind that
+    still imports it: every ``tools/*.py`` compiles, and every name it
+    imports from the package or from ``perfbench`` (nested imports too)
+    resolves."""
+    import importlib
+
+    problems = []
+    for path in sorted((REPO_ROOT / "tools").glob("*.py")):
+        try:
+            tree = ast.parse(path.read_text(), str(path))
+            compile(tree, str(path), "exec")
+        except SyntaxError as exc:
+            problems.append(f"{path.name}: {exc}")
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.level == 0:
+                imports = [(node.module, [a.name for a in node.names])]
+            elif isinstance(node, ast.Import):
+                imports = [(a.name, []) for a in node.names]
+            else:
+                continue
+            for module, names in imports:
+                if module.split(".")[0] not in ("wafer_defect_data_pipeline_spark", "perfbench"):
+                    continue
+                try:
+                    mod = importlib.import_module(module)
+                except ImportError as exc:
+                    problems.append(f"{path.name}:{node.lineno}: {exc}")
+                    continue
+                for name in names:
+                    if hasattr(mod, name):
+                        continue
+                    try:
+                        importlib.import_module(f"{module}.{name}")
+                    except ImportError:
+                        problems.append(f"{path.name}:{node.lineno}: {module}.{name} does not resolve")
+    assert not problems, "\n".join(problems)

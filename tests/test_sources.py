@@ -21,6 +21,23 @@ def wafer_csv(tmp_path_factory):
     return str(path)
 
 
+def test_cli_leaves_the_host_session_confs(spark, wafer_csv, tmp_path, capsys):
+    """``get_spark`` returns an active session as it is, so ``cli.main``
+    run inside a host session keeps the host's runtime confs rather than
+    re-applying ``engine_conf`` (which sets the cpu count)."""
+    from wafer_defect_data_pipeline_spark.cli import main
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        main(wafer_csv, output_dir=str(tmp_path / "out"), show_summary=False)
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, old)
+    capsys.readouterr()
+
+
 def test_csv_scan_with_schema(spark, wafer_csv):
     df = load_wafer_csv(spark, wafer_csv)
     assert df.count() == 200

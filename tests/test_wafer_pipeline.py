@@ -122,7 +122,7 @@ def test_constructor_injection(spark, wafer_df):
     assert set(labeled_steps) <= {"PC"}
 
 
-def test_row_id_pin_free_on_file_scan(spark, sf_small):
+def test_row_id_pin_free_on_file_scan(spark, sf_small, monkeypatch):
     """VERDICT r3 weak #2: the clustering write-back row id must derive from
     the scan's _metadata (file rank + row_index) with NO full-width
     localCheckpoint pin. A checkpoint would appear as a LogicalRDD /
@@ -162,16 +162,14 @@ def test_row_id_pin_free_on_file_scan(spark, sf_small):
     # the query applies by default is a measured cost trade, not a
     # correctness crutch, and past its byte threshold the plan must revert
     # to exactly this pure-scan lineage)
-    import os
+    from wafer_defect_data_pipeline_spark.plans import pipeline
 
-    os.environ["WDPS_WAFER_PIN_MAX_BYTES"] = "0"
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "PIN_MAX_BYTES", 0)
         out = all_queries()["wafer_pipeline_on_lineitem"](spark, sf_small)
         qplan = out._jdf.queryExecution().optimizedPlan().toString()
         assert "parquet" in qplan
         assert not full_width_rdd_leaves(qplan)
-    finally:
-        del os.environ["WDPS_WAFER_PIN_MAX_BYTES"]
 
     # and with the gate on (the sf<=1 default), the pinned plan materializes
     # the cascade once — the final aggregate reads the checkpoint, not a
@@ -216,27 +214,30 @@ def _checkpoint_leaves(df) -> list[str]:
 def test_preprocess_cascade_pin_gate(spark, wafer_pdf, tmp_path, monkeypatch):
     """Mirror of the registered query's gate: on a parquet input (pin-free
     row id) preprocess pins the pre-clustering frame under the default
-    WDPS_WAFER_PIN_MAX_BYTES, and the plan is a pure scan lineage at 0."""
+    PIN_MAX_BYTES, and the plan is a pure scan lineage at 0."""
+    from wafer_defect_data_pipeline_spark.plans import pipeline
+
     path = str(tmp_path / "wafer.parquet")
     spark.createDataFrame(wafer_pdf).write.parquet(path)
     src = spark.read.parquet(path)
     assert _checkpoint_leaves(WaferPipeline().preprocess(src))
-    monkeypatch.setenv("WDPS_WAFER_PIN_MAX_BYTES", "0")
+    monkeypatch.setattr(pipeline, "PIN_MAX_BYTES", 0)
     assert not _checkpoint_leaves(WaferPipeline().preprocess(src))
 
 
 def test_cascade_pin_gate_policy(spark, wafer_df, sf_small, monkeypatch):
-    """cascade_pin_allowed's documented policy: scan bytes against the knob
+    """cascade_pin_allowed's documented policy: scan bytes against the gate
     (read per call); a frame with no input files counts as 0 bytes, so it
     is pinned under any positive gate and not at 0."""
+    from wafer_defect_data_pipeline_spark.plans import pipeline
     from wafer_defect_data_pipeline_spark.plans.pipeline import cascade_pin_allowed
 
     li = spark.read.parquet(f"{sf_small}/lineitem.parquet")
     assert wafer_df.inputFiles() == []
     assert cascade_pin_allowed(wafer_df) and cascade_pin_allowed(li)
-    monkeypatch.setenv("WDPS_WAFER_PIN_MAX_BYTES", "1")
+    monkeypatch.setattr(pipeline, "PIN_MAX_BYTES", 1)
     assert cascade_pin_allowed(wafer_df) and not cascade_pin_allowed(li)
-    monkeypatch.setenv("WDPS_WAFER_PIN_MAX_BYTES", "0")
+    monkeypatch.setattr(pipeline, "PIN_MAX_BYTES", 0)
     assert not cascade_pin_allowed(wafer_df)
 
 

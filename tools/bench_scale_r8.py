@@ -96,12 +96,12 @@ def main() -> None:
         print(json.dumps({"mode": mode, "sf_dir": sf_dir, "results": res}))
     elif mode == "choose":
         from wafer_defect_data_pipeline_spark.operators.dedup import (
-            choose_span_strategy,
+            probe_span_strategy,
         )
 
         corpus = _span_corpus(spark, sf_dir)
         t0 = time.perf_counter()
-        choice = choose_span_strategy(corpus, "doc_id", "text", k=20)
+        choice = probe_span_strategy(corpus, "doc_id", "text", k=20)[0]
         print(
             json.dumps(
                 {

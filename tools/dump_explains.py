@@ -12,7 +12,11 @@ query (node/exchange/scan/broadcast/codegen counts). The tool exits
 non-zero if ANY plan contains CartesianProduct — the standing 0-cartesian
 assertion, now explicit instead of grep-implicit.
 
-    python tools/dump_explains.py [sf_dir]
+    python tools/dump_explains.py [sf_dir [name ...]]
+
+Given query names, it rewrites only those queries' ``explains/<name>.txt``
+(any registered query, listed here or not) and leaves EXPLAIN.md alone:
+the before/after plan evidence for a change is then ``git diff explains/``.
 """
 
 from __future__ import annotations
@@ -134,16 +138,20 @@ _COUNTERS = {
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    named = sys.argv[2:]
     # fail BEFORE Spark startup and BEFORE touching committed evidence: a
     # bad argument (a literal `--help` once rewrote all 91 plan files as
     # "<failed to plan>") must not cost a git-restore
     if not (Path(sf_dir) / "lineitem.parquet").exists():
         raise SystemExit(
-            f"usage: python tools/dump_explains.py [sf_dir] — {sf_dir!r} has "
-            "no lineitem.parquet"
+            f"usage: python tools/dump_explains.py [sf_dir [name ...]] — "
+            f"{sf_dir!r} has no lineitem.parquet"
         )
-    spark = get_spark(app_name="dump-explains")
     qs = all_queries()
+    unknown = [n for n in named if n not in qs]
+    if unknown:
+        raise SystemExit(f"not registered: {', '.join(unknown)}")
+    spark = get_spark(app_name="dump-explains")
     exp_dir = _REPO / "explains"
     exp_dir.mkdir(exist_ok=True)
     # Generate everything in memory FIRST, touch the committed evidence dir
@@ -152,7 +160,7 @@ def main() -> None:
     plans: dict[str, str] = {}
     rows: list[tuple] = []
     cartesian_hits: list[str] = []
-    for name in list(HEADLINE) + EXTRA:
+    for name in named or list(HEADLINE) + EXTRA:
         fn = qs.get(name)
         if fn is None:
             continue
@@ -175,11 +183,23 @@ def main() -> None:
             f"{n_failed}/{len(plans)} queries failed to plan — refusing to "
             "overwrite the committed plan evidence with failure stubs"
         )
-    for old in exp_dir.glob("*.txt"):  # drop artifacts of renamed queries
-        if old.stem not in plans:
-            old.unlink()
     for name, plan in plans.items():
         (exp_dir / f"{name}.txt").write_text(plan + "\n")
+    spark.stop()
+    if named:
+        print(f"wrote {len(plans)} files under explains/: {', '.join(plans)}")
+    else:
+        for old in exp_dir.glob("*.txt"):  # drop artifacts of renamed queries
+            if old.stem not in plans:
+                old.unlink()
+        _write_summary(sf_dir, rows)
+        print(f"wrote EXPLAIN.md summary + {len(rows)} files under explains/")
+    if cartesian_hits:
+        print(f"CARTESIAN PRODUCT in plans: {cartesian_hits}")
+        sys.exit(1)
+
+
+def _write_summary(sf_dir: str, rows: list[tuple]) -> None:
     out = [
         "# EXPLAIN — plan-shape summary",
         "",
@@ -203,11 +223,6 @@ def main() -> None:
         )
     out.append("")
     (_REPO / "EXPLAIN.md").write_text("\n".join(out))
-    print(f"wrote EXPLAIN.md summary + {len(rows)} files under explains/")
-    spark.stop()
-    if cartesian_hits:
-        print(f"CARTESIAN PRODUCT in plans: {cartesian_hits}")
-        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -10,7 +10,7 @@ Job shape (19 Spark jobs per execution at 5k rows): the load check, ONE
 aggregate over the raw scan for the row and null counts, the k-means fetch
 inside ``preprocess`` — which also fills the pin of the pre-clustering
 frame (whose call already ran the cascade's shuffle stages), so the outlier
-cascade runs once (behind the ``WDPS_WAFER_PIN_MAX_BYTES`` scan-bytes gate,
+cascade runs once (behind the ``pipeline.PIN_MAX_BYTES`` scan-bytes gate,
 see ``plans.pipeline.cascade_pin_allowed``) — ONE grouped count over the cached
 result, from which the driver derives every summary line and the crosstab,
 and the sink. Up to ``clustering.LOCAL_MAX_ROWS`` analysed rows the fetch is

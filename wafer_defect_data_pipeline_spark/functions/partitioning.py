@@ -25,12 +25,20 @@ from pyspark.sql import DataFrame
 _LOCAL_SCHEME = re.compile(r"^file:/+")
 
 
-def _input_bytes(files: list[str]) -> int | None:
-    """Total size of the scan's files, driver-side listing only (no job).
+def scan_bytes(df: DataFrame) -> int | None:
+    """Total size of ``df``'s scan files, from the driver's file listing
+    (no job) — the one size probe of the byte gates.
 
-    Local paths only — any non-``file:`` scheme returns ``None``
-    ("unknown"), which callers treat as large: at object-store scale the
-    file-count gate alone already makes ``fan_out`` a no-op."""
+    The unknown-size policy: a frame with NO input files (``createDataFrame``,
+    RDD-backed, checkpointed) counts as 0 bytes, since its rows already sit
+    in driver or executor memory. A non-``file:`` path, a failed listing or
+    a failed ``getsize`` returns ``None``, which callers treat as large: at
+    object-store scale the file-count gate alone already binds. Probe the
+    scan itself: a pin upstream hides the files."""
+    try:
+        files = df.inputFiles()
+    except Exception:  # noqa: BLE001 — no listing: unknown size
+        return None
     total = 0
     for f in files:
         if ":" in f and not f.startswith("file:"):
@@ -57,26 +65,25 @@ def fan_out(df: DataFrame, min_factor: int = 1, min_input_bytes: int = 0) -> Dat
     guard a no-op anyway. Non-file sources fall back to the physical probe.
 
     ``min_input_bytes`` (r16, VERDICT r15 item 8 — the size gate): when
-    set, additionally require the scan's total file bytes to reach it
-    before repartitioning. Python-kernel expansion stages only win from
-    extra tasks once there are enough rows to amortize ~32 Python worker
+    set, additionally require :func:`scan_bytes` to reach it before
+    repartitioning. Python-kernel expansion stages only win from extra
+    tasks once there are enough rows to amortize ~32 Python worker
     spin-ups — the r15 multimodal A/B measured the ungated fan_out SLOWER
     on a sub-MB input. Bytes are a row-count proxy read from the driver's
-    file listing (no job); unknown sizes (non-local scheme) count as
-    "large" because the file-count gate is the binding one at that scale.
+    file listing (no job); a frame with no files counts as 0 bytes (gated
+    off), an unknown size counts as large.
     """
     target = df.sparkSession.sparkContext.defaultParallelism * min_factor
     try:
-        files = df.inputFiles()
-        n_src = len(files)
+        n_src = len(df.inputFiles())
     except Exception:
-        files, n_src = [], 0
+        n_src = 0
     if n_src == 0:  # non-file source (createDataFrame, RDD-backed)
         n_src = df.rdd.getNumPartitions()
     if n_src >= target:
         return df
-    if min_input_bytes and files:
-        total = _input_bytes(files)
+    if min_input_bytes:
+        total = scan_bytes(df)
         if total is not None and total < min_input_bytes:
             return df
     return df.repartition(target)

@@ -739,21 +739,6 @@ def probe_span_strategy(
     return "window", [int(r["gh"]) for r in top if r["n"] >= salt_thr]
 
 
-def choose_span_strategy(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 20,
-    sample_mod: int = 20,
-    flood_factor: float = 4.0,
-) -> str:
-    """Strategy-only view of :func:`probe_span_strategy` (back-compat for
-    tools and tests that price the shape without the salt list)."""
-    return probe_span_strategy(
-        df, id_col, text_col, k, sample_mod, flood_factor
-    )[0]
-
-
 def duplicated_spans(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -17,13 +17,12 @@ Module-level functional wrappers mirror the reference's functional API
 
 from __future__ import annotations
 
-import os
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame
 
 from ..functions.derived import add_engineered_features
-from ..functions.partitioning import _input_bytes
+from ..functions.partitioning import scan_bytes
 from ..operators.clustering import ROW_ID as _ROW_ID
 from ..operators.clustering import run_kmeans_by_step as _run_kmeans
 from ..operators.clustering import with_row_id as _with_row_id
@@ -32,25 +31,21 @@ from ..operators.outliers import remove_outliers_by_group
 from ..schema import CLUSTER_FEATURES, DEFAULT_STEPS_TO_ANALYSE, SIZE_COLUMNS
 
 
-def cascade_pin_allowed(df: DataFrame) -> bool:
-    """The byte gate of the wafer plans' cascade pin: True iff ``df``'s scan
-    files total under ``WDPS_WAFER_PIN_MAX_BYTES`` (default 4 GiB, read per
-    call). The pin writes the filtered table to executor storage; past the
-    gate, re-deriving it from the columnar scan is the cheaper side.
+#: the byte gate of :func:`cascade_pin_allowed` (4 GiB of scan files)
+PIN_MAX_BYTES = 4 << 30
 
-    The probe is the driver's file listing (no job). Policy for the cases
-    with no byte count: a frame with NO input files (``createDataFrame``,
-    RDD-backed, already checkpointed) counts as 0 bytes — its rows already
-    sit in driver or executor memory — so it is pinned under any positive
-    gate; files of unknown size (a non-``file:`` scheme) or a failed
-    listing count as large, so that frame is not pinned. Probe the scan
-    itself: a row-id fallback pin upstream hides the files.
+
+def cascade_pin_allowed(df: DataFrame) -> bool:
+    """The byte gate of the wafer plans' cascade pin: True iff ``df``'s
+    :func:`~..functions.partitioning.scan_bytes` is known and under
+    ``PIN_MAX_BYTES``. The pin writes the filtered table to executor
+    storage; past the gate, re-deriving it from the columnar scan is the
+    cheaper side. A frame with no input files counts as 0 bytes, so it is
+    pinned under any positive gate; an unknown size counts as large, so
+    that frame is not pinned.
     """
-    try:
-        total = _input_bytes(df.inputFiles())
-    except Exception:  # noqa: BLE001 — no listing: treat as large
-        return False
-    return total is not None and total < int(os.environ.get("WDPS_WAFER_PIN_MAX_BYTES", 4 << 30))
+    total = scan_bytes(df)
+    return total is not None and total < PIN_MAX_BYTES
 
 
 class WaferPipeline:

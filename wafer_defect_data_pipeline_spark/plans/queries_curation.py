@@ -1684,7 +1684,7 @@ def _pinned_count(df):
     return pin, obs.get["rows"]
 
 
-def _curation_end_to_end(spark, sf_dir, stage_walls=None):
+def _curation_end_to_end(spark, sf_dir):
     """The single query a real LLM-data user runs first: documents ->
     exact dedup -> near-dup cluster + diversity cap -> quality filter ->
     decontaminate-strip vs a held-out benchmark -> token-budget pack ->
@@ -1707,118 +1707,108 @@ def _curation_end_to_end(spark, sf_dir, stage_walls=None):
     the composition adds NO new shuffle — stages hand off by column
     contract, and the shard column is the final write partitioning.
 
-    ``stage_walls`` (optional dict, r14 verdict item 5): filled with the
-    wall seconds of each stage's materializing action (every stage's pin
-    is its counting job, so the pin wall IS the stage wall). Side-channel diagnostics only — never part of the plan or the
-    oracle; tools/bench_curation_decade.py uses it for the decade table."""
-    import time as _time
-
+    The seven stages run under :func:`session.phase` tags (``input`` ..
+    ``shard_export``); the manifest aggregate over the read-back shards
+    runs in the caller's action, outside them."""
     from pyspark.sql import Window as W
 
     from ..functions.text import quality_score
     from ..operators.dedup import exact_dedup, strip_contaminated_spans
     from ..operators.packing import pack_concat_chunks
     from ..scratch import scratch_dir
+    from ..session import phase
 
-    _t = _time.perf_counter()
+    with phase(spark, "input"):
+        d = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+        bench = d.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
 
-    def _mark(stage: str) -> None:
-        nonlocal _t
-        if stage_walls is not None:
-            stage_walls[stage] = round(_time.perf_counter() - _t, 3)
-        _t = _time.perf_counter()
-
-    d = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    bench = d.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
-
-    exact_copies = d.withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000))
-    gen1 = (
-        d.filter(F.col("doc_id") % 25 == 0)
-        .withColumn("doc_id", F.col("doc_id") + F.lit(2_000_000))
-        .withColumn("text", F.concat(F.col("text"), F.lit(" tail")))
-    )
-    gen2 = (
-        d.filter(F.col("doc_id") % 25 == 0)
-        .withColumn("doc_id", F.col("doc_id") + F.lit(3_000_000))
-        .withColumn("text", F.concat(F.col("text"), F.lit(" tail tail")))
-    )
-    leaked = (
-        d.filter(F.col("doc_id") % 97 == 0)
-        .withColumn(
-            "text",
-            F.concat(
-                F.expr("substring(text, 16)"),
-                F.lit(" q"),
-                F.col("doc_id").cast("string"),
-            ),
+        exact_copies = d.withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000))
+        gen1 = (
+            d.filter(F.col("doc_id") % 25 == 0)
+            .withColumn("doc_id", F.col("doc_id") + F.lit(2_000_000))
+            .withColumn("text", F.concat(F.col("text"), F.lit(" tail")))
         )
-        .withColumn("doc_id", F.col("doc_id") + F.lit(4_000_000))
-    )
-    corpus, n_input = _pinned_count(
-        d.unionByName(exact_copies).unionByName(gen1).unionByName(gen2).unionByName(leaked)
-    )
-    _mark("input")
+        gen2 = (
+            d.filter(F.col("doc_id") % 25 == 0)
+            .withColumn("doc_id", F.col("doc_id") + F.lit(3_000_000))
+            .withColumn("text", F.concat(F.col("text"), F.lit(" tail tail")))
+        )
+        leaked = (
+            d.filter(F.col("doc_id") % 97 == 0)
+            .withColumn(
+                "text",
+                F.concat(
+                    F.expr("substring(text, 16)"),
+                    F.lit(" q"),
+                    F.col("doc_id").cast("string"),
+                ),
+            )
+            .withColumn("doc_id", F.col("doc_id") + F.lit(4_000_000))
+        )
+        corpus, n_input = _pinned_count(
+            d.unionByName(exact_copies).unionByName(gen1).unionByName(gen2).unionByName(leaked)
+        )
 
     # stage 1: exact dedup (min-id per identical text); doc_id unique across
     # all five planted generations (+1M/+2M/+3M/+4M shifts) -> min_by form
-    deduped, n_exact = _pinned_count(exact_dedup(corpus, ["text"], "doc_id", unique_order=True))
-    _mark("exact_dedup")
+    with phase(spark, "exact_dedup"):
+        deduped, n_exact = _pinned_count(exact_dedup(corpus, ["text"], "doc_id", unique_order=True))
 
     # stage 2: near-dup cluster (LSH candidates -> exact-Jaccard verify ->
     # connected components) + diversity cap M=2 per cluster
-    pairs = lsh_verified_pairs(
-        deduped, "doc_id", "text", n_hashes=16, n_bands=4, shingle_k=3,
-        threshold=0.6,
-    )
-    labeled = cluster_assignment(deduped, "doc_id", pairs)
-    w = W.partitionBy("component").orderBy(F.desc(F.length("text")), F.asc("doc_id"))
-    capped, n_capped = _pinned_count(
-        labeled.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= 2)
-        .select("doc_id", "source", "text")
-    )
-    _mark("cluster_cap")
+    with phase(spark, "cluster_cap"):
+        pairs = lsh_verified_pairs(
+            deduped, "doc_id", "text", n_hashes=16, n_bands=4, shingle_k=3,
+            threshold=0.6,
+        )
+        labeled = cluster_assignment(deduped, "doc_id", pairs)
+        w = W.partitionBy("component").orderBy(F.desc(F.length("text")), F.asc("doc_id"))
+        capped, n_capped = _pinned_count(
+            labeled.withColumn("__rk", F.row_number().over(w))
+            .filter(F.col("__rk") <= 2)
+            .select("doc_id", "source", "text")
+        )
 
     # stage 3: quality gate (C4/Gopher-style heuristic score)
-    qkept, n_quality = _pinned_count(capped.filter(quality_score("text") >= 0.55))
-    _mark("quality_gate")
+    with phase(spark, "quality_gate"):
+        qkept, n_quality = _pinned_count(capped.filter(quality_score("text") >= 0.55))
 
     # stage 4: decontaminate — drop the held-out bench docs themselves,
     # surgically strip bench-overlapping spans from everything else, and
     # gate out docs stripped below 20 chars
-    train = qkept.filter(
-        ~((F.col("doc_id") < 1_000_000) & (F.col("doc_id") % 97 == 0))
-    )
-    stripped = strip_contaminated_spans(train, bench, "doc_id", "text", k=20, min_span=40)
-    curated, n_curated = _pinned_count(
-        stripped.join(train.select("doc_id", "source"), "doc_id")
-        .select("doc_id", "source", F.length("clean_text").alias("clean_len"))
-        .filter(F.col("clean_len") >= 20)
-    )
-    _mark("decontaminate")
+    with phase(spark, "decontaminate"):
+        train = qkept.filter(
+            ~((F.col("doc_id") < 1_000_000) & (F.col("doc_id") % 97 == 0))
+        )
+        stripped = strip_contaminated_spans(train, bench, "doc_id", "text", k=20, min_span=40)
+        curated, n_curated = _pinned_count(
+            stripped.join(train.select("doc_id", "source"), "doc_id")
+            .select("doc_id", "source", F.length("clean_text").alias("clean_len"))
+            .filter(F.col("clean_len") >= 20)
+        )
 
     # stage 5: token-budget packing on the CLEANED lengths
-    packed = pack_concat_chunks(curated, "source", "doc_id", "clean_len", seq_len=2048)
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-    )
-    staged = packed.select(
-        "doc_id", "source", "clean_len", "pack_id",
-        F.pmod(u, F.lit(16)).cast("int").alias("shard"),
-        u.alias("idhash"),
-    ).localCheckpoint(eager=False)  # runs the packing shuffles here (AQE)
-    n_packs = staged.select("source", "pack_id").distinct().count()
-    _mark("token_pack")
+    with phase(spark, "token_pack"):
+        packed = pack_concat_chunks(curated, "source", "doc_id", "clean_len", seq_len=2048)
+        u = (
+            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
+            .cast("long")
+        )
+        staged = packed.select(
+            "doc_id", "source", "clean_len", "pack_id",
+            F.pmod(u, F.lit(16)).cast("int").alias("shard"),
+            u.alias("idhash"),
+        ).localCheckpoint(eager=False)  # runs the packing shuffles here (AQE)
+        n_packs = staged.select("source", "pack_id").distinct().count()
 
     # stage 6: shard export + manifest from the files READ BACK
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     out = scratch_dir(f"curation_e2e_{sf_tag}")
-    staged.repartition("shard").write.mode("overwrite").partitionBy(
-        "shard"
-    ).parquet(out)
-    _mark("shard_export")
-    back = spark.read.parquet(out)
+    with phase(spark, "shard_export"):
+        staged.repartition("shard").write.mode("overwrite").partitionBy(
+            "shard"
+        ).parquet(out)
+        back = spark.read.parquet(out)
     return (
         back.groupBy("shard")
         .agg(

@@ -1722,6 +1722,23 @@ def _redecide_serve(corpus, queries, dec):
     ).select("query_id", "rank", "corpus_id")
 
 
+def _served_day(served, dec, day, *extra):
+    """Day ``day``'s served rows (batch ``day - 1``) with the audit columns
+    of the decision row ``dec`` they were served from, then ``extra``."""
+    return served.select(
+        F.lit(day).cast("int").alias("day"),
+        "query_id", "rank", "corpus_id",
+        F.lit(dec["branch"]).alias("branch_used"),
+        F.lit(int(dec["n_probe"])).cast("int").alias("n_probe_used"),
+        F.lit(int(dec["n_cells"])).cast("int").alias("n_cells_used"),
+        F.lit(int(dec["version"])).cast("int").alias("decision_version"),
+        F.lit(day - 1 - int(dec["decided_at_batch"])).cast("int").alias(
+            "decision_age_batches"
+        ),
+        *extra,
+    )
+
+
 def _ann_dispatch_redecide(spark, sf_dir):
     """The prebuilt dispatch's STALENESS contract (r13 verdict item 1):
     the persisted decision is re-priced against the admitted snapshot when
@@ -1737,7 +1754,10 @@ def _ann_dispatch_redecide(spark, sf_dir):
     the version/age arithmetic, and the branch each day actually serves
     (IVF probe replay on day 1, the unrolled NSW build+search on day 2) —
     a trigger or flip divergence is a hash mismatch, never a silent
-    serving-quality collapse."""
+    serving-quality collapse.
+
+    Jobs run under :func:`session.phase` tags ``staging``, ``day1`` and
+    ``day2``; the lazy tail of each day's serve runs in the caller's action."""
     from ..operators.similarity import (
         ann_dispatch_decision,
         ann_dispatch_should_redecide,
@@ -1745,12 +1765,14 @@ def _ann_dispatch_redecide(spark, sf_dir):
         persist_dispatch_decision,
     )
     from ..scratch import scratch_dir
+    from ..session import phase
 
-    snap1, batch = _staged_redecide_snapshots(spark, sf_dir)
-    # pin both snapshots: the decision machinery runs many actions (count,
-    # recall-curve brute force, distinct cells) over each
-    snap1 = snap1.localCheckpoint(eager=False)
-    n1 = snap1.count()
+    with phase(spark, "staging"):
+        snap1, batch = _staged_redecide_snapshots(spark, sf_dir)
+        # pin both snapshots: the decision machinery runs many actions
+        # (count, recall-curve brute force, distinct cells) over each
+        snap1 = snap1.localCheckpoint(eager=False)
+        n1 = snap1.count()
     base = scratch_dir(f"ann_redecide_{sf_dir.rstrip('/').rsplit('/', 1)[-1]}")
     # the staged scenario STARTS at version 1: wipe any decision versions a
     # prior same-process invocation left in the pid-keyed scratch (bench
@@ -1762,51 +1784,33 @@ def _ann_dispatch_redecide(spark, sf_dir):
 
     # day 1 (batch 0): price the dispatch, persist v1, serve from it
     # (n1 already counted above — the decision re-uses it, r16 guide §5)
-    p1, c1, b1 = ann_dispatch_decision(snap1, target_queries=50, n=n1)
-    persist_dispatch_decision(
-        spark, base, 1, b1, p1, c1, decided_at_batch=0, n_at_decision=n1
-    )
-    dec1 = load_latest_dispatch_decision(spark, base)
-    day1 = _redecide_serve(
-        snap1, snap1.filter(F.col("vec_id") % 50 == 0), dec1
-    ).select(
-        F.lit(1).cast("int").alias("day"),
-        "query_id", "rank", "corpus_id",
-        F.lit(dec1["branch"]).alias("branch_used"),
-        F.lit(int(dec1["n_probe"])).cast("int").alias("n_probe_used"),
-        F.lit(int(dec1["n_cells"])).cast("int").alias("n_cells_used"),
-        F.lit(int(dec1["version"])).cast("int").alias("decision_version"),
-        F.lit(0 - int(dec1["decided_at_batch"])).cast("int").alias(
-            "decision_age_batches"
-        ),
-    )
+    with phase(spark, "day1"):
+        p1, c1, b1 = ann_dispatch_decision(snap1, target_queries=50, n=n1)
+        persist_dispatch_decision(
+            spark, base, 1, b1, p1, c1, decided_at_batch=0, n_at_decision=n1
+        )
+        dec1 = load_latest_dispatch_decision(spark, base)
+        day1 = _served_day(
+            _redecide_serve(snap1, snap1.filter(F.col("vec_id") % 50 == 0), dec1), dec1, 1
+        )
 
     # day 2 (batch 1): admit the drift batch; the growth trigger fires and
     # the re-probe runs against the ADMITTED snapshot
-    snap2 = snap1.unionByName(batch).localCheckpoint(eager=False)
-    n2 = snap2.count()
-    if ann_dispatch_should_redecide(
-        n2, int(dec1["n_at_decision"]), 1 - int(dec1["decided_at_batch"])
-    ):
-        p2, c2, b2 = ann_dispatch_decision(snap2, target_queries=50, n=n2)
-        persist_dispatch_decision(
-            spark, base, int(dec1["version"]) + 1, b2, p2, c2,
-            decided_at_batch=1, n_at_decision=n2,
+    with phase(spark, "day2"):
+        snap2 = snap1.unionByName(batch).localCheckpoint(eager=False)
+        n2 = snap2.count()
+        if ann_dispatch_should_redecide(
+            n2, int(dec1["n_at_decision"]), 1 - int(dec1["decided_at_batch"])
+        ):
+            p2, c2, b2 = ann_dispatch_decision(snap2, target_queries=50, n=n2)
+            persist_dispatch_decision(
+                spark, base, int(dec1["version"]) + 1, b2, p2, c2,
+                decided_at_batch=1, n_at_decision=n2,
+            )
+        dec2 = load_latest_dispatch_decision(spark, base)
+        day2 = _served_day(
+            _redecide_serve(snap2, snap2.filter(F.col("vec_id") % 50 == 0), dec2), dec2, 2
         )
-    dec2 = load_latest_dispatch_decision(spark, base)
-    day2 = _redecide_serve(
-        snap2, snap2.filter(F.col("vec_id") % 50 == 0), dec2
-    ).select(
-        F.lit(2).cast("int").alias("day"),
-        "query_id", "rank", "corpus_id",
-        F.lit(dec2["branch"]).alias("branch_used"),
-        F.lit(int(dec2["n_probe"])).cast("int").alias("n_probe_used"),
-        F.lit(int(dec2["n_cells"])).cast("int").alias("n_cells_used"),
-        F.lit(int(dec2["version"])).cast("int").alias("decision_version"),
-        F.lit(1 - int(dec2["decided_at_batch"])).cast("int").alias(
-            "decision_age_batches"
-        ),
-    )
     return day1.unionByName(day2).orderBy("day", "query_id", "rank")
 
 
@@ -2004,19 +2008,8 @@ def _ann_dispatch_recall_drift(spark, sf_dir):
         spark, base, 1, b1, p1, c1, decided_at_batch=0, n_at_decision=n1
     )
     dec1 = load_latest_dispatch_decision(spark, base)
-    day1 = _redecide_serve(
-        snap1, snap1.filter(F.col("vec_id") % 50 == 0), dec1
-    ).select(
-        F.lit(1).cast("int").alias("day"),
-        "query_id", "rank", "corpus_id",
-        F.lit(dec1["branch"]).alias("branch_used"),
-        F.lit(int(dec1["n_probe"])).cast("int").alias("n_probe_used"),
-        F.lit(int(dec1["n_cells"])).cast("int").alias("n_cells_used"),
-        F.lit(int(dec1["version"])).cast("int").alias("decision_version"),
-        F.lit(0 - int(dec1["decided_at_batch"])).cast("int").alias(
-            "decision_age_batches"
-        ),
-        *nulls,
+    day1 = _served_day(
+        _redecide_serve(snap1, snap1.filter(F.col("vec_id") % 50 == 0), dec1), dec1, 1, *nulls
     )
 
     # day 2 (batch 1): vectors replaced in place; trigger evaluation runs
@@ -2048,16 +2041,8 @@ def _ann_dispatch_recall_drift(spark, sf_dir):
     served_hits = served2.join(
         truth2.select("query_id", "corpus_id"), ["query_id", "corpus_id"]
     ).count()
-    day2 = served2.select(
-        F.lit(2).cast("int").alias("day"),
-        "query_id", "rank", "corpus_id",
-        F.lit(dec2["branch"]).alias("branch_used"),
-        F.lit(int(dec2["n_probe"])).cast("int").alias("n_probe_used"),
-        F.lit(int(dec2["n_cells"])).cast("int").alias("n_cells_used"),
-        F.lit(int(dec2["version"])).cast("int").alias("decision_version"),
-        F.lit(1 - int(dec2["decided_at_batch"])).cast("int").alias(
-            "decision_age_batches"
-        ),
+    day2 = _served_day(
+        served2, dec2, 2,
         F.lit(trig_hits).cast("long").alias("trigger_hit_pairs"),
         F.lit(trig_total).cast("long").alias("trigger_total_pairs"),
         F.lit(served_hits).cast("long").alias("served_hit_pairs"),

@@ -18,11 +18,15 @@ entry point (tests, bench, driver contract) runs with identical semantics:
   every warm execution recompiled ~164 of them (0.6-1.0 s of Janino time)
   and the JIT never warmed the fresh classes. Thrash shows as a warm
   execution with a non-zero ``codegen_compiles`` delta.
+
+A query names its own phases with :func:`phase`, so a job census
+(``tools/measure.py census``) can split an execution's jobs by phase.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -34,6 +38,10 @@ DEFAULT_APP_NAME = "wafer-defect-data-pipeline-spark"
 #: ~8 KiB of metaspace per cached class. A static conf: it takes effect only
 #: in the session that starts the JVM.
 CODEGEN_CACHE_ENTRIES = 500
+
+#: the Spark local property :func:`phase` sets; every job submitted under it
+#: carries it in its ``SparkListenerJobStart`` properties
+PHASE_PROPERTY = "wdps.phase"
 
 #: the directory the package is imported from (its parent)
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -84,17 +92,41 @@ def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
     return int(count), ns / 1e6
 
 
+@contextmanager
+def phase(spark: SparkSession, name: str):
+    """Tag every job the block submits (from this thread) with ``name``.
+
+    A local property, not the job group: a caller such as perfbench's span
+    tracer owns the job group of the same jobs. The caller's value (or its
+    absence) is back in place when the block returns or raises."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty(PHASE_PROPERTY)
+    sc.setLocalProperty(PHASE_PROPERTY, name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(PHASE_PROPERTY, outer)
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
     parallelism: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine SparkSession.
+    """Build the engine SparkSession, or return the active one as it is.
+
+    An active session keeps its own confs: re-applying ``engine_conf``
+    through the builder would overwrite the runtime confs its owner chose
+    (a host at ``shuffle.partitions=8`` would read the cpu count after
+    ``cli.main``), and the static ones cannot change anyway.
 
     In local mode one JVM hosts driver+executors, so ``spark.driver.memory``
     is the only heap knob; it must be set before JVM start, hence here.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     p = parallelism or default_parallelism()
     builder = SparkSession.builder.appName(app_name)
     if master:
